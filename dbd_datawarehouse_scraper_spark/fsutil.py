@@ -1,7 +1,7 @@
 """Hadoop-FileSystem helpers for operators that manage on-disk state.
 
 The signature store (streaming/near_dedup.py) and the connected-
-components checkpoint loop (operators/graph.py) both need three
+components checkpoint loop (operators/graph.py) both need a few
 primitives that must work on whatever filesystem the path lives on —
 local for tests, HDFS/S3A on a cluster — so they go through the Hadoop
 ``FileSystem`` API via the JVM gateway rather than ``os.path`` (which
@@ -17,6 +17,7 @@ question only and never swallow real failures into a boolean.
 
 from __future__ import annotations
 
+import json
 import tempfile
 import uuid
 
@@ -87,3 +88,102 @@ def fs_touch(spark: SparkSession, path: str) -> None:
     fs, jpath = _fs(spark, path)
     fs.create(jpath, True).close()
 
+
+#: JSON value types accepted for the DDL types one-row metadata uses;
+#: a value of another JSON type reads as None, as Spark's permissive
+#: JSON read nulls it
+_JSON_TYPES = {
+    "INT": int, "BIGINT": int, "LONG": int, "DOUBLE": (int, float),
+    "STRING": str,
+}
+
+
+def _typed(v, ddl_type: str):
+    if isinstance(v, bool) or not isinstance(v, _JSON_TYPES[ddl_type.upper()]):
+        return None
+    return float(v) if ddl_type.upper() == "DOUBLE" else v
+
+
+def _schema_fields(schema: str) -> list[tuple[str, str]]:
+    return [tuple(f.split()[:2]) for f in schema.split(",")]
+
+
+def fs_write_json_row(
+    spark: SparkSession, path: str, schema: str, values: tuple
+) -> None:
+    """Write one row (``values`` in ``schema`` DDL order) as a one-row
+    JSON dataset: ``path`` becomes a directory holding one
+    ``part-00000.json`` line — the layout
+    ``createDataFrame(...).repartition(1).write.json`` produces, so
+    ``spark.read.json`` still reads it — but written from the driver
+    through the Hadoop FS handle, with no Spark job. Null fields are
+    omitted, as Spark's JSON writer omits them. The file lands in a
+    hidden sibling temp directory first and is swapped in by rename
+    (delete-then-rename: like Spark's overwrite, not atomic against a
+    crash between the two, but a torn write never reaches ``path``).
+    Raises on FS errors."""
+    row = {
+        name: v
+        for (name, _), v in zip(_schema_fields(schema), values)
+        if v is not None
+    }
+    data = (json.dumps(row, separators=(",", ":"), ensure_ascii=False) + "\n").encode()
+    fs, jpath = _fs(spark, path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    tmp = Path(jpath.getParent(), f"_tmp-{jpath.getName()}-{uuid.uuid4().hex}")
+    try:
+        out = fs.create(Path(tmp, "part-00000.json"), True)
+        try:
+            out.write(data)
+        finally:
+            out.close()
+        fs.delete(jpath, True)
+        if not fs.rename(tmp, jpath):
+            raise IOError(f"rename {tmp.toString()} -> {path} failed")
+    except BaseException:
+        fs.delete(tmp, True)
+        raise
+
+
+def fs_read_json_row(spark: SparkSession, path: str, schema: str) -> dict | None:
+    """The first row of a one-row JSON dataset at ``path``, read from
+    the driver through the Hadoop FS handle (no Spark job), as a dict
+    of ``schema``'s fields — absent or mistyped fields read None. Returns
+    None when there is no parsable row (empty files, or a malformed
+    first line), so callers keep raising their own "unreadable"
+    errors. ``path`` is a directory in Spark's layout (visible part
+    files; ``_SUCCESS`` and ``.crc`` sidecars skipped) or a plain file.
+    Raises on FS errors, a missing ``path`` included."""
+    fs, jpath = _fs(spark, path)
+    if fs.getFileStatus(jpath).isDirectory():
+        named = [
+            (st.getPath().getName(), st.getPath())
+            for st in fs.listStatus(jpath)
+            if st.isFile()
+        ]
+        files = [
+            p for name, p in sorted(named, key=lambda t: t[0])
+            if not name.startswith(("_", "."))
+        ]
+    else:
+        files = [jpath]
+    for jp in files:
+        stream = fs.open(jp)
+        try:
+            text = bytes(stream.readAllBytes()).decode("utf-8", "replace")
+        finally:
+            stream.close()
+        line = next((ln for ln in text.splitlines() if ln.strip()), None)
+        if line is None:
+            continue
+        try:
+            row = json.loads(line)
+        except ValueError:
+            return None
+        if not isinstance(row, dict):
+            return None
+        return {
+            name: _typed(row.get(name), typ)
+            for name, typ in _schema_fields(schema)
+        }
+    return None

@@ -178,12 +178,14 @@ def classifier_fit(
     ).collect()[0]
     if stats["n_bad"]:
         _refuse_bad_labels(int(stats["n_bad"]), "classifier_fit")
-    # Job 2 — per-class hash-threshold prefilter (the _class_sample /
-    # kmeans_fit discipline, thresholds from the SAME formula), a
-    # per-class row_number window replacing the two orderBy/limit jobs
-    # (same selected rows: both take the sample_per_class smallest
-    # content hashes of each class; an equal-hash tie means equal text
-    # — same _cid — which the length-normalized fit features cancel),
+    # Job 2 — per-class hash-threshold prefilter (kmeans_fit's
+    # _fit_sample_rows discipline in operators/clustering.py,
+    # thresholds from the SAME formula), a per-class row_number window
+    # replacing the two orderBy/limit jobs (same selected rows: both
+    # take the sample_per_class smallest content hashes of each class).
+    # Ties assume xxhash64 does not collide: an equal-hash tie is then
+    # equal text — same _cid — which the length-normalized fit features
+    # cancel; a true 64-bit collision could swap which tied row is kept.
     # then featurize + the bounded toPandas, all ONE linear job: no
     # intermediate persists, nothing computed twice.
     hashed = (

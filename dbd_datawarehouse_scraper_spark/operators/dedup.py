@@ -47,13 +47,6 @@ def exact_dedup(
     return df.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
 
 
-def _jaccard_arrays(a: Column, b: Column) -> Column:
-    union = F.size(F.array_union(a, b))
-    return F.when(union == 0, F.lit(0.0)).otherwise(
-        F.size(F.array_intersect(a, b)).cast("double") / union.cast("double")
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -319,15 +312,34 @@ def minhash_signatures(
         F.col(id_col).alias("_id"),
         F.explode_outer(shingles_vec(F.col(text_col), k)).alias("_s"),
     ).select("_id", F.xxhash64("_s").alias("_hs"))
-    agg = ex.groupBy("_id").agg(
-        *[
-            F.min(F.xxhash64(F.col("_hs"), F.lit(i))).alias(f"_h{i}")
-            for i in range(num_hashes)
-        ]
+    return ex.groupBy("_id").agg(_minhash_sig_agg(num_hashes))
+
+
+def _minhash_sig_agg(num_hashes: int) -> Column:
+    """The ``_sig`` aggregate over hashed shingles ``_hs``: element i is
+    ``min(xxhash64(_hs, i))``. Built as ONE SQL expression string — one
+    JVM call for the whole list instead of ~4 per permutation: the
+    128 mins plus the 32 band hashes took 0.58–0.71 s of driver time
+    per plan built as Columns and 0.04–0.06 s as strings (pyspark
+    4.1.2, 4-core Xeon VM). The array wraps the mins, so the physical
+    aggregate is the same ``num_hashes`` map-side partial mins."""
+    mins = ", ".join(f"min(xxhash64(_hs, {i}))" for i in range(num_hashes))
+    return F.expr(f"array({mins}) AS _sig")
+
+
+def lsh_band_buckets(num_hashes: int, bands: int) -> str:
+    """SQL select item exploding a ``_sig`` array into ``(_band,
+    _bucket)`` rows: bucket b is the Murmur3 ``hash`` of signature rows
+    ``[b·r, (b+1)·r)``, r = ``num_hashes // bands``. The one band
+    hashing shared by the batch LSH and the incremental band index
+    (streaming/near_dedup.py), so cross-epoch candidates collide on
+    identical buckets; a string for the same one-JVM-call reason as
+    :func:`_minhash_sig_agg`."""
+    r = num_hashes // bands
+    buckets = ", ".join(
+        f"hash(slice(_sig, {b * r + 1}, {r}))" for b in range(bands)
     )
-    return agg.select(
-        "_id", F.array(*[F.col(f"_h{i}") for i in range(num_hashes)]).alias("_sig")
-    )
+    return f"posexplode(array({buckets})) AS (_band, _bucket)"
 
 
 def minhash_lsh_pairs(
@@ -375,7 +387,29 @@ def minhash_lsh_pairs(
     shingle collisions (~n²/2⁶⁴ per doc — negligible; the round-2 form
     had the identical exposure inside its MinHash signatures). Persists
     are tracked — callers release via caching.release_caches()."""
-    rows_per_band = num_hashes // bands
+    return minhash_lsh_pairs_and_sigs(
+        docs, id_col, text_col, num_hashes, bands, k, threshold,
+        max_bucket_size,
+    )[0]
+
+
+def minhash_lsh_pairs_and_sigs(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    num_hashes: int = 64,
+    bands: int = 16,
+    k: int = 3,
+    threshold: float = 0.5,
+    max_bucket_size: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`minhash_lsh_pairs`, plus the signature relation its LSH
+    pass persisted: ``(_id, _n, _sig)`` for EVERY input document, with
+    ``_sig`` equal to :func:`minhash_signatures`' (same hash family, same
+    aggregate). Callers that need signatures of (a subset of) the
+    same documents reuse it instead of signing them a second time —
+    the incremental near-dedup stores its survivors' signatures this
+    way. The persist is tracked like the pairs' own."""
     from ..caching import tracked_persist
     from .skew import widen_partitions
 
@@ -393,11 +427,7 @@ def minhash_lsh_pairs(
     )
     sig = tracked_persist(
         ex.groupBy("_id").agg(
-            F.count("*").alias("_n"),
-            *[
-                F.min(F.xxhash64(F.col("_hs"), F.lit(i))).alias(f"_h{i}")
-                for i in range(num_hashes)
-            ],
+            F.count("*").alias("_n"), _minhash_sig_agg(num_hashes)
         )
     )
     # `_na` (the per-doc shingle count) rides the banded rows — 8
@@ -407,22 +437,8 @@ def minhash_lsh_pairs(
     # (round-10 re-profile: those two exchanges were ~40% of the
     # query's wall at sf0.1, and at scale they are two full-corpus
     # shuffles for two long columns).
-    banded = sig.select(
-        "_id",
-        F.col("_n").alias("_na"),
-        F.posexplode(
-            F.array(
-                *[
-                    F.hash(
-                        *[
-                            F.col(f"_h{i}")
-                            for i in range(b * rows_per_band, (b + 1) * rows_per_band)
-                        ]
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_band", "_bucket"),
+    banded = sig.selectExpr(
+        "_id", "_n AS _na", lsh_band_buckets(num_hashes, bands)
     )
     if max_bucket_size is not None:
         if max_bucket_size < 2:
@@ -495,7 +511,7 @@ def minhash_lsh_pairs(
         .agg(F.count("*").alias("_c"))
     )
     union = F.col("_na") + F.col("_nb") - F.col("_c")
-    return (
+    pairs = (
         inter.select(
             F.col("_id").alias("id_a"),
             F.col("_id2").alias("id_b"),
@@ -505,6 +521,7 @@ def minhash_lsh_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
+    return pairs, sig
 
 
 def _pow2_long(b: int) -> int:

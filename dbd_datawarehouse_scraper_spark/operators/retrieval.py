@@ -69,6 +69,15 @@ def bm25_search(
     plan (no extra pass): they contribute ~zero idf but would join
     against nearly every document — the inverted-index stop-word
     guard. ``None`` disables it (exact textbook BM25 over all terms).
+
+    Cache contract: the query-term relation (``q_terms``) is always a
+    tracked persist, and ``persist=True`` pins the corpus-side term
+    scores too. Neither can be released before the returned DataFrame
+    is consumed, so the function does not release them: call
+    ``caching.release_caches()`` (or ``release_since`` on a
+    ``pool_mark()`` taken before the call) after the consuming action.
+    A caller that issues many query batches without releasing
+    accumulates one cached relation per batch.
     """
     if not 0 < topk:
         raise ValueError(f"topk must be >= 1, got {topk}")

@@ -830,7 +830,7 @@ def ivf_build(
     32× at dim=64/pq_m=8). Coarser than sq8; check recall with
     :func:`ivf_recall_check` and raise ``pq_m`` (finer subspaces)
     when it matters."""
-    from ..fsutil import fs_delete, fs_exists
+    from ..fsutil import fs_delete, fs_exists, fs_write_json_row
     from .clustering import _assign_to_centers, kmeans_fit
 
     if compression not in _IVF_COMPRESSIONS:
@@ -936,20 +936,18 @@ def ivf_build(
         [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
         "_list INT, _center ARRAY<DOUBLE>",
     ).repartition(1).write.mode("overwrite").parquet(f"{index_path}/centers")
-    spark.createDataFrame(
-        [
-            (
-                IVF_FORMAT_VERSION,
-                n_lists,
-                dim,
-                seed,
-                corpus_id,
-                corpus_vec,
-                compression,
-            )
-        ],
-        _IVF_MARKER_SCHEMA,
-    ).repartition(1).write.mode("overwrite").json(f"{index_path}/format")
+    fs_write_json_row(
+        spark, f"{index_path}/format", _IVF_MARKER_SCHEMA,
+        (
+            IVF_FORMAT_VERSION,
+            n_lists,
+            dim,
+            seed,
+            corpus_id,
+            corpus_vec,
+            compression,
+        ),
+    )
 
 
 def ivf_search(
@@ -1103,7 +1101,7 @@ def ivf_append(
 
 def _ivf_marker_row(spark, index_path: str):
     """Read + validate the index marker (shared by search/append/stats)."""
-    from ..fsutil import fs_exists
+    from ..fsutil import fs_exists, fs_read_json_row
 
     marker = f"{index_path}/format"
     if not fs_exists(spark, marker):
@@ -1111,7 +1109,7 @@ def _ivf_marker_row(spark, index_path: str):
             f"no IVF index marker at {marker} — run ivf_build() first "
             "(a marker-less dir is an aborted build; rebuild it)."
         )
-    row = spark.read.schema(_IVF_MARKER_SCHEMA).json(marker).head()
+    row = fs_read_json_row(spark, marker, _IVF_MARKER_SCHEMA)
     if row is None or row["format_version"] != IVF_FORMAT_VERSION:
         raise ValueError(
             f"IVF index at {index_path} has format version "

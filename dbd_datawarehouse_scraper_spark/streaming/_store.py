@@ -13,13 +13,25 @@ stay local):
 - :func:`validate_or_init_marker` — the format-marker handshake;
 - :func:`committed_epochs_below` — the history listing with the
   reset-ahead refusal.
+
+Markers are one-row JSON datasets (a directory holding one
+``part-*.json`` line, the layout Spark's JSON writer produces and
+``spark.read.json`` reads). They are read and written from the driver
+through the Hadoop FS handle (fsutil.fs_read_json_row /
+fs_write_json_row): a handshake costs a few FS calls, not a Spark job
+per read and two per write, and every epoch of every store pays it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from ..fsutil import fs_exists, fs_list_names
+from ..fsutil import (
+    fs_exists,
+    fs_list_names,
+    fs_read_json_row,
+    fs_write_json_row,
+)
 
 
 def validate_or_init_marker(
@@ -49,7 +61,7 @@ def validate_or_init_marker(
     marker = f"{store_path}/format"
     fields = [f.split()[0] for f in schema.split(",")]
     if fs_exists(spark, marker):
-        row = spark.read.schema(schema).json(marker).head()
+        row = fs_read_json_row(spark, marker, schema)
         if row is None or row["format_version"] is None:
             raise ValueError(
                 f"{noun} marker at {marker} exists but is unreadable — "
@@ -78,9 +90,7 @@ def validate_or_init_marker(
         raise ValueError(
             f"no {noun} at {store_path} (missing format marker)"
         )
-    spark.createDataFrame([tuple(want)], schema).repartition(1).write.mode(
-        "overwrite"
-    ).json(marker)
+    fs_write_json_row(spark, marker, schema, tuple(want))
     return dict(zip(fields, want))
 
 
@@ -172,7 +182,7 @@ def validate_or_init_out_schema(
     marker = f"{out_path}/_schema"
     want = ",".join(columns)
     if fs_exists(spark, marker):
-        row = spark.read.schema(_OUT_MARKER_SCHEMA).json(marker).head()
+        row = fs_read_json_row(spark, marker, _OUT_MARKER_SCHEMA)
         if row is None or row["out_version"] is None:
             raise ValueError(
                 f"survivor-output marker at {marker} exists but is "
@@ -198,6 +208,4 @@ def validate_or_init_out_schema(
             "before continuing; mixing schemas across epochs corrupts "
             "readers."
         )
-    spark.createDataFrame(
-        [(version, want)], _OUT_MARKER_SCHEMA
-    ).repartition(1).write.mode("overwrite").json(marker)
+    fs_write_json_row(spark, marker, _OUT_MARKER_SCHEMA, (version, want))

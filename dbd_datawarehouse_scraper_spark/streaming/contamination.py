@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import fs_exists
+from ..fsutil import fs_exists, fs_read_json_row, fs_write_json_row
 from ..operators.dedup import contamination_scores, shingle_index
 
 #: Bump when the shingle hashing or index layout changes incompatibly.
@@ -80,7 +80,7 @@ def ensure_benchmark_index(
     marker = f"{store_path}/format"
     n_items, checksum = _benchmark_stats(benchmark, bench_id_col, bench_text_col)
     if fs_exists(spark, marker):
-        row = spark.read.schema(_MARKER_SCHEMA).json(marker).head()
+        row = fs_read_json_row(spark, marker, _MARKER_SCHEMA)
         if row is None or row["format_version"] is None:
             raise ValueError(
                 f"benchmark index marker at {marker} exists but is "
@@ -107,9 +107,10 @@ def ensure_benchmark_index(
     shingle_index(benchmark, bench_id_col, bench_text_col, "_bid", k).write.mode(
         "overwrite"
     ).parquet(f"{store_path}/index")
-    spark.createDataFrame(
-        [(BENCH_STORE_FORMAT_VERSION, k, n_items, checksum)], _MARKER_SCHEMA
-    ).repartition(1).write.mode("overwrite").json(marker)
+    fs_write_json_row(
+        spark, marker, _MARKER_SCHEMA,
+        (BENCH_STORE_FORMAT_VERSION, k, n_items, checksum),
+    )
 
 
 def contamination_epoch(
@@ -135,7 +136,7 @@ def contamination_epoch(
             f"no benchmark index marker at {marker} — call "
             "ensure_benchmark_index() before screening epochs."
         )
-    row = spark.read.schema(_MARKER_SCHEMA).json(marker).head()
+    row = fs_read_json_row(spark, marker, _MARKER_SCHEMA)
     if row is None or row["format_version"] != BENCH_STORE_FORMAT_VERSION:
         raise ValueError(
             f"benchmark index at {store_path} has format version "

@@ -66,7 +66,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import fs_delete, fs_exists, fs_list_names
+from ..fsutil import (
+    fs_delete,
+    fs_exists,
+    fs_list_names,
+    fs_read_json_row,
+    fs_write_json_row,
+)
 from ._store import (
     committed_epochs_below,
     epochs_with_partition_data,
@@ -376,7 +382,7 @@ def refresh_ranks(
     prev_gen = -1
     meta_path = f"{store_path}/ranks/_meta"
     if fs_exists(spark, meta_path):
-        prev = spark.read.schema(_META_SCHEMA).json(meta_path).head()
+        prev = fs_read_json_row(spark, meta_path, _META_SCHEMA)
         if prev is not None and prev["gen"] is not None:
             prev_gen = int(prev["gen"])
     gen = prev_gen + 1
@@ -399,12 +405,12 @@ def refresh_ranks(
         "damping": int(damping),
         "max_iter": int(max_iter),
     }
-    spark.createDataFrame(
-        [tuple(meta[k] for k in (
+    fs_write_json_row(
+        spark, meta_path, _META_SCHEMA,
+        tuple(meta[k] for k in (
             "gen", "as_of_epoch", "n_edges", "n_nodes", "damping", "max_iter"
-        ))],
-        _META_SCHEMA,
-    ).repartition(1).write.mode("overwrite").json(meta_path)
+        )),
+    )
     # the new marker is down: superseded generations are garbage now
     for name in fs_list_names(spark, f"{store_path}/ranks"):
         if name.startswith("gen=") and name != f"gen={gen}":
@@ -430,7 +436,7 @@ def current_ranks(spark: SparkSession, store_path: str) -> tuple[DataFrame, dict
             f"no committed rank refresh under {store_path}/ranks — run "
             "refresh_ranks first"
         )
-    row = spark.read.schema(_META_SCHEMA).json(meta_path).head()
+    row = fs_read_json_row(spark, meta_path, _META_SCHEMA)
     if row is None:
         raise ValueError(
             f"rank meta at {meta_path} exists but holds no parseable "

@@ -6,8 +6,12 @@ and each epoch must be deduplicated against everything already
 accepted, without re-scanning the historical corpus text. The classic
 shape (and this module's):
 
-- per epoch, MinHash-sign the incoming batch (codegen'd explode+agg
-  form, operators/dedup.py);
+- per epoch, MinHash-sign the incoming batch ONCE (codegen'd
+  explode+agg form, operators/dedup.py): the within-batch LSH pass
+  persists the batch's signatures, and the history probe, the verify
+  join and the store writes all reuse that relation minus the
+  in-batch losers — never a second shingle/num_hashes-min pass over
+  the same documents;
 - dedup WITHIN the batch exactly like the batch operator — banded LSH
   candidates, exact shingle-Jaccard verify, one survivor per connected
   component;
@@ -38,7 +42,9 @@ Store integrity (round-4 hardening):
   any real read error fails the epoch (foreachBatch surfaces it
   through the StreamingQuery), and the checkpoint replays it.
 - **The store carries a format marker** (``<store>/format``, a one-row
-  JSON dataset: format_version + num_hashes/bands/k). The MinHash
+  JSON dataset: format_version + num_hashes/bands/k/n_buckets, read
+  and written from the driver through the Hadoop FS handle —
+  fsutil.fs_read_json_row / fs_write_json_row, no Spark job). The MinHash
   family and band layout baked into stored signatures must match the
   code reading them — e.g. round 3 changed the hash family to
   ``xxhash64(xxhash64(s), i)``, which would make every old-format
@@ -75,7 +81,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import pool_mark, release_since, tracked_persist
 from ..fsutil import fs_exists
-from ..operators.dedup import minhash_lsh_pairs, minhash_signatures
+from ..operators.dedup import lsh_band_buckets, minhash_lsh_pairs_and_sigs
 from ..operators.graph import component_survivors
 
 #: Bump when the signature encoding (hash family, band hashing, or
@@ -164,21 +170,10 @@ def _sbucket_of(id_col: F.Column, n_buckets: int) -> F.Column:
 
 
 def _banded(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
-    """(_id, _band, _bucket) — same band hashing as the batch operator
-    (dedup.py minhash_lsh_pairs), so cross-epoch candidates collide on
-    identical buckets."""
-    rows_per_band = num_hashes // bands
-    return sig.select(
-        "_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.hash(F.slice(F.col("_sig"), b * rows_per_band + 1, rows_per_band))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("_band", "_bucket"),
-    )
+    """(_id, _band, _bucket) — THE band hashing of the batch operator
+    (dedup.py lsh_band_buckets, shared), so cross-epoch candidates
+    collide on identical buckets."""
+    return sig.selectExpr("_id", lsh_band_buckets(num_hashes, bands))
 
 
 def _estimated_jaccard(a, b, num_hashes: int):
@@ -351,7 +346,7 @@ def near_dedup_epoch(
             return False
 
         # within-batch: exact-verified pairs, component-min survivors
-        pairs = minhash_lsh_pairs(
+        pairs, batch_sig = minhash_lsh_pairs_and_sigs(
             batch, id_col=id_col, text_col=text_col,
             num_hashes=num_hashes, bands=bands, k=k, threshold=threshold,
         )
@@ -360,8 +355,16 @@ def near_dedup_epoch(
         )
         kept = batch.join(in_batch_losers, id_col, "left_anti")
 
+        # the batch is signed ONCE: the kept docs' signatures are the
+        # LSH pass's persisted ones minus the in-batch losers — equal
+        # to minhash_signatures(kept) (same hash family and aggregate;
+        # pinned by tests/test_streaming.py), without a second shingle
+        # UDF pass and num_hashes-min aggregate over the batch
         sig = tracked_persist(
-            minhash_signatures(kept, id_col, text_col, num_hashes, k)
+            batch_sig.select("_id", "_sig").join(
+                in_batch_losers.select(F.col(id_col).alias("_id")),
+                "_id", "left_anti",
+            )
         )
         new_banded = _banded(sig, num_hashes, bands)
 

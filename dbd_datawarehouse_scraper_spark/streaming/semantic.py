@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import pool_mark, release_since, tracked_persist
-from ..fsutil import fs_exists
+from ..fsutil import fs_exists, fs_read_json_row, fs_write_json_row
 
 #: Bump when the store layout, assignment kernel, or sweep semantics
 #: change incompatibly; stores refuse to mix formats. v2 = vecs epoch
@@ -97,7 +97,7 @@ def _validate_or_init_store(
 
     marker = f"{store_path}/format"
     if fs_exists(spark, marker):
-        row = spark.read.schema(_MARKER_SCHEMA).json(marker).head()
+        row = fs_read_json_row(spark, marker, _MARKER_SCHEMA)
         if row is None or row["format_version"] is None:
             raise ValueError(
                 f"semantic store marker at {marker} exists but is "
@@ -148,14 +148,14 @@ def _validate_or_init_store(
     # commit; a crash in between leaves a marker-less dir the next
     # init refuses (wipe + retry), never a half-valid store.
     save_centers(spark, centers, f"{store_path}/centers")
-    spark.createDataFrame(
-        [(
+    fs_write_json_row(
+        spark, marker, _MARKER_SCHEMA,
+        (
             STORE_FORMAT_VERSION, float(threshold), len(centers[0]),
             len(centers), int(sub_splits), id_col, vec_col,
             _centers_sha(centers),
-        )],
-        _MARKER_SCHEMA,
-    ).repartition(1).write.mode("overwrite").json(marker)
+        ),
+    )
     return centers
 
 

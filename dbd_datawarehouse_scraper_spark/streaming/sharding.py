@@ -5,8 +5,9 @@ curated documents arrive in epochs, and each epoch's shard layout must
 CONTINUE the global token offset where the previous epoch stopped —
 otherwise every epoch restarts at shard 0 and the trainer sees
 colliding shard ids. The cursor (one row: the running token offset) is
-the only cross-epoch state, persisted next to the output the same way
-the near-dup signature store keeps its band index:
+the only cross-epoch state, persisted next to the output as a one-row
+JSON dataset that the driver reads and writes through the Hadoop FS
+handle (fsutil.fs_read_json_row / fs_write_json_row — no Spark job):
 
 - epoch N reads the cursor (explicit Hadoop-FS existence check — a
   corrupted cursor FAILS the epoch, it never silently restarts at 0,
@@ -49,7 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..fsutil import fs_exists
+from ..fsutil import fs_exists, fs_read_json_row, fs_write_json_row
 from ..operators.sharding import pack_shards
 
 _CURSOR_SCHEMA = (
@@ -68,7 +69,7 @@ def _read_cursor(spark, path: str):
     """
     if not fs_exists(spark, f"{path}/cursor"):
         return None
-    row = spark.read.schema(_CURSOR_SCHEMA).json(f"{path}/cursor").head()
+    row = fs_read_json_row(spark, f"{path}/cursor", _CURSOR_SCHEMA)
     if row is None or row["next_offset"] is None or row["budget"] is None:
         # the cursor dir exists but holds no readable row (torn write,
         # manual tampering): restarting silently at offset 0 would
@@ -231,15 +232,11 @@ def pack_epoch(
         # caller's pin)
         # advance + promote the cursor (promotion = commit point); the
         # epoch key makes re-promotion on replay a no-op rewrite
-        spark.createDataFrame(
-            [(int(epoch_id), int(offset), int(offset + batch_total),
-              int(budget))],
-            _CURSOR_SCHEMA,
-        ).repartition(1).write.mode("overwrite").json(
-            f"{state_path}/cursor-epoch-{epoch_id}"
-        )
-        spark.read.schema(_CURSOR_SCHEMA).json(
-            f"{state_path}/cursor-epoch-{epoch_id}"
-        ).repartition(1).write.mode("overwrite").json(f"{state_path}/cursor")
+        cursor = (int(epoch_id), int(offset), int(offset + batch_total),
+                  int(budget))
+        for name in (f"cursor-epoch-{epoch_id}", "cursor"):
+            fs_write_json_row(
+                spark, f"{state_path}/{name}", _CURSOR_SCHEMA, cursor
+            )
     finally:
         release_since(mark)

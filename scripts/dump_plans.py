@@ -1,11 +1,13 @@
-"""Dump .explain("formatted") for headline queries to plans/r13/.
+"""Dump .explain("formatted") for headline queries to plans/<tag>/.
 
 Usage:
-    python scripts/dump_plans_r13.py before [name ...]
-    python scripts/dump_plans_r13.py after  [name ...]
+    SPARK_GRAFT_SF_DIR=<tables> python scripts/dump_plans.py <tag> before [name ...]
+    SPARK_GRAFT_SF_DIR=<tables> python scripts/dump_plans.py <tag> after  [name ...]
 
-With no names, dumps every headline query. Plans are captured at
-$SPARK_GRAFT_SF_DIR (default sf0.1) without executing the query
+``<tag>`` names the output directory (e.g. ``r13``); each query's plan
+lands in ``plans/<tag>/<name>_<before|after>.txt``. With no names,
+dumps every headline query. Plans are captured at $SPARK_GRAFT_SF_DIR
+(the parquet tables ``bench.py`` reads) without executing the query
 (planning only), so a dump run does not perturb bench numbers.
 """
 
@@ -24,14 +26,15 @@ from dbd_datawarehouse_scraper_spark.queries import QUERIES  # noqa: E402
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    assert suffix in ("before", "after"), suffix
-    names = sys.argv[2:] or [n for n in HEADLINE if n in QUERIES]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit(__doc__)
+    tag, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or [n for n in HEADLINE if n in QUERIES]
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir:
+        sys.exit("set SPARK_GRAFT_SF_DIR to the parquet tables to plan against")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        "r13",
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name=f"dump-plans-{suffix}")

@@ -1990,3 +1990,64 @@ def test_near_dedup_all_struck_epoch_sigs_dir_is_fileless_and_skipped(spark):
         assert s2 == {21}
     finally:
         shutil.rmtree(work, ignore_errors=True)
+
+
+def test_near_dedup_epoch_signs_once_equivalence(spark):
+    """near_dedup_epoch signs each batch ONCE (the LSH pass's persisted
+    signatures, minus the in-batch losers, are the ones it stores and
+    verifies with). The stored sigs must equal the batch operator's
+    minhash_signatures over the survivors, and the stored bands must
+    equal _banded of those signatures — so the reused relation cannot
+    drift from the hash family history is probed with. The epoch has
+    in-batch near-dups AND a history dup, so both strike legs run."""
+    from dbd_datawarehouse_scraper_spark.caching import release_caches
+    from dbd_datawarehouse_scraper_spark.operators.dedup import (
+        minhash_signatures,
+    )
+    from dbd_datawarehouse_scraper_spark.streaming.near_dedup import (
+        _banded,
+        near_dedup_epoch,
+    )
+
+    uniq = lambda e, i: " ".join(  # noqa: E731
+        f"w{j}e{e}d{i}" for j in range(30)
+    )
+    work = tempfile.mkdtemp(prefix="nd_sign_once_")
+    out, store = f"{work}/out", f"{work}/store"
+    docs = lambda rows: spark.createDataFrame(  # noqa: E731
+        rows, "doc_id long, text string"
+    )
+    try:
+        near_dedup_epoch(
+            spark, docs([(1, uniq(0, 1)), (2, uniq(0, 2))]), 0, out, store
+        )
+        near_dedup_epoch(
+            spark,
+            docs([
+                (10, uniq(1, 10)),
+                (11, uniq(1, 10)),            # in-batch exact dup of 10
+                (12, uniq(1, 10) + " tail"),  # in-batch near dup of 10
+                (13, uniq(0, 1)),             # dup of history doc 1
+                (14, uniq(1, 14)),
+                (15, uniq(1, 15)),
+            ]),
+            1, out, store,
+        )
+        survivors = spark.read.parquet(f"{out}/epoch=1")
+        assert {r["doc_id"] for r in survivors.collect()} == {10, 14, 15}
+
+        stored_sigs = spark.read.option("basePath", f"{store}/sigs").parquet(
+            f"{store}/sigs/epoch=1"
+        ).select("_id", "_sig")
+        want_sigs = minhash_signatures(survivors, num_hashes=128, k=3)
+        assert sorted(map(tuple, stored_sigs.collect())) == sorted(
+            map(tuple, want_sigs.collect())
+        )
+        stored_bands = spark.read.parquet(f"{store}/bands/epoch=1")
+        want_bands = _banded(want_sigs, 128, 32)
+        got = sorted(map(tuple, stored_bands.select("_id", "_band", "_bucket").collect()))
+        assert len(got) == 3 * 32
+        assert got == sorted(map(tuple, want_bands.collect()))
+        release_caches()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
