@@ -1245,7 +1245,7 @@ def main(argv: Sequence[str] | None = None) -> int:
 
     if args.stream_export:
         from .caching import release_caches
-        from .streaming import file_stream
+        from .streaming import await_or_die, file_stream
         from .streaming.export import stream_export_training_set
 
         state_root = args.stream_state or f"{args.output}__state"
@@ -1367,9 +1367,7 @@ def main(argv: Sequence[str] | None = None) -> int:
             token_counter=args.token_counter,
             **sopts,
         )
-        if not q.awaitTermination(3600):
-            q.stop()
-            raise TimeoutError("stream export did not drain within 1h")
+        await_or_die(q, 3600)
         release_caches()
         print(f"stream export complete: output={args.output} state={state_root}")
         return 0

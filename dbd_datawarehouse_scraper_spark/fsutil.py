@@ -71,6 +71,17 @@ def fs_list_names(spark: SparkSession, path: str) -> list[str]:
     return [status.getPath().getName() for status in fs.listStatus(jpath)]
 
 
+def fs_epoch_ids(spark: SparkSession, path: str) -> list[int]:
+    """Ids ``N`` of the ``epoch=N`` child dirs under ``path``, in
+    listing order (empty if the path does not exist) — the epoch
+    stores' one parse of their directory layout."""
+    return [
+        int(n.split("=", 1)[1])
+        for n in fs_list_names(spark, path)
+        if n.startswith("epoch=")
+    ]
+
+
 def fs_rename(spark: SparkSession, src: str, dst: str) -> None:
     """Rename ``src`` → ``dst`` on their filesystem. Raises if the
     filesystem reports failure (e.g. ``dst`` exists on local/HDFS).

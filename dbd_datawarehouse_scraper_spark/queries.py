@@ -1794,18 +1794,6 @@ def embedding_cosine_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _await_or_die(q, timeout_s: int) -> None:
-    """``awaitTermination(t)`` returns False on timeout WITHOUT raising;
-    proceeding would read partial or absent epoch output and fail
-    confusingly downstream. Stop the query and fail loudly instead."""
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"streaming query did not finish within {timeout_s}s "
-            f"(status: {q.status})"
-        )
-
-
 @register("stream_segment_dedup_hermetic", None)
 def stream_segment_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """[EXT] Incremental passage/boilerplate removal through the
@@ -1818,7 +1806,7 @@ def stream_segment_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFra
     import shutil
     import tempfile
 
-    from .streaming import file_stream
+    from .streaming import await_or_die, file_stream
     from .streaming.segments import stream_segment_dedup
 
     work = tempfile.mkdtemp(prefix="seg_dedup_q_")
@@ -1838,7 +1826,7 @@ def stream_segment_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFra
             file_stream(spark, src, e1.schema, max_files_per_trigger=1),
             out, store, ckpt, k=8, min_docs=4,
         )
-        _await_or_die(q, 180)
+        await_or_die(q, 180)
         e2 = docs.select(
             (F.col("doc_id") + 100000).alias("doc_id"),
             F.concat("text", F.lit(" " + boiler)).alias("text"),
@@ -1848,7 +1836,7 @@ def stream_segment_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFra
             file_stream(spark, src, e1.schema, max_files_per_trigger=1),
             out, store, ckpt, k=8, min_docs=4,
         )
-        _await_or_die(q2, 180)
+        await_or_die(q2, 180)
         cleaned = spark.read.parquet(f"{out}/epoch=1").select(
             "doc_id", "text", "n_segs", "n_dropped"
         )
@@ -1872,7 +1860,7 @@ def stream_substring_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataF
     import shutil
     import tempfile
 
-    from .streaming import file_stream
+    from .streaming import await_or_die, file_stream
     from .streaming.substrings import stream_substring_dedup
 
     work = tempfile.mkdtemp(prefix="ss_dedup_q_")
@@ -1892,7 +1880,7 @@ def stream_substring_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataF
             file_stream(spark, src, e1.schema, max_files_per_trigger=1),
             out, store, ckpt, min_len=14, min_docs=2,
         )
-        _await_or_die(q, 180)
+        await_or_die(q, 180)
         e2 = docs.select(
             (F.col("doc_id") + 100000).alias("doc_id"),
             F.concat_ws(" ", F.lit(span), "text").alias("text"),
@@ -1902,7 +1890,7 @@ def stream_substring_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataF
             file_stream(spark, src, e1.schema, max_files_per_trigger=1),
             out, store, ckpt, min_len=14, min_docs=2,
         )
-        _await_or_die(q2, 180)
+        await_or_die(q2, 180)
         struck = spark.read.parquet(f"{out}/epoch=1").select(
             "doc_id", "text", "n_tokens", "n_removed", "n_spans"
         )
@@ -1929,7 +1917,7 @@ def stream_image_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame
     import numpy as np
 
     from .multimodal.media import png_encode
-    from .streaming import file_stream
+    from .streaming import await_or_die, file_stream
     from .streaming.image_dedup import stream_image_dedup
 
     def _png(seed: int, filter_type: int = 0, shift: int = 0) -> bytes:
@@ -1957,7 +1945,7 @@ def stream_image_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame
             file_stream(spark, src, e1.schema, max_files_per_trigger=1),
             out, store, ckpt, codec="png",
         )
-        _await_or_die(q, 180)
+        await_or_die(q, 180)
         e2 = spark.createDataFrame(
             [(1000 + i, _png(i, filter_type=2)) for i in range(0, n, 2)]
             + [(2000 + i, _png(i, shift=25)) for i in range(1, n, 2)]
@@ -1969,7 +1957,7 @@ def stream_image_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame
             file_stream(spark, src, e1.schema, max_files_per_trigger=1),
             out, store, ckpt, codec="png",
         )
-        _await_or_die(q2, 180)
+        await_or_die(q2, 180)
         kept = (
             spark.read.option("basePath", out)
             .parquet(f"{out}/epoch=*")
@@ -1991,7 +1979,7 @@ def stream_near_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .streaming import file_stream, stream_near_dedup
+    from .streaming import await_or_die, file_stream, stream_near_dedup
 
     work = tempfile.mkdtemp(prefix="near_dedup_q_")
     src, out, store, ckpt = (
@@ -2015,13 +2003,13 @@ def stream_near_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             file_stream(spark, src, docs.schema, max_files_per_trigger=1),
             out, store, ckpt, threshold=0.6,
         )
-        _await_or_die(q, 180)
+        await_or_die(q, 180)
         dups.unionByName(fresh).repartition(1).write.mode("append").parquet(src)
         q2 = stream_near_dedup(
             file_stream(spark, src, docs.schema, max_files_per_trigger=1),
             out, store, ckpt, threshold=0.6,
         )
-        _await_or_die(q2, 180)
+        await_or_die(q2, 180)
         survivors = spark.read.parquet(f"{out}/epoch=*").select("doc_id", "text")
         # materialize before the temp dirs vanish
         return spark.createDataFrame(survivors.collect(), survivors.schema)
@@ -2046,7 +2034,7 @@ def stream_semantic_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFr
     import tempfile
 
     from .operators.clustering import kmeans_fit
-    from .streaming import file_stream, stream_semantic_dedup
+    from .streaming import await_or_die, file_stream, stream_semantic_dedup
 
     work = tempfile.mkdtemp(prefix="sem_dedup_q_")
     src, out, store, ckpt = (
@@ -2061,7 +2049,7 @@ def stream_semantic_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFr
             file_stream(spark, src, e1.schema, max_files_per_trigger=1),
             out, store, ckpt, centers=centers, threshold=0.9999,
         )
-        _await_or_die(q, 180)
+        await_or_die(q, 180)
         # epoch 2: a third of epoch 1 re-sent verbatim under new ids
         # (cross-epoch dups), plus genuinely fresh off-manifold rows
         dups = e1.filter(F.col("vec_id") % 3 == 0).select(
@@ -2079,7 +2067,7 @@ def stream_semantic_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFr
             file_stream(spark, src, e1.schema, max_files_per_trigger=1),
             out, store, ckpt, threshold=0.9999,
         )
-        _await_or_die(q2, 180)
+        await_or_die(q2, 180)
         survivors = spark.read.parquet(f"{out}/epoch=*").select(
             "vec_id", "cluster"
         )
@@ -2101,7 +2089,7 @@ def stream_pack_shards_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame
     import tempfile
 
     from .functions.text_analysis import token_count
-    from .streaming import file_stream, stream_pack_shards
+    from .streaming import await_or_die, file_stream, stream_pack_shards
 
     work = tempfile.mkdtemp(prefix="stream_shards_q_")
     src_dir, out, state, ckpt = (
@@ -2118,13 +2106,13 @@ def stream_pack_shards_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame
             file_stream(spark, src_dir, e1.schema, max_files_per_trigger=1),
             out, state, ckpt, budget=5000,
         )
-        _await_or_die(q, 180)
+        await_or_die(q, 180)
         e2.repartition(1).write.mode("append").parquet(src_dir)
         q2 = stream_pack_shards(
             file_stream(spark, src_dir, e1.schema, max_files_per_trigger=1),
             out, state, ckpt, budget=5000,
         )
-        _await_or_die(q2, 180)
+        await_or_die(q2, 180)
         packed = spark.read.parquet(f"{out}/epoch=*").select(
             "doc_id", "n_tokens", "shard"
         )
@@ -3158,7 +3146,7 @@ def stream_export_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from .streaming import file_stream, stream_export_training_set
+    from .streaming import await_or_die, file_stream, stream_export_training_set
 
     d = (
         t(spark, sf_dir, "documents")
@@ -3185,7 +3173,7 @@ def stream_export_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "action": "quarantine",
             },
         )
-        _await_or_die(q, 240)
+        await_or_die(q, 240)
         rows = []
         for f in sorted(glob.glob(f"{work}/out/split=*/epoch=*/shard=*/*.gz")):
             label = f.split("split=")[1].split("/")[0]

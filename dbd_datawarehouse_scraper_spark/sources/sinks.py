@@ -323,6 +323,14 @@ def fold_epoch_dirs(
     of already-folded generations. No-op below ``min_dirs`` eligible
     dirs so steady-state epochs don't pay a rewrite.
 
+    Every epoch store calls this once per epoch, unconditionally; a
+    falsy ``min_dirs`` (``None`` or ``0``) means "recover, never
+    fold". Recovery must not depend on folding: a crash mid fold-swap
+    leaves the store moved aside (``<path>.__fold_old__``), which a
+    run without recovery reads as "no history" — readmitting
+    duplicates and stranding the committed generations (round-5
+    review).
+
     Tiered (round-5 review): folding ALL eligible dirs every time
     re-reads and rewrites the ever-growing folded generation on every
     cycle — O(N²/min_dirs) total I/O over the store's life. Folded
@@ -350,16 +358,14 @@ def fold_epoch_dirs(
     dir was uncommitted and the replay rewrites it with overwrite.
     Committed generations are never exposed to that window (they move
     in one rename). Returns True iff a fold happened."""
-    from ..fsutil import fs_delete, fs_exists, fs_list_names, fs_rename, fs_touch
+    from ..fsutil import (
+        fs_delete, fs_epoch_ids, fs_exists, fs_list_names, fs_rename, fs_touch,
+    )
 
     recover_epoch_fold(spark, path)
-    if not fs_exists(spark, path):
+    if not min_dirs:
         return False
-    epochs = sorted(
-        int(n.split("=", 1)[1])
-        for n in fs_list_names(spark, path)
-        if n.startswith("epoch=")
-    )
+    epochs = sorted(fs_epoch_ids(spark, path))
     eligible = [e for e in epochs if e < below_epoch]
     marked = [
         e for e in eligible

@@ -7,6 +7,7 @@ from .windows import (  # noqa: F401
     session_counts,
     stream_dedup,
 )
+from ._store import await_or_die  # noqa: F401
 from .micro_batch import (  # noqa: F401
     file_stream,
     two_sink_foreach_batch,

@@ -1,15 +1,20 @@
 """Shared epoch-store protocol pieces for the incremental operators.
 
 Every incremental store in this package (segments, substrings,
-near-dup, semantic, contamination) follows the same integrity rules —
-format marker pinning parameters, strictly-below history reads,
+near-dup, semantic, image, link-graph, contamination, and the shard
+packer's output) follows the same integrity rules — format marker
+pinning parameters, strictly-below history reads,
 checkpoint-reset-ahead refusal, epoch-suffixed replay-idempotent
-overwrites. The rules were originally hand-replicated per module; the
-round-8 review counted three near-verbatim copies and this module is
-the single home for the two generic pieces (the marker shapes that
-carry module-specific payloads — e.g. the semantic store's centers —
-stay local):
+overwrites, one unconditional fold-or-recover call per epoch
+(sources/sinks.py fold_epoch_dirs). The rules were originally
+hand-replicated per module; this module is the single home for the
+generic pieces (marker shapes that carry module-specific payloads —
+e.g. the semantic store's centers — stay local):
 
+- :func:`run_epochs` — the one stream-writer setup; every ``stream_*``
+  wrapper keeps its start-time validation and epoch closure and
+  returns this (the ``pool_mark``/``release_since`` bracket stays in
+  each ``*_epoch`` function: the export runs several in one epoch);
 - :func:`validate_or_init_marker` — the format-marker handshake;
 - :func:`committed_epochs_below` — the history listing with the
   reset-ahead refusal.
@@ -24,14 +29,49 @@ per read and two per write, and every epoch of every store pays it.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
 
 from ..fsutil import (
+    fs_epoch_ids,
     fs_exists,
     fs_list_names,
     fs_read_json_row,
     fs_write_json_row,
 )
+
+
+def run_epochs(
+    stream_df: DataFrame,
+    epoch_fn: Callable[[DataFrame, int], object],
+    checkpoint: str,
+    available_now: bool,
+) -> StreamingQuery:
+    """Start ``stream_df`` with ``epoch_fn(batch_df, epoch_id)`` as its
+    ``foreachBatch`` under ``checkpoint`` — drained once and stopped
+    when ``available_now``, else on the default trigger. A failed
+    epoch is replayed from the checkpoint on restart, which is why
+    every epoch function writes epoch-suffixed overwrites."""
+    writer = stream_df.writeStream.foreachBatch(epoch_fn).option(
+        "checkpointLocation", checkpoint
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def await_or_die(q: StreamingQuery, timeout_s: int) -> None:
+    """``awaitTermination(t)`` returns False on timeout WITHOUT raising;
+    proceeding would read partial or absent epoch output and fail
+    confusingly downstream. Stop the query and fail loudly instead."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query did not finish within {timeout_s}s "
+            f"(status: {q.status})"
+        )
 
 
 def validate_or_init_marker(
@@ -108,13 +148,7 @@ def committed_epochs_below(
     replay is only ever of the store's max epoch). The replaying
     epoch's own directory is excluded — reading it would double-count
     the replayed batch."""
-    if not fs_exists(spark, root):
-        return []
-    all_epochs = [
-        int(n.split("=", 1)[1])
-        for n in fs_list_names(spark, root)
-        if n.startswith("epoch=")
-    ]
+    all_epochs = fs_epoch_ids(spark, root)
     ahead = [e for e in all_epochs if e > epoch_id]
     if ahead:
         raise ValueError(
@@ -199,9 +233,7 @@ def validate_or_init_out_schema(
                 "re-export) or rerun with the original columns."
             )
         return
-    if fs_exists(spark, out_path) and any(
-        n.startswith("epoch=") for n in fs_list_names(spark, out_path)
-    ):
+    if fs_epoch_ids(spark, out_path):
         raise ValueError(
             f"survivor output at {out_path} holds epoch dirs but no "
             f"_schema marker — {legacy_hint}. Wipe it (and re-export) "

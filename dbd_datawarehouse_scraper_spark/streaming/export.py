@@ -68,6 +68,7 @@ from ..functions.text_analysis import (
     quality_score,
     token_count,
 )
+from ._store import run_epochs
 from .near_dedup import near_dedup_epoch
 from .sharding import pack_epoch
 
@@ -328,25 +329,22 @@ def stream_export_training_set(
             substring_dedup_opts.get("min_len", 50),
             substring_dedup_opts.get("min_docs", 2),
         )
-    from ..functions.text_analysis import resolve_token_counter
-
     _counter = resolve_token_counter(token_counter)  # refuse at start
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         # the curated hand-off dirs are single-epoch intermediates: only
         # the CURRENT epoch can replay and re-read its own dir, so every
         # committed one below it is dead weight — prune, don't fold
-        from ..fsutil import fs_delete, fs_exists, fs_list_names
+        from ..fsutil import fs_delete, fs_epoch_ids
 
         for base in (
             f"{state_path}/curated",
             f"{state_path}/segmented",
             f"{state_path}/substruck",
         ):
-            if fs_exists(spark, base):
-                for n in fs_list_names(spark, base):
-                    if n.startswith("epoch=") and int(n.split("=", 1)[1]) < epoch_id:
-                        fs_delete(spark, f"{base}/{n}")
+            for e in fs_epoch_ids(spark, base):
+                if e < epoch_id:
+                    fs_delete(spark, f"{base}/epoch={e}")
 
         source = batch_df
         if dom is not None:
@@ -537,11 +535,11 @@ def stream_export_training_set(
                 recount=None if token_counter == "whitespace" else _counter,
             )
 
-        from ..caching import pool_mark, release_since
+        from ..caching import pool_mark, release_since, tracked_persist
 
         mark = pool_mark()
-        prepared = prepared.persist()
         try:
+            prepared = tracked_persist(prepared)
             for label in fractions:
                 subset = prepared.filter(F.col("split") == label).drop("split")
                 if pack_opts:
@@ -549,7 +547,6 @@ def stream_export_training_set(
                     # epoch prefix keeps seq ids unique across epochs.
                     # Persisted (pack_epoch consumes it more than once);
                     # release_since(mark) below reclaims it
-                    from ..caching import tracked_persist
                     from ..operators.packing import apply_pack_stage
 
                     subset = tracked_persist(
@@ -585,12 +582,6 @@ def stream_export_training_set(
                     fold_output_after=None,
                 )
         finally:
-            prepared.unpersist()
             release_since(mark)
 
-    writer = stream_docs.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_epochs(stream_docs, process, checkpoint, available_now)

@@ -44,6 +44,7 @@ from ..caching import pool_mark, release_since, tracked_persist
 from ..multimodal.image_dedup import HASH_H, HASH_W, dhash_media
 from ..operators.dedup import hamming_pairs
 from ..operators.graph import component_survivors
+from ._store import run_epochs
 
 #: Bump when the dHash construction (grid, kernel family) or store
 #: layout changes incompatibly; stores refuse to mix formats.
@@ -138,12 +139,7 @@ def stream_image_dedup(
             max_hamming=max_hamming, fold_store_after=fold_store_after,
         )
 
-    writer = stream_media.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_epochs(stream_media, process, checkpoint, available_now)
 
 
 def image_dedup_epoch(
@@ -165,18 +161,12 @@ def image_dedup_epoch(
     store; undecodable images survive with nothing stored. Returns
     True iff the epoch had rows."""
     codec = _validate_or_init_store(spark, store_path, codec, max_hamming)
-    from ..sources.sinks import fold_epoch_dirs, recover_epoch_fold
+    from ..sources.sinks import fold_epoch_dirs
 
-    # crash recovery runs UNCONDITIONALLY (the near_dedup precedent: a
-    # crash mid fold-swap with folding later disabled would read as
-    # genuine absence and silently skip dedup-against-history)
-    if fold_store_after:
-        fold_epoch_dirs(
-            spark, f"{store_path}/hashes",
-            below_epoch=epoch_id, min_dirs=fold_store_after,
-        )
-    else:
-        recover_epoch_fold(spark, f"{store_path}/hashes")
+    fold_epoch_dirs(
+        spark, f"{store_path}/hashes",
+        below_epoch=epoch_id, min_dirs=fold_store_after,
+    )
     mark = pool_mark()
     try:
         batch = tracked_persist(batch_df)

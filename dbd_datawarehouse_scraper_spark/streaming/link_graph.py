@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 
 from ..fsutil import (
     fs_delete,
+    fs_epoch_ids,
     fs_exists,
     fs_list_names,
     fs_read_json_row,
@@ -76,6 +77,7 @@ from ..fsutil import (
 from ._store import (
     committed_epochs_below,
     epochs_with_partition_data,
+    run_epochs,
     validate_or_init_marker,
 )
 
@@ -207,14 +209,13 @@ def link_graph_epoch(
 
     b = _store_n_buckets(spark, store_path, n_buckets)
     root = f"{store_path}/edges"
-    if fold_store_after is not None:
-        fold_epoch_dirs(
-            spark,
-            root,
-            epoch_id,
-            min_dirs=fold_store_after,
-            partition_cols=("bucket",),
-        )
+    fold_epoch_dirs(
+        spark,
+        root,
+        epoch_id,
+        min_dirs=fold_store_after,
+        partition_cols=("bucket",),
+    )
     history_epochs = committed_epochs_below(
         spark,
         root,
@@ -340,13 +341,10 @@ def _committed_epochs(spark: SparkSession, root: str) -> list[int]:
     raw listing by at most that one dir — but a rank refresh taken
     between the crash and the replay must not read, or advertise as
     ``as_of``, a half-written epoch (round-11 advice)."""
-    if not fs_exists(spark, root):
-        return []
     return sorted(
-        int(n.split("=", 1)[1])
-        for n in fs_list_names(spark, root)
-        if n.startswith("epoch=")
-        and fs_exists(spark, f"{root}/{n}/_SUCCESS")
+        e
+        for e in fs_epoch_ids(spark, root)
+        if fs_exists(spark, f"{root}/epoch={e}/_SUCCESS")
     )
 
 
@@ -488,9 +486,4 @@ def stream_link_graph(
             fold_store_after=fold_store_after,
         )
 
-    writer = stream_pages.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_epochs(stream_pages, process, checkpoint, available_now)

@@ -14,12 +14,12 @@ Streaming primitives:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
+
+from ._store import run_epochs
 
 
 def file_stream(
@@ -60,12 +60,7 @@ def two_sink_foreach_batch(
         accepted.write.mode("overwrite").parquet(f"{fact_path}/epoch={epoch_id}")
         rejected.write.mode("overwrite").parquet(f"{reject_path}/epoch={epoch_id}")
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_epochs(stream_df, write_batch, checkpoint, available_now)
 
 
 def resume_anti_join(

@@ -83,6 +83,7 @@ from ..caching import pool_mark, release_since, tracked_persist
 from ..fsutil import fs_exists
 from ..operators.dedup import lsh_band_buckets, minhash_lsh_pairs_and_sigs
 from ..operators.graph import component_survivors
+from ._store import run_epochs
 
 #: Bump when the signature encoding (hash family, band hashing, or
 #: store layout) changes incompatibly; stores refuse to mix formats.
@@ -145,21 +146,6 @@ def _validate_or_init_store(
     from ._store import marker_positive_int
 
     return marker_positive_int(row, "n_buckets", store_path, "signature store")
-
-
-def _validate_or_init_out(spark: SparkSession, out_path: str, columns: list) -> None:
-    """Pin the wrapper's survivor schema under ``out_path/_schema``
-    (advisor r5: a stream resumed over an out_path written by the
-    brief round-5 all-columns build would mix schemas across epoch
-    dirs with no runtime guard) — the shared ``_store`` protocol piece
-    since round 9 (the image stream needed the identical guard)."""
-    from ._store import validate_or_init_out_schema
-
-    validate_or_init_out_schema(
-        spark, out_path, columns, OUT_SCHEMA_VERSION,
-        legacy_hint="it predates output versioning (the all-columns "
-        "build)",
-    )
 
 
 def _sbucket_of(id_col: F.Column, n_buckets: int) -> F.Column:
@@ -234,15 +220,24 @@ def stream_near_dedup(
     (sources/sinks.py fold_epoch_dirs) at the top of the next epoch —
     the history probe stays a bounded-file-count scan instead of
     degrading into a thousands-of-small-files read. Only epochs below
-    the current one fold (the replay window is never touched); ``None``
-    disables folding.
+    the current one fold (the replay window is never touched); ``None`` or
+    ``0`` disables folding.
 
     ``n_buckets`` seeds a NEW store's sig bucketing only (store state,
     pinned by the marker — an existing store's count wins); see
     :func:`near_dedup_epoch` for what the bucketing buys."""
+    from ._store import validate_or_init_out_schema
+
     spark = stream_docs.sparkSession
     _validate_or_init_store(spark, store_path, num_hashes, bands, k, n_buckets)
-    _validate_or_init_out(spark, out_path, [id_col, text_col])
+    # pin the survivor schema under out_path/_schema (advisor r5: a
+    # stream resumed over an out_path written by the brief round-5
+    # all-columns build would mix schemas across epoch dirs)
+    validate_or_init_out_schema(
+        spark, out_path, [id_col, text_col], OUT_SCHEMA_VERSION,
+        legacy_hint="it predates output versioning (the all-columns "
+        "build)",
+    )
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         # the wrapper's documented output schema is (id_col, text_col):
@@ -257,12 +252,7 @@ def stream_near_dedup(
             fold_store_after=fold_store_after, n_buckets=n_buckets,
         )
 
-    writer = stream_docs.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_epochs(stream_docs, process, checkpoint, available_now)
 
 
 def near_dedup_epoch(
@@ -316,25 +306,16 @@ def near_dedup_epoch(
     b = _validate_or_init_store(
         spark, store_path, num_hashes, bands, k, n_buckets
     )
-    # crash recovery runs UNCONDITIONALLY: a crash mid fold-swap leaves
-    # the store moved aside (bands.__fold_old__), and if the next run
-    # disabled folding, the history-existence check would read genuine
-    # absence and silently skip dedup-against-history — the round-3
-    # defect-#1 class this store exists to prevent (round-5 review).
-    from ..sources.sinks import fold_epoch_dirs, recover_epoch_fold
+    from ..sources.sinks import fold_epoch_dirs
 
     for sub, pcols in (("sigs", ("sbucket",)), ("bands", ())):
-        if fold_store_after:
-            # fold runs recovery itself, first thing; the sigs fold is
-            # partition-aware so folded generations keep the bucket
-            # layout pruned reads depend on
-            fold_epoch_dirs(
-                spark, f"{store_path}/{sub}",
-                below_epoch=epoch_id, min_dirs=fold_store_after,
-                partition_cols=pcols,
-            )
-        else:
-            recover_epoch_fold(spark, f"{store_path}/{sub}")
+        # the sigs fold is partition-aware so folded generations keep
+        # the bucket layout pruned reads depend on
+        fold_epoch_dirs(
+            spark, f"{store_path}/{sub}",
+            below_epoch=epoch_id, min_dirs=fold_store_after,
+            partition_cols=pcols,
+        )
     # scoped release: this function is public and composable — a global
     # release_caches() would clobber persists/scratch dirs a CALLER
     # holds behind its own live plans (round-5 review)

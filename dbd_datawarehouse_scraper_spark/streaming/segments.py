@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import pool_mark, release_since, tracked_persist
+from ._store import run_epochs
 
 #: Bump when the segment hashing or store layout changes incompatibly.
 STORE_FORMAT_VERSION = 1
@@ -116,12 +117,7 @@ def stream_segment_dedup(
             min_docs=min_docs, fold_store_after=fold_store_after,
         )
 
-    writer = stream_docs.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_epochs(stream_docs, process, checkpoint, available_now)
 
 
 def segment_dedup_epoch(
@@ -145,22 +141,17 @@ def segment_dedup_epoch(
     the store. Epoch-suffixed overwrites keep replays idempotent.
     Releases exactly the caches it pins (pool-scoped). Returns True iff the epoch had rows."""
     _validate_or_init_store(spark, store_path, mode, k)
-    # unconditional crash recovery + scoped release — same rationale as
-    # near_dedup_epoch (round-5 review): a mid-fold crash must not read
-    # as "no history", and a composable epoch function must never
-    # release a caller's pinned state.
-    from ..sources.sinks import fold_epoch_dirs, recover_epoch_fold
+    from ..sources.sinks import fold_epoch_dirs
 
-    if fold_store_after:
-        # fold runs recovery itself, first thing; the aggregating merge
-        # keeps folded generations at one row per segment hash
-        fold_epoch_dirs(
-            spark, f"{store_path}/freq",
-            below_epoch=epoch_id, min_dirs=fold_store_after,
-            merge=_merge_freq,
-        )
-    else:
-        recover_epoch_fold(spark, f"{store_path}/freq")
+    # the aggregating merge keeps folded generations at one row per
+    # segment hash
+    fold_epoch_dirs(
+        spark, f"{store_path}/freq",
+        below_epoch=epoch_id, min_dirs=fold_store_after,
+        merge=_merge_freq,
+    )
+    # scoped release: a composable epoch function must never release a
+    # caller's pinned state (round-5 review)
     mark = pool_mark()
     try:
         batch = tracked_persist(batch_df)

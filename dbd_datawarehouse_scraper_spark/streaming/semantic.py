@@ -53,12 +53,17 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import pool_mark, release_since, tracked_persist
 from ..fsutil import fs_exists, fs_read_json_row, fs_write_json_row
+from ._store import run_epochs
 
 #: Bump when the store layout, assignment kernel, or sweep semantics
 #: change incompatibly; stores refuse to mix formats. v2 = vecs epoch
 #: dirs are cluster-partitioned (round 12); v1 stores refuse with the
 #: wipe hint.
 STORE_FORMAT_VERSION = 2
+
+#: The survivor OUT layout (``out_path/_schema``) is unchanged since v1,
+#: decoupled from the store version.
+OUT_SCHEMA_VERSION = 1
 
 _MARKER_SCHEMA = (
     "format_version INT, threshold DOUBLE, dim INT, n_centers INT, "
@@ -187,31 +192,26 @@ def semantic_dedup_epoch(
         _assign_to_centers,
         _greedy_cosine_survivors,
     )
-    from ..sources.sinks import fold_epoch_dirs, recover_epoch_fold
+    from ..sources.sinks import fold_epoch_dirs
+    from ._store import validate_or_init_out_schema
 
     centers = _validate_or_init_store(
         spark, store_path, centers, threshold, sub_splits, id_col, vec_col
     )
-    from .near_dedup import _validate_or_init_out
-
-    # crash recovery runs unconditionally (a crash mid fold-swap with
-    # folding later disabled must still be healed — near-dup r5 class)
-    if fold_store_after:
-        fold_epoch_dirs(
-            spark, f"{store_path}/vecs",
-            below_epoch=epoch_id, min_dirs=fold_store_after,
-            partition_cols=("cluster",),
-        )
-    else:
-        recover_epoch_fold(spark, f"{store_path}/vecs")
+    fold_epoch_dirs(
+        spark, f"{store_path}/vecs",
+        below_epoch=epoch_id, min_dirs=fold_store_after,
+        partition_cols=("cluster",),
+    )
 
     mark = pool_mark()
     try:
         batch = tracked_persist(batch_df)
         if batch.count() == 0:
             return False
-        _validate_or_init_out(
-            spark, out_path, list(batch_df.columns) + ["cluster"]
+        validate_or_init_out_schema(
+            spark, out_path, list(batch_df.columns) + ["cluster"],
+            OUT_SCHEMA_VERSION,
         )
 
         sub_expr = (
@@ -375,9 +375,4 @@ def stream_semantic_dedup(
             sub_splits=sub_splits, fold_store_after=fold_store_after,
         )
 
-    writer = stream_vecs.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_epochs(stream_vecs, process, checkpoint, available_now)

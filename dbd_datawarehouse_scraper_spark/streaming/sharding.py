@@ -52,6 +52,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..fsutil import fs_exists, fs_read_json_row, fs_write_json_row
 from ..operators.sharding import pack_shards
+from ._store import run_epochs
 
 _CURSOR_SCHEMA = (
     "epoch_id LONG, start_offset LONG, next_offset LONG, budget LONG"
@@ -117,12 +118,7 @@ def stream_pack_shards(
             keep_cursor_snapshots=keep_cursor_snapshots,
         )
 
-    writer = stream_docs.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_epochs(stream_docs, process, checkpoint, available_now)
 
 
 def pack_epoch(
@@ -151,14 +147,12 @@ def pack_epoch(
     columns (e.g. a shuffle-order key) to exclude from the written
     rows AFTER packing — they may serve as ``order_col``."""
     from ..caching import pool_mark, release_since
+    from ..sources.sinks import fold_epoch_dirs
 
-    if fold_output_after:
-        from ..sources.sinks import fold_epoch_dirs
-
-        fold_epoch_dirs(
-            spark, out_path,
-            below_epoch=epoch_id, min_dirs=fold_output_after,
-        )
+    fold_epoch_dirs(
+        spark, out_path,
+        below_epoch=epoch_id, min_dirs=fold_output_after,
+    )
     if keep_cursor_snapshots is not None:
         from ..fsutil import fs_delete, fs_list_names
 

@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import pool_mark, release_since, tracked_persist
+from ._store import run_epochs
 
 #: Bump when the window hashing or store layout changes incompatibly.
 STORE_FORMAT_VERSION = 1
@@ -141,12 +142,7 @@ def stream_substring_dedup(
             within_doc=within_doc, fold_store_after=fold_store_after,
         )
 
-    writer = stream_docs.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_epochs(stream_docs, process, checkpoint, available_now)
 
 
 def substring_dedup_epoch(
@@ -175,18 +171,15 @@ def substring_dedup_epoch(
 
     validate_substring_params(min_len, min_docs)
     _validate_or_init_store(spark, store_path, min_len)
-    from ..sources.sinks import fold_epoch_dirs, recover_epoch_fold
+    from ..sources.sinks import fold_epoch_dirs
 
     stats_root = f"{store_path}/winstats"
-    if fold_store_after:
-        # the aggregating merge keeps folded generations at one row per
-        # window hash
-        fold_epoch_dirs(
-            spark, stats_root, below_epoch=epoch_id,
-            min_dirs=fold_store_after, merge=_merge_stats,
-        )
-    else:
-        recover_epoch_fold(spark, stats_root)
+    # the aggregating merge keeps folded generations at one row per
+    # window hash
+    fold_epoch_dirs(
+        spark, stats_root, below_epoch=epoch_id,
+        min_dirs=fold_store_after, merge=_merge_stats,
+    )
     mark = pool_mark()
     try:
         batch = tracked_persist(batch_df)

@@ -9,6 +9,7 @@ import os
 import pytest
 
 from dbd_datawarehouse_scraper_spark.fsutil import (
+    fs_epoch_ids,
     fs_read_json_row,
     fs_write_json_row,
 )
@@ -83,3 +84,13 @@ def test_mistyped_field_reads_none_and_missing_path_raises(spark, tmp_path):
     }
     with pytest.raises(Exception):
         fs_read_json_row(spark, str(tmp_path / "absent"), SCHEMA)
+
+
+def test_epoch_ids_lists_only_epoch_dirs(spark, tmp_path):
+    """The epoch stores' one listing parse: ``epoch=N`` children only,
+    and a missing store lists as empty rather than raising."""
+    assert fs_epoch_ids(spark, str(tmp_path / "absent")) == []
+    for name in ("epoch=0", "epoch=12", "_schema", "format"):
+        os.makedirs(tmp_path / "store" / name)
+    (tmp_path / "store" / "_SUCCESS").touch()
+    assert sorted(fs_epoch_ids(spark, str(tmp_path / "store"))) == [0, 12]

@@ -358,3 +358,29 @@ def test_replay_truncates_under_dynamic_overwrite_mode(spark):
         assert got == [("s0", "d0")]
     finally:
         spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize("off", [None, 0])
+def test_crash_mid_fold_swap_recovers_with_folding_off(spark, off):
+    """A crash between the fold swap's two renames leaves the store
+    moved aside (``edges.__fold_old__``). Resuming with folding off
+    (``None`` or ``0`` — both mean "recover, never fold") must still
+    recover it: the history is read, so a re-sent edge is struck, and
+    no committed epoch is left stranded for a later fold to drop."""
+    import os
+
+    work = tempfile.mkdtemp(prefix="lg_foldcrash_") + "/store"
+    link_graph_epoch(spark, _edges(spark, [("a", "b")]), 0, work, fold_store_after=off)
+    link_graph_epoch(spark, _edges(spark, [("b", "c")]), 1, work, fold_store_after=off)
+    os.rename(f"{work}/edges", f"{work}/edges.__fold_old__")
+    s2 = link_graph_epoch(
+        spark, _edges(spark, [("a", "b"), ("c", "d")]), 2, work,
+        fold_store_after=off,
+    )
+    assert s2 == {"n_batch_edges": 2, "n_new_edges": 1}
+    got = sorted(map(tuple, stored_edges(spark, work).collect()))
+    assert got == [("a", "b"), ("b", "c"), ("c", "d")]
+    assert not os.path.exists(f"{work}/edges.__fold_old__")
+    # never folded: every committed epoch keeps its own dir
+    names = sorted(n for n in os.listdir(f"{work}/edges") if n.startswith("epoch="))
+    assert names == ["epoch=0", "epoch=1", "epoch=2"]

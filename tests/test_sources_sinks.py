@@ -805,6 +805,62 @@ def test_epoch_fold_crash_windows_recover(spark):
     shutil.rmtree(base, ignore_errors=True)
 
 
+@pytest.mark.parametrize("off", [None, 0])
+def test_fold_epoch_dirs_falsy_min_dirs_recovers_never_folds(spark, off):
+    """``min_dirs`` of ``None`` or ``0`` means "recover, never fold":
+    a store left moved aside by a crash between the swap renames is
+    restored, and its epoch dirs are not folded."""
+    from dbd_datawarehouse_scraper_spark.sources.sinks import fold_epoch_dirs
+
+    base = tempfile.mkdtemp(prefix="fold_off_")
+    store = f"{base}/store"
+    try:
+        for e in range(3):
+            spark.createDataFrame(
+                [(e * 10 + i, f"doc{e}_{i}") for i in range(3)],
+                "id long, txt string",
+            ).coalesce(1).write.parquet(f"{store}/epoch={e}")
+        before = {(r["id"], r["txt"]) for r in spark.read.parquet(store).collect()}
+        os.rename(store, f"{store}.__fold_old__")
+        assert not fold_epoch_dirs(spark, store, below_epoch=5, min_dirs=off)
+        assert not os.path.exists(f"{store}.__fold_old__")
+        names = sorted(n for n in os.listdir(store) if n.startswith("epoch="))
+        assert names == ["epoch=0", "epoch=1", "epoch=2"]
+        assert {(r["id"], r["txt"]) for r in spark.read.parquet(store).collect()} == before
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+@pytest.mark.parametrize("off", [None, 0])
+def test_pack_epoch_folding_off_still_recovers(spark, off):
+    """The shard packer's ``fold_output_after`` follows the same rule:
+    ``None`` and ``0`` never fold, and a crashed fold swap of its
+    output is still recovered on the next epoch."""
+    from dbd_datawarehouse_scraper_spark.streaming.sharding import pack_epoch
+
+    base = tempfile.mkdtemp(prefix="pack_off_")
+    out, state = f"{base}/out", f"{base}/state"
+    schema = "doc_id long, n_tokens long"
+
+    def batch(lo):
+        return spark.createDataFrame([(i, 10) for i in range(lo, lo + 5)], schema)
+
+    try:
+        for e in range(2):
+            pack_epoch(spark, batch(e * 5), e, out, state, budget=20,
+                       fold_output_after=off)
+        os.rename(out, f"{out}.__fold_old__")
+        pack_epoch(spark, batch(10), 2, out, state, budget=20,
+                   fold_output_after=off)
+        assert not os.path.exists(f"{out}.__fold_old__")
+        names = sorted(n for n in os.listdir(out) if n.startswith("epoch="))
+        assert names == ["epoch=0", "epoch=1", "epoch=2"]
+        ids = sorted(r["doc_id"] for r in spark.read.parquet(f"{out}/epoch=*").collect())
+        assert ids == list(range(15))
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_write_minimal_xlsx_wide_and_escaped_sheet(workdir):
     """Past column Z, cell refs must be bijective base-26 (AA, AB, …) —
     chr(65+ci) produced invalid refs ('[') at column 27 — and a sheet
