@@ -684,23 +684,22 @@ def hamming_pairs(
     base = hashed
     if against is None and local_max_rows:
         from ..caching import release_these, tracked_persist
-        from .graph import _LOCAL_ID_TYPES
+        from .driver_local import LOCAL_ID_TYPES, bounded_collect, local_frame
 
         # persist the filtered (id, hash) projection: the self-join's
         # two sides otherwise each re-run the upstream hash pass (a
-        # Python decode for dHash); the count gates the local path and
-        # fills the cache either way
+        # Python decode for dHash); the bounded collect gates the local
+        # path and fills the cache for the partitions it reads
         hp = tracked_persist(
             hashed.select(
                 F.col(id_col).alias(id_col), F.col(hash_col).alias(hash_col)
             ).filter(F.col(hash_col).isNotNull())
         )
-        n_rows = hp.count()
-        if (
-            n_rows <= local_max_rows
-            and dict(hp.dtypes)[id_col] in _LOCAL_ID_TYPES
-        ):
-            rows = [(r[0], r[1]) for r in hp.collect()]
+        collected = None
+        if dict(hp.dtypes)[id_col] in LOCAL_ID_TYPES:
+            collected = bounded_collect(hp, local_max_rows)
+        if collected is not None:
+            rows = [(r[0], r[1]) for r in collected]
             dtype = hp.schema[id_col].dataType
             release_these([hp])
             from pyspark.sql.types import (
@@ -709,7 +708,8 @@ def hamming_pairs(
                 StructType,
             )
 
-            return hashed.sparkSession.createDataFrame(
+            return local_frame(
+                hashed.sparkSession,
                 _hamming_pairs_local(rows, max_hamming),
                 StructType(
                     [

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..caching import release_these, tracked_persist, tracked_scratch_dir
 from ..fsutil import fs_delete, fs_list_names, scratch_base
+from .driver_local import LOCAL_ID_TYPES, bounded_collect, local_frame
 
 #: Diagnostics from the most recent connected_components call in this
 #: process: {"rounds", "max_live_round_dirs", "scratch_dir"}. The GC
@@ -69,14 +70,10 @@ last_run_stats: dict = {}
 #: against the forced-distributed path in tests/test_graph.py); at
 #: 100 TB the gate never fires and the checkpointed loop runs
 #: unchanged. Pass ``local_max_edges=0`` to force the distributed
-#: path (the distributed-mechanics tests do).
+#: path (the distributed-mechanics tests do). The gate and the result
+#: frame are operators/driver_local.py's ``bounded_collect`` and
+#: ``local_frame``.
 LOCAL_MAX_EDGES = 65536
-
-#: Id types the local path accepts: Python's ordering for these agrees
-#: exactly with Spark's ``F.min``/``F.least`` (codepoint order for
-#: strings, numeric for integrals). Fractional/decimal ids keep the
-#: distributed path rather than risk a float-compare divergence.
-_LOCAL_ID_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
 
 
 def _union_find_components(edge_list: list) -> dict:
@@ -217,27 +214,29 @@ def connected_components(
         ).distinct()
     )
 
-    # Driver-local fast path (see LOCAL_MAX_EDGES): the count below
-    # materializes the persist — work the distributed path's round-0
-    # checkpoint would have paid anyway — and the collected relation is
-    # bounded, so this is the bounded-driver-fit pattern, not a
-    # corpus collect.
+    # Driver-local fast path (see LOCAL_MAX_EDGES): the bounded collect
+    # fills the edge persist for the partitions it reads — the rest the
+    # distributed path's round-0 checkpoint computes anyway — and the
+    # collected relation is bounded, so this is the bounded-driver-fit
+    # pattern, not a corpus collect.
     id_type = dict(pairs.dtypes).get(id_a, "")
-    if local_max_edges and id_type in _LOCAL_ID_TYPES:
-        edge_list = None
-        if edges.count() <= local_max_edges:
-            edge_list = [(r["_src"], r["_dst"]) for r in edges.collect()]
-            if any(a is None or b is None for a, b in edge_list):
-                # NULL ids are not Python-orderable — keep the
-                # distributed path's NULL semantics verbatim
-                edge_list = None
+    if local_max_edges and id_type in LOCAL_ID_TYPES:
+        rows = bounded_collect(edges, local_max_edges)
+        edge_list = None if rows is None else [(r[0], r[1]) for r in rows]
+        if edge_list is not None and any(
+            a is None or b is None for a, b in edge_list
+        ):
+            # NULL ids are not Python-orderable — keep the distributed
+            # path's NULL semantics verbatim
+            edge_list = None
         if edge_list is not None:
             from pyspark.sql.types import StructField, StructType
 
             labels_map = _union_find_components(edge_list)
             release_these([edges])
             dtype = edges.schema["_src"].dataType
-            out = spark.createDataFrame(
+            out = local_frame(
+                spark,
                 list(labels_map.items()),
                 StructType(
                     [
@@ -610,18 +609,18 @@ def pagerank(
 
     # Driver-local fast path (see LOCAL_MAX_EDGES): bit-equal integer
     # recurrence on the collected, deduplicated, bounded edge relation.
-    # The count materializes the persist — work the distributed path's
-    # round-0 checkpoint would have paid anyway.
+    # The node count above already materialized the edge persist.
     id_type = dict(e.dtypes)["_src"]
-    if local_max_edges and id_type in _LOCAL_ID_TYPES:
-        edge_list = None
-        if e.count() <= local_max_edges:
-            edge_list = [(r["_src"], r["_dst"]) for r in e.collect()]
-            if any(a is None or b is None for a, b in edge_list):
-                # NULL ids are not Python-orderable/hashable-consistent
-                # with the distributed join semantics — keep those
-                # verbatim on the distributed path
-                edge_list = None
+    if local_max_edges and id_type in LOCAL_ID_TYPES:
+        rows = bounded_collect(e, local_max_edges)
+        edge_list = None if rows is None else [(r[0], r[1]) for r in rows]
+        if edge_list is not None and any(
+            a is None or b is None for a, b in edge_list
+        ):
+            # NULL ids are not Python-orderable/hashable-consistent
+            # with the distributed join semantics — keep those
+            # verbatim on the distributed path
+            edge_list = None
         if edge_list is not None:
             if seeds is not None:
                 seed_col = seeds.columns[0]
@@ -656,7 +655,8 @@ def pagerank(
                 StructType,
             )
 
-            out = spark.createDataFrame(
+            out = local_frame(
+                spark,
                 [(v, q / float(SCALE), q) for v, q in rank_map.items()],
                 StructType(
                     [

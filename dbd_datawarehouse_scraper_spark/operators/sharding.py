@@ -44,7 +44,8 @@ def pack_shards(
     order_col: str = "doc_id",
     shard_col: str = "shard",
     num_partitions: int | None = None,
-    start_offset: int = 0,
+    start_offset: int | dict = 0,
+    group_col: str | None = None,
 ) -> DataFrame:
     """Assign every document a shard id under a token ``budget``.
 
@@ -55,6 +56,19 @@ def pack_shards(
     (streaming/sharding.py) passes the cursor from previous epochs so
     shard ids continue instead of restarting at 0. Returns the input
     columns plus ``shard_col`` (long).
+
+    ``group_col`` packs several independent shard streams in ONE pass
+    (the incremental exporter's splits): every group gets the shards
+    it would get alone, and ``start_offset`` is then a dict
+    ``{group value: offset}`` (missing groups start at 0). The range
+    exchange sorts on (group, order); the local-prefix window is
+    partitioned by (``_pid``, group), because one range partition can
+    hold the tail of one group and the head of the next; the offsets
+    window restarts per group; each group's start offset is a literal
+    in the plan. The offsets stay IN the plan, next to the prefixes
+    they must match: computed on the driver, they would be stale as
+    soon as a re-built plan re-samples the range boundaries (see
+    below), while an in-plan offsets table shifts with them.
 
     Pins ONE tracked persist (the ranged, prefix-summed relation —
     both the totals aggregate and the final join consume it; see the
@@ -80,11 +94,12 @@ def pack_shards(
     spark = docs.sparkSession
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
 
-    ranged = docs.repartitionByRange(n_parts, F.col(order_col)).withColumn(
-        "_pid", F.spark_partition_id()
-    )
+    keys = [] if group_col is None else [group_col]
+    ranged = docs.repartitionByRange(
+        n_parts, *[F.col(c) for c in keys + [order_col]]
+    ).withColumn("_pid", F.spark_partition_id())
     w_local = (
-        Window.partitionBy("_pid")
+        Window.partitionBy("_pid", *keys)
         .orderBy(order_col)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
@@ -102,13 +117,31 @@ def pack_shards(
         )
     )
 
-    # one row per range partition; the window below runs over ~n_parts
-    # rows, so "unbounded" here is bounded by the partition count
-    totals = local.groupBy("_pid").agg(F.sum(token_col).alias("_ptotal"))
-    w_parts = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
+    # one row per (range partition, group); the window below runs over
+    # ~n_parts rows per group, so "unbounded" here is bounded by the
+    # partition count
+    totals = local.groupBy("_pid", *keys).agg(F.sum(token_col).alias("_ptotal"))
+    w_parts = (
+        Window.partitionBy(*keys)
+        .orderBy("_pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
     offsets = totals.withColumn(
         "_offset", F.coalesce(F.sum("_ptotal").over(w_parts), F.lit(0))
-    ).select("_pid", "_offset")
+    ).select("_pid", *keys, "_offset")
+    if group_col is None:
+        start = F.lit(start_offset).cast("long")
+    else:
+        start = F.lit(0).cast("long")
+        if start_offset:
+            starts = F.create_map(
+                *[
+                    c
+                    for g, off in start_offset.items()
+                    for c in (F.lit(g), F.lit(off).cast("long"))
+                ]
+            )
+            start = F.coalesce(starts[F.col(group_col)], start)
 
     # 64-bit integer division (SQL `div`), NOT floor(double /): every
     # operand is a long, and past ~2^53 cumulative tokens the double
@@ -117,16 +150,12 @@ def pack_shards(
     # of 500 tokens, so the integer path is a scale requirement, not
     # pedantry.
     out = (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(
-            "_tot_off",
-            F.lit(start_offset).cast("long")
-            + F.col("_offset")
-            + F.col("_local_prefix"),
-        )
+        local.join(F.broadcast(offsets), ["_pid", *keys])
+        .withColumn("_tot_off", start + F.col("_offset") + F.col("_local_prefix"))
         .withColumn(shard_col, F.expr(f"_tot_off div {int(budget)}L"))
     )
-    return out.drop("_pid", "_local_prefix", "_offset", "_tot_off")
+    # the join puts its keys first; restore the input column order
+    return out.select(*docs.columns, shard_col)
 
 
 def shuffle_order_key(id_col: str, salt: str):

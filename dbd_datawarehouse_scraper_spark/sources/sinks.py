@@ -286,6 +286,19 @@ def recover_epoch_fold(spark, path: str) -> bool:
     return repaired
 
 
+def check_fold_threshold(name: str, value: int | None) -> None:
+    """Refuse a negative fold threshold. ``None`` and ``0`` mean
+    "recover, never fold" and a positive count folds (see
+    :func:`fold_epoch_dirs`); a negative one has no meaning. Store
+    wrappers call this at stream start, so a bad value raises there
+    instead of as an async ``StreamingQueryException`` mid-stream."""
+    if value is not None and value < 0:
+        raise ValueError(
+            f"{name} must be None, 0 (never fold) or a positive epoch "
+            f"count, got {value}"
+        )
+
+
 def fold_epoch_dirs(
     spark,
     path: str,
@@ -325,11 +338,11 @@ def fold_epoch_dirs(
 
     Every epoch store calls this once per epoch, unconditionally; a
     falsy ``min_dirs`` (``None`` or ``0``) means "recover, never
-    fold". Recovery must not depend on folding: a crash mid fold-swap
-    leaves the store moved aside (``<path>.__fold_old__``), which a
-    run without recovery reads as "no history" — readmitting
-    duplicates and stranding the committed generations (round-5
-    review).
+    fold"; a negative one raises before anything is written. Recovery
+    must not depend on folding: a crash mid fold-swap leaves the store
+    moved aside (``<path>.__fold_old__``), which a run without
+    recovery reads as "no history" — readmitting duplicates and
+    stranding the committed generations (round-5 review).
 
     Tiered (round-5 review): folding ALL eligible dirs every time
     re-reads and rewrites the ever-growing folded generation on every
@@ -362,6 +375,7 @@ def fold_epoch_dirs(
         fs_delete, fs_epoch_ids, fs_exists, fs_list_names, fs_rename, fs_touch,
     )
 
+    check_fold_threshold("min_dirs", min_dirs)
     recover_epoch_fold(spark, path)
     if not min_dirs:
         return False

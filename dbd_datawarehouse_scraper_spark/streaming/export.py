@@ -20,7 +20,8 @@ shards while ingestion is still running. Composition per epoch:
       → content-hash split + PII redact   (stateless, content-keyed —
                                            identical assignment to the
                                            batch exporter's)
-      → pack_epoch per split              (per-split cursor under
+      → pack_epoch, all splits in one     (one grouped pack_shards pass;
+        grouped pass                       per-split cursor under
                                            <state>/pack/split=<label>;
                                            shards continue across epochs)
       → gzip JSONL                        (out/split=<label>/epoch=N/
@@ -540,47 +541,55 @@ def stream_export_training_set(
         mark = pool_mark()
         try:
             prepared = tracked_persist(prepared)
-            for label in fractions:
-                subset = prepared.filter(F.col("split") == label).drop("split")
-                if pack_opts:
-                    # the SAME stage as the batch plan, per split; the
-                    # epoch prefix keeps seq ids unique across epochs.
-                    # Persisted (pack_epoch consumes it more than once);
-                    # release_since(mark) below reclaims it
-                    from ..operators.packing import apply_pack_stage
+            if pack_opts:
+                # the SAME stage as the batch plan, per split (a
+                # sequence never mixes splits); the epoch prefix keeps
+                # seq ids unique across epochs. Persisted (the shard
+                # pass consumes it more than once); release_since(mark)
+                # below reclaims it
+                from functools import reduce
 
-                    subset = tracked_persist(
-                        apply_pack_stage(
-                            subset, id_col, text_col, pack_opts,
-                            id_prefix=f"{epoch_id}#",
-                        )
-                    )
-                order_col = id_col
-                if shuffle_salt is not None:
-                    from ..operators.sharding import shuffle_order_key
+                from ..operators.packing import apply_pack_stage
 
-                    # THE shared key — same salt, same layout as batch
-                    order_col = "_shuffle_key"
-                    subset = subset.withColumn(
-                        order_col, shuffle_order_key(id_col, shuffle_salt)
-                    )
-                pack_epoch(
-                    spark,
-                    subset,
-                    epoch_id,
-                    out_path=f"{out_path}/split={label}",
-                    state_path=f"{state_path}/pack/split={label}",
-                    token_col="n_tokens",
-                    budget=shard_token_budget,
-                    order_col=order_col,
-                    drop_cols=(order_col,) if order_col != id_col else (),
-                    fmt="jsonl",
-                    # no folding on the JSONL output: epochs here are
-                    # trainer-consumed shards (read once, sequentially),
-                    # not a history-probe path, and fold's rewrite reads
-                    # parquet. The signature store underneath still folds.
-                    fold_output_after=None,
+                sequences = [
+                    apply_pack_stage(
+                        prepared.filter(F.col("split") == label).drop("split"),
+                        id_col, text_col, pack_opts, id_prefix=f"{epoch_id}#",
+                    ).withColumn("split", F.lit(label))
+                    for label in fractions
+                ]
+                prepared = tracked_persist(
+                    reduce(DataFrame.unionByName, sequences)
                 )
+            order_col = id_col
+            if shuffle_salt is not None:
+                from ..operators.sharding import shuffle_order_key
+
+                # THE shared key — same salt, same layout as batch
+                order_col = "_shuffle_key"
+                prepared = prepared.withColumn(
+                    order_col, shuffle_order_key(id_col, shuffle_salt)
+                )
+            # one grouped pass packs every split's shard stream
+            pack_epoch(
+                spark,
+                prepared,
+                epoch_id,
+                out_path=out_path,
+                state_path=f"{state_path}/pack",
+                token_col="n_tokens",
+                budget=shard_token_budget,
+                order_col=order_col,
+                drop_cols=(order_col,) if order_col != id_col else (),
+                fmt="jsonl",
+                # no folding on the JSONL output: epochs here are
+                # trainer-consumed shards (read once, sequentially),
+                # not a history-probe path, and fold's rewrite reads
+                # parquet. The signature store underneath still folds.
+                fold_output_after=None,
+                split_col="split",
+                splits=tuple(fractions),
+            )
         finally:
             release_since(mark)
 

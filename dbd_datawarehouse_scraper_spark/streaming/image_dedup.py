@@ -44,6 +44,7 @@ from ..caching import pool_mark, release_since, tracked_persist
 from ..multimodal.image_dedup import HASH_H, HASH_W, dhash_media
 from ..operators.dedup import hamming_pairs
 from ..operators.graph import component_survivors
+from ..sources.sinks import check_fold_threshold
 from ._store import run_epochs
 
 #: Bump when the dHash construction (grid, kernel family) or store
@@ -125,6 +126,7 @@ def stream_image_dedup(
     generations like every other epoch store."""
     from ._store import validate_or_init_out_schema
 
+    check_fold_threshold("fold_store_after", fold_store_after)
     spark = stream_media.sparkSession
     _validate_or_init_store(spark, store_path, codec, max_hamming)
     validate_or_init_out_schema(

@@ -74,6 +74,7 @@ from ..fsutil import (
     fs_read_json_row,
     fs_write_json_row,
 )
+from ..sources.sinks import check_fold_threshold
 from ._store import (
     committed_epochs_below,
     epochs_with_partition_data,
@@ -474,6 +475,7 @@ def stream_link_graph(
     refresh stays a separate batch call (:func:`refresh_ranks`) on
     whatever cadence the pipeline wants. ``n_buckets`` seeds a NEW
     store only; an existing store's marker wins."""
+    check_fold_threshold("fold_store_after", fold_store_after)
     spark = stream_pages.sparkSession
     _store_n_buckets(spark, store_path, n_buckets)
 

@@ -83,6 +83,7 @@ from ..caching import pool_mark, release_since, tracked_persist
 from ..fsutil import fs_exists
 from ..operators.dedup import lsh_band_buckets, minhash_lsh_pairs_and_sigs
 from ..operators.graph import component_survivors
+from ..sources.sinks import check_fold_threshold
 from ._store import run_epochs
 
 #: Bump when the signature encoding (hash family, band hashing, or
@@ -228,6 +229,7 @@ def stream_near_dedup(
     :func:`near_dedup_epoch` for what the bucketing buys."""
     from ._store import validate_or_init_out_schema
 
+    check_fold_threshold("fold_store_after", fold_store_after)
     spark = stream_docs.sparkSession
     _validate_or_init_store(spark, store_path, num_hashes, bands, k, n_buckets)
     # pin the survivor schema under out_path/_schema (advisor r5: a

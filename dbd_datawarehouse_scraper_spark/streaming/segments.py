@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import pool_mark, release_since, tracked_persist
+from ..sources.sinks import check_fold_threshold
 from ._store import run_epochs
 
 #: Bump when the segment hashing or store layout changes incompatibly.
@@ -107,6 +108,7 @@ def stream_segment_dedup(
     in ``out_path/epoch=N`` (all input columns, ``text_col`` rewritten,
     plus ``n_segs``/``n_dropped``); the frequency store grows under
     ``store_path/freq/epoch=N``. Returns the StreamingQuery."""
+    check_fold_threshold("fold_store_after", fold_store_after)
     spark = stream_docs.sparkSession
     _validate_or_init_store(spark, store_path, mode, k)
 

@@ -53,6 +53,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import pool_mark, release_since, tracked_persist
 from ..fsutil import fs_exists, fs_read_json_row, fs_write_json_row
+from ..sources.sinks import check_fold_threshold
 from ._store import run_epochs
 
 #: Bump when the store layout, assignment kernel, or sweep semantics
@@ -362,6 +363,7 @@ def stream_semantic_dedup(
     monotone over arrival (append-only ingestion) the accumulated
     survivor set equals batch ``semantic_dedup`` over the union of all
     epochs with the same centers (prefix-consistency, test-pinned)."""
+    check_fold_threshold("fold_store_after", fold_store_after)
     spark = stream_vecs.sparkSession
     _validate_or_init_store(
         spark, store_path, centers, threshold, sub_splits, id_col, vec_col

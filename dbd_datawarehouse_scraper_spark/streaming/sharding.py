@@ -39,6 +39,20 @@ A cursor whose recorded epoch is AHEAD of the replayed epoch by more
 than the replay window (``cursor.epoch_id > epoch_id``) means history
 was lost; that fails loudly rather than guessing an offset.
 
+Grouped packing (``pack_epoch(split_col=...)``, the incremental
+exporter's train/val/... splits): each split is its own shard stream
+with its own output dir and cursor, but one epoch packs them all in ONE
+grouped ``pack_shards`` pass — one range exchange on (split, order
+key), one offsets table that restarts per split, and each split's
+cursor start as a literal in the plan. The offsets are not computed on
+the driver: a plan re-built after ``release_caches()`` re-samples the
+range boundaries, and only offsets computed in the same plan as the
+prefixes follow them (see ``pack_shards``). All splits' token totals
+come from one aggregate over the packed relation, and the cursors are
+promoted only after every split's output is written; each split's
+cursor keeps its own epoch key, so a crash after promoting some
+splits' cursors but not others replays each split correctly.
+
 A batch run of pack_shards over the concatenation of all epochs (in
 epoch, then order-column order) produces the same shard for every
 document — pinned by tests/test_streaming.py.
@@ -50,8 +64,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..fsutil import fs_exists, fs_read_json_row, fs_write_json_row
+from ..caching import pool_mark, release_since, tracked_persist
+from ..fsutil import (
+    fs_delete,
+    fs_exists,
+    fs_list_names,
+    fs_read_json_row,
+    fs_write_json_row,
+)
 from ..operators.sharding import pack_shards
+from ..sources.sinks import check_fold_threshold, fold_epoch_dirs, jsonl_sink
 from ._store import run_epochs
 
 _CURSOR_SCHEMA = (
@@ -108,6 +130,7 @@ def stream_pack_shards(
     folding is consumer-invisible), and cursor snapshots older than the
     ``keep_cursor_snapshots`` most recent are pruned; both touch only
     epochs below the current one, so the replay window is preserved."""
+    check_fold_threshold("fold_output_after", fold_output_after)
     spark = stream_docs.sparkSession
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
@@ -119,6 +142,44 @@ def stream_pack_shards(
         )
 
     return run_epochs(stream_docs, process, checkpoint, available_now)
+
+
+def _start_offset(spark, state_path: str, epoch_id: int, budget: int) -> int:
+    """The token offset epoch ``epoch_id`` packs from, per the cursor
+    under ``state_path`` (0 for a fresh packer); see the module
+    docstring for the replay rules."""
+    state = _read_cursor(spark, state_path)
+    if state is None:
+        return 0
+    if state["budget"] != budget:
+        raise ValueError(
+            f"shard cursor at {state_path} was written with "
+            f"budget={state['budget']}, this run uses {budget}; "
+            "shards packed under two budgets interleave — wipe "
+            "the output and cursor or rerun with the stored "
+            "budget."
+        )
+    if state["epoch_id"] is not None and state["epoch_id"] == epoch_id:
+        # foreachBatch is at-least-once: this epoch already ran
+        # to completion (its cursor was promoted) but Spark's
+        # commit log missed the commit, so it is replaying.
+        # Repack from the epoch's ORIGINAL start offset — using
+        # the promoted next_offset would shift this epoch's
+        # shard ids and double-advance every later epoch.
+        return state["start_offset"]
+    if state["epoch_id"] is not None and state["epoch_id"] > epoch_id:
+        raise ValueError(
+            f"shard cursor at {state_path} records epoch "
+            f"{state['epoch_id']} but epoch {epoch_id} is "
+            "replaying — either the checkpoint was reset "
+            "against an existing cursor (which would re-pack "
+            "already-packed documents) or more than the "
+            "one-epoch replay window was lost; restore the "
+            f"matching cursor-epoch-{max(epoch_id - 1, 0)} "
+            "snapshot to cursor, or wipe cursor AND output to "
+            "restart packing from 0."
+        )
+    return state["next_offset"]
 
 
 def pack_epoch(
@@ -135,102 +196,98 @@ def pack_epoch(
     keep_cursor_snapshots: int = 4,
     fmt: str = "parquet",
     drop_cols: tuple = (),
+    split_col: str | None = None,
+    splits: tuple = (),
 ) -> None:
     """One epoch of the incremental packer, as a plain function so
-    composed incremental pipelines (streaming/export.py) can run it —
-    once per split — inside their own ``foreachBatch``. Same cursor,
-    replay, folding, and promotion-last semantics as the stream
-    wrapper. ``fmt="jsonl"`` writes gzip JSONL partitioned by the shard
-    column (``epoch=N/shard=<n>/``, the trainer-facing layout) instead
-    of plain parquet; both are epoch-suffixed overwrites, so replay
+    composed incremental pipelines (streaming/export.py) can run it
+    inside their own ``foreachBatch``. Same cursor, replay, folding,
+    and promotion-last semantics as the stream wrapper. ``fmt="jsonl"``
+    writes gzip JSONL partitioned by the shard column
+    (``epoch=N/shard=<n>/``, the trainer-facing layout) instead of
+    plain parquet; both are epoch-suffixed overwrites, so replay
     idempotence is format-independent. ``drop_cols`` names bookkeeping
     columns (e.g. a shuffle-order key) to exclude from the written
-    rows AFTER packing — they may serve as ``order_col``."""
-    from ..caching import pool_mark, release_since
-    from ..sources.sinks import fold_epoch_dirs
+    rows AFTER packing — they may serve as ``order_col``.
 
-    fold_epoch_dirs(
-        spark, out_path,
-        below_epoch=epoch_id, min_dirs=fold_output_after,
-    )
-    if keep_cursor_snapshots is not None:
-        from ..fsutil import fs_delete, fs_list_names
-
-        snaps = sorted(
-            int(n.rsplit("-", 1)[1])
-            for n in fs_list_names(spark, state_path)
-            if n.startswith("cursor-epoch-")
+    ``split_col`` packs one independent shard stream per label in
+    ``splits`` (the exporter's train/val/... splits) in ONE grouped
+    ``pack_shards`` pass: label ``L`` has its own output
+    ``out_path/<split_col>=L/epoch=N`` and its own cursor under
+    ``state_path/<split_col>=L``, exactly as if packed alone, and the
+    split column itself is not written. A label with no rows this
+    epoch still gets its (empty) epoch dir and a cursor advanced by 0.
+    All labels' token totals come from one aggregate over the packed
+    relation."""
+    if split_col is None:
+        streams = {None: (out_path, state_path)}
+    else:
+        streams = {
+            label: (
+                f"{out_path}/{split_col}={label}",
+                f"{state_path}/{split_col}={label}",
+            )
+            for label in splits
+        }
+    for out, state in streams.values():
+        fold_epoch_dirs(
+            spark, out, below_epoch=epoch_id, min_dirs=fold_output_after,
         )
-        for e in snaps[:-keep_cursor_snapshots or None]:
-            if e < epoch_id:
-                fs_delete(spark, f"{state_path}/cursor-epoch-{e}")
+        if keep_cursor_snapshots is not None:
+            snaps = sorted(
+                int(n.rsplit("-", 1)[1])
+                for n in fs_list_names(spark, state)
+                if n.startswith("cursor-epoch-")
+            )
+            for e in snaps[:-keep_cursor_snapshots or None]:
+                if e < epoch_id:
+                    fs_delete(spark, f"{state}/cursor-epoch-{e}")
     mark = pool_mark()
     try:
-        state = _read_cursor(spark, state_path)
-        if state is None:
-            offset = 0
+        starts = {
+            label: _start_offset(spark, state, epoch_id, budget)
+            for label, (_, state) in streams.items()
+        }
+        # persisted: every output write and the totals aggregate below
+        # read it (release_since reclaims it with pack_shards' own pin)
+        packed = tracked_persist(
+            pack_shards(
+                batch_df, token_col=token_col, budget=budget,
+                order_col=order_col, shard_col=shard_col,
+                start_offset=starts[None] if split_col is None else starts,
+                group_col=split_col,
+            ).drop(*drop_cols)
+        )
+        total = F.coalesce(F.sum(token_col), F.lit(0))
+        if split_col is None:
+            totals = {None: packed.agg(total).first()[0]}
         else:
-            if state["budget"] != budget:
-                raise ValueError(
-                    f"shard cursor at {state_path} was written with "
-                    f"budget={state['budget']}, this run uses {budget}; "
-                    "shards packed under two budgets interleave — wipe "
-                    "the output and cursor or rerun with the stored "
-                    "budget."
-                )
-            if state["epoch_id"] is not None and state["epoch_id"] == epoch_id:
-                # foreachBatch is at-least-once: this epoch already ran
-                # to completion (its cursor was promoted) but Spark's
-                # commit log missed the commit, so it is replaying.
-                # Repack from the epoch's ORIGINAL start offset — using
-                # the promoted next_offset would shift this epoch's
-                # shard ids and double-advance every later epoch.
-                offset = state["start_offset"]
-            elif state["epoch_id"] is not None and state["epoch_id"] > epoch_id:
-                raise ValueError(
-                    f"shard cursor at {state_path} records epoch "
-                    f"{state['epoch_id']} but epoch {epoch_id} is "
-                    "replaying — either the checkpoint was reset "
-                    "against an existing cursor (which would re-pack "
-                    "already-packed documents) or more than the "
-                    "one-epoch replay window was lost; restore the "
-                    f"matching cursor-epoch-{max(epoch_id - 1, 0)} "
-                    "snapshot to cursor, or wipe cursor AND output to "
-                    "restart packing from 0."
+            totals = dict(
+                packed.groupBy(split_col).agg(total).collect()
+            )
+        for label, (out, _) in streams.items():
+            rows = packed
+            if split_col is not None:
+                rows = packed.filter(F.col(split_col) == label).drop(split_col)
+            if fmt == "jsonl":
+                jsonl_sink(
+                    rows, f"{out}/epoch={epoch_id}",
+                    partition_by=(shard_col,),
                 )
             else:
-                offset = state["next_offset"]
-        packed = pack_shards(
-            batch_df, token_col=token_col, budget=budget,
-            order_col=order_col, shard_col=shard_col, start_offset=offset,
-        )
-        if drop_cols:
-            packed = packed.drop(*drop_cols)
-        if fmt == "jsonl":
-            from ..sources.sinks import jsonl_sink
-
-            jsonl_sink(
-                packed, f"{out_path}/epoch={epoch_id}",
-                partition_by=(shard_col,),
+                rows.write.mode("overwrite").parquet(f"{out}/epoch={epoch_id}")
+        # advance + promote each cursor (promotion = commit point), only
+        # after every output is written; the epoch key makes
+        # re-promotion on replay a no-op rewrite
+        for label, (_, state) in streams.items():
+            offset = starts[label]
+            cursor = (
+                int(epoch_id), int(offset),
+                int(offset + totals.get(label, 0)), int(budget),
             )
-        else:
-            packed.write.mode("overwrite").parquet(f"{out_path}/epoch={epoch_id}")
-        # the batch total comes from the relation pack_shards already
-        # persisted (the write above was its first consumer) — NOT from
-        # a second scan of the source batch
-        batch_total = packed.agg(
-            F.coalesce(F.sum(token_col), F.lit(0)).alias("s")
-        ).collect()[0]["s"]
-        # pack_shards pins the ranged+prefixed relation; the epoch
-        # write + total agg were its consuming actions (scoped: never a
-        # caller's pin)
-        # advance + promote the cursor (promotion = commit point); the
-        # epoch key makes re-promotion on replay a no-op rewrite
-        cursor = (int(epoch_id), int(offset), int(offset + batch_total),
-                  int(budget))
-        for name in (f"cursor-epoch-{epoch_id}", "cursor"):
-            fs_write_json_row(
-                spark, f"{state_path}/{name}", _CURSOR_SCHEMA, cursor
-            )
+            for name in (f"cursor-epoch-{epoch_id}", "cursor"):
+                fs_write_json_row(
+                    spark, f"{state}/{name}", _CURSOR_SCHEMA, cursor
+                )
     finally:
         release_since(mark)

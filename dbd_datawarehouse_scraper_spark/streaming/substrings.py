@@ -56,6 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import pool_mark, release_since, tracked_persist
+from ..sources.sinks import check_fold_threshold
 from ._store import run_epochs
 
 #: Bump when the window hashing or store layout changes incompatibly.
@@ -131,6 +132,7 @@ def stream_substring_dedup(
     from ..operators.substrings import validate_substring_params
 
     validate_substring_params(min_len, min_docs)
+    check_fold_threshold("fold_store_after", fold_store_after)
     spark = stream_docs.sparkSession
     _validate_or_init_store(spark, store_path, min_len)
 

@@ -526,6 +526,12 @@ def test_pagerank_disjoint_seeds_raise(spark):
 
 # --------------------------------------- driver-local fast path (opt r12)
 
+#: Small pair graph for the local-path tests: several components and a
+#: self-loop.
+SMALL_GRAPH = [(i * 7919 % 97, i * 104729 % 97) for i in range(60)] + [
+    (500, 500)
+]
+
 
 def test_cc_local_fast_path_matches_distributed(spark):
     """The driver-local small-graph fast path (LOCAL_MAX_EDGES gate)
@@ -538,11 +544,10 @@ def test_cc_local_fast_path_matches_distributed(spark):
         last_run_stats,
     )
 
-    num = [(i * 7919 % 97, i * 104729 % 97) for i in range(60)] + [(500, 500)]
     sdf = spark.createDataFrame(
-        [(f"n{a}", f"n{b}") for a, b in num], "id_a string, id_b string"
+        [(f"n{a}", f"n{b}") for a, b in SMALL_GRAPH], "id_a string, id_b string"
     )
-    for df in (_pairs(spark, num), sdf):
+    for df in (_pairs(spark, SMALL_GRAPH), sdf):
         local = _comp_map(connected_components(df))
         assert dict(last_run_stats).get("mode") == "local"
         release_caches()
@@ -620,3 +625,74 @@ def test_pagerank_local_string_ids_and_disjoint_seeds(spark):
     with _pytest.raises(ValueError, match="share no node"):
         pagerank(df, seeds=bad)
     release_caches()
+
+
+def _gated_case(spark, op):
+    """(run(ceiling) -> DataFrame, gate size) for one gated operator
+    over SMALL_GRAPH: the gate size is the row count the operator's
+    bounded collect sees."""
+    from dbd_datawarehouse_scraper_spark.operators.dedup import hamming_pairs
+    from dbd_datawarehouse_scraper_spark.operators.graph import pagerank
+
+    if op == "connected_components":
+        sym = {e for a, b in SMALL_GRAPH for e in ((a, b), (b, a))}
+        df = _pairs(spark, SMALL_GRAPH)
+        return (lambda c: connected_components(df, local_max_edges=c)), len(sym)
+    if op == "pagerank":
+        df = spark.createDataFrame(SMALL_GRAPH, "src long, dst long")
+        return (
+            lambda c: pagerank(df, max_iter=4, tol_millionths=None,
+                               checkpoint_every=4, local_max_edges=c)
+        ), len(set(SMALL_GRAPH))
+    ids = sorted({v for e in SMALL_GRAPH for v in e})
+    # ids in one block of four share a hash; neighbouring blocks differ
+    # in a few bits, so the pair set mixes distances 0..max_hamming
+    df = spark.createDataFrame(
+        [(i, (i // 4) * 0x0101) for i in ids] + [(999, None)],
+        "mid long, h long",
+    )
+    return (lambda c: hamming_pairs(df, "mid", "h", 3, local_max_rows=c)), len(ids)
+
+
+@pytest.mark.parametrize(
+    "op", ["connected_components", "pagerank", "hamming_pairs"]
+)
+def test_local_gate_ceiling_and_plan(spark, op):
+    """Every gated operator: an input of exactly the ceiling stays
+    local, ceiling+1 goes distributed, both give the same rows, and the
+    local result plans as a JVM-local LocalTableScan, never as an
+    ExistingRDD that Python workers re-run on every scan."""
+    run, n = _gated_case(spark, op)
+
+    def plan_and_rows(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        rows = sorted(tuple(r) for r in df.collect())
+        release_caches()
+        return plan, rows
+
+    local_plan, local_rows = plan_and_rows(run(n))
+    dist_plan, dist_rows = plan_and_rows(run(n - 1))
+    assert "LocalTableScan" in local_plan and "ExistingRDD" not in local_plan
+    assert "LocalTableScan" not in dist_plan
+    assert local_rows and local_rows == dist_rows
+
+
+def test_local_paths_use_the_shared_gate_and_frame():
+    """Driver-local fast paths go through driver_local's bounded
+    collect and JVM-local frame: a count-then-collect gate scans the
+    input twice, and a createDataFrame(list) result is a Python RDD
+    that workers re-run on every scan."""
+    import re
+
+    from .test_epoch_runner import PKG
+
+    ops = PKG / "operators"
+    gates = [
+        f"{p.name}:{i}"
+        for p in sorted(ops.glob("*.py"))
+        for i, line in enumerate(p.read_text(encoding="utf-8").splitlines(), 1)
+        if re.search(r"\.count\(\)\s*(<=|>)", line)
+    ]
+    assert gates == []
+    for name in ("graph.py", "dedup.py"):
+        assert "createDataFrame(" not in (ops / name).read_text(encoding="utf-8")

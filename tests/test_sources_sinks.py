@@ -861,6 +861,44 @@ def test_pack_epoch_folding_off_still_recovers(spark, off):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_negative_fold_threshold_refused_before_any_write(spark, tmp_path):
+    """A negative ``min_dirs`` has no meaning: ``fold_epoch_dirs``
+    raises a ValueError naming it before writing anything (no partial
+    ``__fold_tmp__``, the store untouched), and the stream wrappers
+    refuse a negative ``fold_store_after`` / ``fold_output_after`` at
+    start instead of failing asynchronously mid-stream."""
+    from dbd_datawarehouse_scraper_spark.sources.sinks import fold_epoch_dirs
+    from dbd_datawarehouse_scraper_spark.streaming import (
+        file_stream,
+        stream_near_dedup,
+        stream_pack_shards,
+    )
+
+    store = str(tmp_path / "store")
+    for e in range(2):
+        spark.createDataFrame(
+            [(e * 10 + i, 10) for i in range(3)], "doc_id long, n_tokens long"
+        ).coalesce(1).write.parquet(f"{store}/epoch={e}")
+    before = sorted(os.listdir(tmp_path))
+    with pytest.raises(ValueError, match="min_dirs"):
+        fold_epoch_dirs(spark, store, below_epoch=5, min_dirs=-1)
+    assert sorted(os.listdir(tmp_path)) == before
+    assert sorted(os.listdir(store)) == ["epoch=0", "epoch=1"]
+
+    stream = file_stream(spark, store, spark.read.parquet(store).schema)
+    with pytest.raises(ValueError, match="fold_output_after"):
+        stream_pack_shards(
+            stream, str(tmp_path / "out"), str(tmp_path / "state"),
+            str(tmp_path / "ckpt"), fold_output_after=-1,
+        )
+    with pytest.raises(ValueError, match="fold_store_after"):
+        stream_near_dedup(
+            stream, str(tmp_path / "out"), str(tmp_path / "nd_store"),
+            str(tmp_path / "ckpt"), fold_store_after=-2,
+        )
+    assert sorted(os.listdir(tmp_path)) == before
+
+
 def test_write_minimal_xlsx_wide_and_escaped_sheet(workdir):
     """Past column Z, cell refs must be bijective base-26 (AA, AB, …) —
     chr(65+ci) produced invalid refs ('[') at column 27 — and a sheet
