@@ -99,7 +99,8 @@ def build_parser() -> argparse.ArgumentParser:
                         "uniform); mutually exclusive with "
                         "--mix-weights")
     p.add_argument("--split-fractions", type=str, default=None,
-                   help='JSON {"label": fraction} summing to 1 '
+                   help='JSON {"label": fraction} summing to 1; labels '
+                        "match [A-Za-z0-9_-]+, fractions are >= 0 "
                         "(default: train .9 / val .05 / test .05)")
     p.add_argument("--shard-token-budget", type=int, default=1_000_000,
                    help="Tokens per output shard")

@@ -19,6 +19,9 @@ never agree.
 
 from __future__ import annotations
 
+import math
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -26,8 +29,37 @@ DEFAULT_FRACTIONS: dict[str, float] = {"train": 0.9, "val": 0.05, "test": 0.05}
 
 _BUCKETS = 10_000
 
+# a label names an output directory (``split=<label>``) in both
+# exporters and a SQL string literal in the DuckDB mirror, so it is
+# restricted to characters that need no escaping in either
+_LABEL = re.compile(r"[A-Za-z0-9_-]+")
+
 
 def _thresholds(fractions: dict[str, float]) -> list[tuple[str, int]]:
+    """THE one check of a split spec (every split path goes through
+    it): labels match ``[A-Za-z0-9_-]+``, fractions are finite and
+    non-negative and sum to 1. Returns (label, cumulative bucket bound)
+    in insertion order."""
+    if not isinstance(fractions, dict):
+        raise ValueError(
+            f"split fractions must be a {{label: fraction}} dict, got {fractions!r}"
+        )
+    for label, frac in fractions.items():
+        if not isinstance(label, str) or not _LABEL.fullmatch(label):
+            raise ValueError(
+                f"split label {label!r} must match [A-Za-z0-9_-]+ "
+                f"(it names the split=<label> output directory)"
+            )
+        if (
+            isinstance(frac, bool)
+            or not isinstance(frac, (int, float))
+            or not math.isfinite(frac)
+            or frac < 0
+        ):
+            raise ValueError(
+                f"split fraction for {label!r} must be a finite number "
+                f">= 0, got {frac!r}"
+            )
     total = sum(fractions.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"split fractions must sum to 1, got {total}")
@@ -52,6 +84,14 @@ def content_split(
         cond = buckets < upper
         expr = F.when(cond, F.lit(label)) if expr is None else expr.when(cond, F.lit(label))
     return expr
+
+
+def split_labels(fractions: dict[str, float] | None = None) -> tuple[str, ...]:
+    """The checked labels of a split spec, in bucket order — what the
+    exporters iterate and report on. Raises like :func:`content_split`,
+    so an exporter calling it first refuses a bad spec before any
+    work."""
+    return tuple(label for label, _ in _thresholds(fractions or DEFAULT_FRACTIONS))
 
 
 def split_sql(fingerprint_expr: str, fractions: dict[str, float] | None = None) -> str:

@@ -208,9 +208,9 @@ def apply_pack_stage(
     pack_opts: dict,
     id_prefix: str = "",
 ) -> DataFrame:
-    """The export-pipeline packing stage, shared VERBATIM by the batch
-    plan (plans/training_export.py) and the incremental exporter
-    (streaming/export.py) so their outputs cannot drift: run
+    """The export-pipeline packing stage, called only from the export
+    tail both exporters share (``plans.training_export.export_rows``)
+    so their outputs cannot drift: run
     :func:`pack_sequences` over rows that already fit the context
     (``apply_chunk_stage`` upstream is the bound), then collapse each
     packed sequence to ONE output row — the JSONL row a trainer
@@ -218,8 +218,8 @@ def apply_pack_stage(
 
     - ``id_col`` = ``<id_prefix><seq_id>`` (the streaming exporter
       passes ``"<epoch>#"`` so ids stay globally unique across epochs;
-      the batch plan packs per split, and seq ids only need to be
-      unique within a split's shard stream);
+      the shared export tail packs per split, and the batch exporter's
+      seq ids only need to be unique within a split's shard stream);
     - ``text_col`` = the member texts joined by ``pack_opts
       ["separator"]`` (default ``"\\n\\n"``) in ``seq_pos`` order —
       the document boundary the trainer's attention mask keys on;
@@ -237,7 +237,7 @@ def apply_pack_stage(
     per sequence — bounded by ``context`` tokens by construction —
     sorted by the unique ``seq_pos``, so the row is deterministic.
 
-    MUST run per split (both callers do): sequence membership ignores
+    MUST run per split (the export tail does): sequence membership ignores
     any split column, so packing a mixed relation would concatenate
     train and val text into one training row — cross-split leakage.
 

@@ -9,42 +9,53 @@ verified operators —
                                       gates, exact + near dedup)
       → corpus mixing                (operators/mixing.py: per-source
                                       token proportions, never upsample)
-      → content-hash split           (functions/splits.py: leakage-safe
-                                      train/val/test, rerun-stable)
-      → PII redaction                (functions/pii.py, optional)
-      → sliding-window chunking      (operators/chunking.py, optional:
-                                      over-context docs → overlapping
-                                      windows, split-safe by ordering)
+      ┌ export tail, shared with the incremental exporter (export_rows):
+      │ → content-hash split         (functions/splits.py: leakage-safe
+      │                               train/val/test, rerun-stable)
+      │ → PII redaction              (functions/pii.py, optional)
+      │ → sliding-window chunking    (operators/chunking.py, optional:
+      │                               over-context docs → overlapping
+      │                               windows, split-safe by ordering)
+      └ → sequence packing           (operators/packing.py, optional,
+                                      per split)
       → token-budget shard packing   (operators/sharding.py: two-level
-                                      prefix sum, per split)
-      → gzip JSONL shards            (sources/sinks.py jsonl_sink,
-                                      partitioned by shard id)
+                                      prefix sum, every split in ONE
+                                      grouped pass)
+      → gzip JSONL shards            (sources/sinks.py jsonl_sink, one
+                                      write partitioned by split, shard)
 
 Layout: ``out/split=<label>/shard=<n>/part-*.json.gz`` — exactly the
 directory shape training loaders glob. Shard ids restart per split (a
-trainer never mixes splits in one stream).
+trainer never mixes splits in one stream). The export OWNS
+``out_path``: it is overwritten as a whole, with one ``_SUCCESS`` at
+its root, and a split that receives no rows gets no ``split=<label>``
+directory (its count is 0).
 
 Determinism end to end: every stage keys its decisions on content
 (fingerprints, salted content hashes, the order column), so the same
 corpus produces byte-stable membership on any cluster, partitioning,
 or rerun — the property that makes a 100 TB export auditable.
-
-The per-split loop is a driver-side loop over ≤ a handful of labels,
-each iteration one independent distributed job (packing + write); the
-splits could equally run concurrently from separate threads — they
-share no state.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import release_these, tracked_persist
 from ..functions.pii import redact_pii
-from ..functions.splits import DEFAULT_FRACTIONS, content_split
-from ..functions.text_analysis import doc_fingerprint
+from ..functions.splits import content_split, split_labels
+from ..functions.text_analysis import (
+    doc_fingerprint,
+    resolve_token_counter,
+    token_count,
+)
+from ..operators.chunking import apply_chunk_stage
 from ..operators.mixing import mix_corpora
-from ..operators.sharding import pack_shards
+from ..operators.packing import apply_pack_stage
+from ..operators.sharding import pack_shards, shuffle_order_key
 from ..sources.sinks import jsonl_sink
 from .curation import curate_documents
 
@@ -118,11 +129,18 @@ def export_training_set(
     ``bpe_ish``, chunk text is recounted after chunking, and a
     ``pack_opts`` context is in bpe-ish units — size it accordingly
     (a whitespace window of W words can exceed W bpe-ish tokens, and
-    the packing kernel refuses over-context rows loudly). Consumes
-    its own intermediate
-    persists (the funnel's) via the standard pool discipline — callers
-    still call ``caching.release_caches()`` after, like any consuming
-    action in this package.
+    the packing kernel refuses over-context rows loudly).
+
+    After :func:`export_rows`, ONE grouped ``pack_shards`` pass gives
+    every split its own shard stream (each split gets exactly the
+    shards it would get packed alone), ONE write lays out every split
+    under ``out_path`` (overwritten as a whole — see the module
+    docstring), and ONE aggregate counts the rows per split. A bad
+    split spec or token counter refuses before the funnel runs.
+    Consumes its own intermediate persists (the funnel's) via the
+    standard pool discipline — callers still call
+    ``caching.release_caches()`` after, like any consuming action in
+    this package.
     """
     if mix_weights and mix_temperature is not None:
         raise ValueError(
@@ -132,6 +150,8 @@ def export_training_set(
     if mix_temperature is not None and mix_temperature < 0:
         # refuse before the funnel runs, not after hours of curation
         raise ValueError(f"mix_temperature must be >= 0, got {mix_temperature}")
+    labels = split_labels(split_fractions)
+    counter = resolve_token_counter(token_counter)
     mixing = bool(mix_weights) or mix_temperature is not None
     curated = curate_documents(
         docs,
@@ -140,8 +160,6 @@ def export_training_set(
         carry_cols=(source_col,) if mixing else (),
         **(curate_kwargs or {}),
     )
-    from ..caching import tracked_persist
-
     # the fingerprint feeds BOTH the mix selection and the split
     # assignment — compute it once per row and let every consumer read
     # the column (one full-text hash pass instead of two)
@@ -167,77 +185,81 @@ def export_training_set(
                 curated_cache, mix_temperature, source_col=source_col,
                 text_col=text_col, fingerprint_col="_fp",
             ).drop(source_col)
-    from ..functions.text_analysis import resolve_token_counter
-
-    counter = resolve_token_counter(token_counter)
-    prepared = curated.withColumn(
-        "split", content_split(F.col("_fp"), split_fractions)
-    ).drop("_fp").withColumn(
-        "n_tokens", counter(F.col(text_col)).cast("long")
+    rows, order_col = export_rows(
+        curated, id_col, text_col, split_fractions, counter,
+        fingerprint_col="_fp", redact=redact, chunk_opts=chunk_opts,
+        pack_opts=pack_opts, shuffle_salt=shuffle_salt,
     )
-    if redact:
-        prepared = prepared.withColumn(text_col, redact_pii(F.col(text_col)))
-    if chunk_opts:
-        from ..operators.chunking import apply_chunk_stage
+    # one aggregate counts every label and materializes the persisted
+    # rows, which subsume the curated cache — drop it before the shard
+    # pass so the corpus is not held twice through it (round-5 review)
+    got = dict(rows.groupBy("split").count().collect())
+    if curated_cache is not None:
+        release_these([curated_cache])
+    packed = pack_shards(
+        rows, budget=shard_token_budget, order_col=order_col, group_col="split"
+    )
+    if order_col != id_col:
+        packed = packed.drop(order_col)  # bookkeeping only
+    jsonl_sink(packed, out_path, partition_by=("split", "shard"))
+    return {label: got.get(label, 0) for label in labels}
 
-        prepared = apply_chunk_stage(
-            prepared, id_col, text_col, chunk_opts,
+
+def export_rows(
+    curated: DataFrame,
+    id_col: str,
+    text_col: str,
+    fractions: dict[str, float] | None,
+    counter,
+    fingerprint_col: str | None = None,
+    redact: bool = True,
+    chunk_opts: dict | None = None,
+    pack_opts: dict | None = None,
+    shuffle_salt: str | None = None,
+    id_prefix: str = "",
+) -> tuple[DataFrame, str]:
+    """THE export tail both exporters call: curated survivors → rows
+    with a ``split`` label and ``n_tokens`` (metered by ``counter``, a
+    resolved ``resolve_token_counter``), redacted, chunked and
+    sequence-packed as asked. Returns ``(rows, order_col)``, the
+    packing key: ``id_col``, or the ``_shuffle_key`` column added for
+    ``shuffle_salt``.
+
+    ``fingerprint_col`` names a precomputed ``doc_fingerprint`` column
+    (consumed); ``None`` hashes ``text_col``. Chunks follow split
+    assignment and redaction, so they inherit their document's split.
+    ``pack_opts`` runs ``apply_pack_stage`` once PER SPLIT (a sequence
+    must never mix splits, and the stage sizes its groups from each
+    split's own row count); ``id_prefix`` prefixes the sequence ids.
+    Pins one tracked persist, two with ``pack_opts``; the caller
+    releases them."""
+    fp = F.col(fingerprint_col) if fingerprint_col else doc_fingerprint(F.col(text_col))
+    rows = curated.withColumn("split", content_split(fp, fractions))
+    if fingerprint_col:
+        rows = rows.drop(fingerprint_col)
+    rows = rows.withColumn("n_tokens", counter(F.col(text_col)).cast("long"))
+    if redact:
+        rows = rows.withColumn(text_col, redact_pii(F.col(text_col)))
+    if chunk_opts:
+        rows = apply_chunk_stage(
+            rows, id_col, text_col, chunk_opts,
             # whitespace chunk counts are free (identity); any other
             # counter re-measures the chunk text
-            recount=None if token_counter == "whitespace" else counter,
+            recount=None if counter is token_count else counter,
         )
-
-    # one pass computes curation + split for every label; each split's
-    # packing job then reads the cached relation instead of re-running
-    # the funnel per label
-    prepared = tracked_persist(prepared)
-
-    if curated_cache is not None:
-        # prepared subsumes curated — materialize it, then drop the
-        # curated cache so the corpus isn't held twice through the
-        # per-split packing loop (round-5 review)
-        from ..caching import release_these
-
-        prepared.count()
-        release_these([curated_cache])
-
-    counts: dict[str, int] = {}
-    for label in (split_fractions or DEFAULT_FRACTIONS):
-        subset = prepared.filter(F.col("split") == label).drop("split")
-        pack_mark = None
-        if pack_opts:
-            from ..caching import pool_mark, release_since
-            from ..operators.packing import apply_pack_stage
-
-            # per split — a packed sequence must never mix splits.
-            # Persist: the pack shuffle + BFD kernel feed pack_shards'
-            # range sampling, its materialization, AND the count below
-            # — without the barrier the stage would run three times
-            pack_mark = pool_mark()
-            subset = tracked_persist(
-                apply_pack_stage(subset, id_col, text_col, pack_opts)
-            )
-        order_col = id_col
-        if shuffle_salt is not None:
-            from ..operators.sharding import shuffle_order_key
-
-            # deterministic shuffle: pack in THE shared key's order
-            order_col = "_shuffle_key"
-            subset = subset.withColumn(
-                order_col, shuffle_order_key(id_col, shuffle_salt)
-            )
-        packed = pack_shards(
-            subset,
-            token_col="n_tokens",
-            budget=shard_token_budget,
-            order_col=order_col,
-        )
-        if shuffle_salt is not None:
-            packed = packed.drop(order_col)  # bookkeeping only
-        jsonl_sink(
-            packed, f"{out_path}/split={label}", partition_by=("shard",)
-        )
-        counts[label] = subset.count()
-        if pack_mark is not None:
-            release_since(pack_mark)
-    return counts
+    rows = tracked_persist(rows)
+    if pack_opts:
+        sequences = [
+            apply_pack_stage(
+                rows.filter(F.col("split") == label).drop("split"),
+                id_col, text_col, pack_opts, id_prefix=id_prefix,
+            ).withColumn("split", F.lit(label))
+            for label in split_labels(fractions)
+        ]
+        rows = tracked_persist(reduce(DataFrame.unionByName, sequences))
+    order_col = id_col
+    if shuffle_salt is not None:
+        # deterministic shuffle: pack in THE shared key's order
+        order_col = "_shuffle_key"
+        rows = rows.withColumn(order_col, shuffle_order_key(id_col, shuffle_salt))
+    return rows, order_col

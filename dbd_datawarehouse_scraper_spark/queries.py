@@ -3207,7 +3207,7 @@ def training_export_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     curate → mix → content-hash split → PII-redact → token-budget pack
     → gzip JSONL, run hermetically into a temp dir; returns the
     read-back train split (doc_id, n_tokens, shard). Rows-only (the
-    plan writes files and loops splits); layout, split disjointness,
+    plan writes files); layout, split disjointness,
     shard budgets, and rerun determinism are pinned in
     tests/test_curation.py."""
     import shutil

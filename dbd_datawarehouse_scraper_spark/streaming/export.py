@@ -17,9 +17,10 @@ shards while ingestion is still running. Composition per epoch:
       → near_dedup_epoch                  (within-batch + against the
                                            signature store; survivors
                                            land in <state>/curated/epoch=N)
-      → content-hash split + PII redact   (stateless, content-keyed —
-                                           identical assignment to the
-                                           batch exporter's)
+      → export_rows                       (THE batch exporter's tail:
+                                           split, token meter, PII
+                                           redact, chunk, per-split
+                                           sequence pack, order key)
       → pack_epoch, all splits in one     (one grouped pack_shards pass;
         grouped pass                       per-split cursor under
                                            <state>/pack/split=<label>;
@@ -62,13 +63,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..functions.pii import redact_pii
-from ..functions.splits import DEFAULT_FRACTIONS, content_split
-from ..functions.text_analysis import (
-    doc_fingerprint,
-    quality_score,
-    token_count,
-)
+from ..functions.splits import split_labels
+from ..functions.text_analysis import quality_score, token_count
+from ..plans.training_export import export_rows
 from ._store import run_epochs
 from .near_dedup import near_dedup_epoch
 from .sharding import pack_epoch
@@ -235,7 +232,7 @@ def stream_export_training_set(
     not recorded in the pack cursor, so keep it constant per export
     like the salt)."""
     spark = stream_docs.sparkSession
-    fractions = split_fractions or DEFAULT_FRACTIONS
+    labels = split_labels(split_fractions)  # refuse at start
     dom = None
     if domain_opts is not None:
         dom = {"domain_col": "domain", **domain_opts}
@@ -520,56 +517,18 @@ def stream_export_training_set(
         if not had_rows:
             return
         survivors = spark.read.parquet(f"{state_path}/curated/epoch={epoch_id}")
-        prepared = survivors.withColumn(
-            "split", content_split(doc_fingerprint(F.col(text_col)), fractions)
-        ).withColumn("n_tokens", _counter(F.col(text_col)).cast("long"))
-        if redact:
-            prepared = prepared.withColumn(text_col, redact_pii(F.col(text_col)))
-        if chunk_opts:
-            # the SAME stage (and stage order: after split assignment
-            # and redaction) as the batch plan — stateless per-row, so
-            # replays rewrite identical chunks
-            from ..operators.chunking import apply_chunk_stage
-
-            prepared = apply_chunk_stage(
-                prepared, id_col, text_col, chunk_opts,
-                recount=None if token_counter == "whitespace" else _counter,
-            )
-
-        from ..caching import pool_mark, release_since, tracked_persist
+        from ..caching import pool_mark, release_since
 
         mark = pool_mark()
         try:
-            prepared = tracked_persist(prepared)
-            if pack_opts:
-                # the SAME stage as the batch plan, per split (a
-                # sequence never mixes splits); the epoch prefix keeps
-                # seq ids unique across epochs. Persisted (the shard
-                # pass consumes it more than once); release_since(mark)
-                # below reclaims it
-                from functools import reduce
-
-                from ..operators.packing import apply_pack_stage
-
-                sequences = [
-                    apply_pack_stage(
-                        prepared.filter(F.col("split") == label).drop("split"),
-                        id_col, text_col, pack_opts, id_prefix=f"{epoch_id}#",
-                    ).withColumn("split", F.lit(label))
-                    for label in fractions
-                ]
-                prepared = tracked_persist(
-                    reduce(DataFrame.unionByName, sequences)
-                )
-            order_col = id_col
-            if shuffle_salt is not None:
-                from ..operators.sharding import shuffle_order_key
-
-                # THE shared key — same salt, same layout as batch
-                order_col = "_shuffle_key"
-                prepared = prepared.withColumn(
-                    order_col, shuffle_order_key(id_col, shuffle_salt)
-                )
+            # THE batch plan's tail (split, meter, redact, chunk,
+            # sequence-pack per split, order key); the epoch prefix
+            # keeps sequence ids unique across epochs
+            prepared, order_col = export_rows(
+                survivors, id_col, text_col, split_fractions, _counter,
+                redact=redact, chunk_opts=chunk_opts, pack_opts=pack_opts,
+                shuffle_salt=shuffle_salt, id_prefix=f"{epoch_id}#",
+            )
             # one grouped pass packs every split's shard stream
             pack_epoch(
                 spark,
@@ -588,7 +547,7 @@ def stream_export_training_set(
                 # parquet. The signature store underneath still folds.
                 fold_output_after=None,
                 split_col="split",
-                splits=tuple(fractions),
+                splits=labels,
             )
         finally:
             release_since(mark)

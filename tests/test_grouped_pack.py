@@ -1,6 +1,7 @@
 """Grouped shard packing: ``pack_shards(group_col=...)`` and
 ``pack_epoch(split_col=...)`` pack several splits' shard streams in one
-pass. Each split must get exactly the shards and cursor it gets when
+pass, and the batch exporter packs every split in one grouped pass
+too. Each split must get exactly the shards and cursor it gets when
 packed alone, an empty split still gets its epoch dir and cursor, and
 a crash that promoted some splits' cursors but not others replays to
 the state of an uninterrupted run."""
@@ -153,22 +154,96 @@ def test_empty_split_gets_epoch_dir_and_unmoved_cursor(spark, tmp_path):
     assert not list((tmp_path / "out" / "split=c" / "epoch=1").glob("shard=*"))
 
 
-def test_export_has_no_per_split_pack_loop():
-    """The exporter packs every split in one grouped pack_epoch call:
-    a pack_epoch call inside a loop is the per-split pass (one range
-    exchange, offsets broadcast and totals job per split) coming back."""
-    tree = ast.parse((PKG / "streaming" / "export.py").read_text(encoding="utf-8"))
-    calls, looped = 0, []
+@pytest.mark.parametrize("variant", ["plain", "shuffle_salt", "pack_opts"])
+def test_batch_export_shard_placement(spark, sf_dir, tmp_path, variant):
+    """The batch exporter's one grouped pass puts every exported row in
+    the shard that an ungrouped pack_shards over its own split's
+    exported rows gives it, in the same order key, with at least two
+    shards per split; a split with no rows counts 0 and gets no dir."""
+    from dbd_datawarehouse_scraper_spark.plans import export_training_set
+
+    opts = {
+        "plain": {},
+        "shuffle_salt": {"shuffle_salt": "s1"},
+        "pack_opts": {
+            "chunk_opts": {"window": 32, "stride": 32, "min_tokens": 1},
+            "pack_opts": {"context": 96},
+        },
+    }[variant]
+    budget = 1500
+    out = str(tmp_path / "out")
+    counts = export_training_set(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), out,
+        split_fractions={"train": 0.5, "val": 0.5, "test": 0.0},
+        shard_token_budget=budget,
+        curate_kwargs={"keep_langs": ("en", "de", "fr", "es", "zh", "und")},
+        **opts,
+    )
+    release_caches()
+    assert counts["test"] == 0
+    assert not (tmp_path / "out" / "split=test").exists()
+    for label in ("train", "val"):
+        got = spark.read.json(f"{out}/split={label}").select(
+            "doc_id", "n_tokens", "shard"
+        )
+        exported = {r["doc_id"]: r["shard"] for r in got.collect()}
+        assert len(exported) == counts[label]
+        assert max(exported.values()) >= 1, "fewer than two shards"
+        ref_in, order = got.drop("shard"), "doc_id"
+        if variant == "shuffle_salt":
+            order = "_key"
+            ref_in = ref_in.withColumn(order, shuffle_order_key("doc_id", "s1"))
+        ref = {
+            r["doc_id"]: r["shard"]
+            for r in pack_shards(ref_in, budget=budget, order_col=order).collect()
+        }
+        release_caches()
+        assert exported == ref, label
+
+
+def _calls(tree, name):
+    """Line numbers of the calls to ``name`` in ``tree``, and those of
+    them that sit inside a loop or comprehension."""
+    calls, looped = [], []
+    loops = (ast.For, ast.AsyncFor, ast.While, ast.ListComp, ast.SetComp,
+             ast.DictComp, ast.GeneratorExp)
 
     def visit(node, in_loop):
-        nonlocal calls
-        if isinstance(node, ast.Call) and getattr(node.func, "id", "") == "pack_epoch":
-            calls += 1
+        func = getattr(node, "func", None)
+        if isinstance(node, ast.Call) and name in (
+            getattr(func, "id", None), getattr(func, "attr", None)
+        ):
+            calls.append(node.lineno)
             if in_loop:
                 looped.append(node.lineno)
-        loop = isinstance(node, (ast.For, ast.While, ast.comprehension))
         for child in ast.iter_child_nodes(node):
-            visit(child, in_loop or loop)
+            visit(child, in_loop or isinstance(node, loops))
 
     visit(tree, False)
-    assert calls == 1 and not looped, (calls, looped)
+    return calls, looped
+
+
+def test_export_has_no_per_split_pack_loop():
+    """Each exporter packs every split in one grouped call: a packer
+    call inside a loop is the per-split pass (one range exchange,
+    offsets broadcast and totals job per split) coming back."""
+    for module, packer in (
+        ("streaming/export.py", "pack_epoch"),
+        ("plans/training_export.py", "pack_shards"),
+    ):
+        tree = ast.parse((PKG / module).read_text(encoding="utf-8"))
+        calls, looped = _calls(tree, packer)
+        assert len(calls) == 1 and not looped, (module, calls, looped)
+
+
+def test_sequence_pack_stage_called_from_one_function():
+    """The per-split sequence-pack loop exists once: every call of
+    apply_pack_stage in the package sits in the shared export tail."""
+    callers = set()
+    for path in PKG.rglob("*.py"):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        for fn in ast.walk(tree):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                if fn.name != "apply_pack_stage" and _calls(fn, "apply_pack_stage")[0]:
+                    callers.add((str(path.relative_to(PKG)), fn.name))
+    assert callers == {("plans/training_export.py", "export_rows")}, callers

@@ -255,6 +255,59 @@ def test_content_split_deterministic_and_proportional(spark):
         content_split(F.lit("ab"), {"train": 0.5})
 
 
+@pytest.mark.parametrize(
+    "fractions, match",
+    [
+        ({"train": 1.2, "val": -0.2}, "fraction"),
+        ({"train": float("nan"), "val": 1.0}, "fraction"),
+        ({"train": "1.0"}, "fraction"),
+        ({"it's": 1.0}, "label"),
+        ({"a/b": 1.0}, "label"),
+        ({"a=b": 1.0}, "label"),
+        ({"50%": 1.0}, "label"),
+        ({"": 1.0}, "label"),
+        ({"train": 0.9, "val": 0.05}, "sum to 1"),
+        (["train"], "dict"),
+    ],
+)
+def test_split_spec_refused_everywhere(spark, tmp_path, fractions, match):
+    """Every split path refuses a bad spec through the one check in
+    functions/splits.py: a negative (or non-finite, or non-numeric)
+    fraction would silently empty a split, and a label outside
+    [A-Za-z0-9_-]+ would break the SQL mirror's string literal and name
+    a different directory in each exporter. Both exporters refuse
+    before any work."""
+    from dbd_datawarehouse_scraper_spark.functions.splits import (
+        content_split,
+        split_labels,
+        split_sql,
+    )
+    from dbd_datawarehouse_scraper_spark.plans import export_training_set
+    from dbd_datawarehouse_scraper_spark.streaming import (
+        stream_export_training_set,
+    )
+
+    docs = spark.createDataFrame([(1, "some text")], "doc_id long, text string")
+    stream = spark.readStream.format("rate").load().selectExpr(
+        "value AS doc_id", "CAST(value AS STRING) AS text"
+    )
+    for refuse in (
+        lambda: content_split(F.col("fp"), fractions),
+        lambda: split_sql("fp", fractions),
+        lambda: split_labels(fractions),
+        lambda: export_training_set(
+            docs, str(tmp_path / "out"), split_fractions=fractions
+        ),
+        lambda: stream_export_training_set(
+            stream, str(tmp_path / "sout"), str(tmp_path / "state"),
+            str(tmp_path / "ckpt"), split_fractions=fractions,
+        ),
+    ):
+        with pytest.raises(ValueError, match=match):
+            refuse()
+    assert not list(tmp_path.iterdir())
+
+
 # ---------------------------------------------------------------- gopher
 
 GOPHER_FIXTURE = [
