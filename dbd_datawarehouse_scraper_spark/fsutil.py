@@ -71,6 +71,17 @@ def fs_list_names(spark: SparkSession, path: str) -> list[str]:
     return [status.getPath().getName() for status in fs.listStatus(jpath)]
 
 
+def fs_holds_data(spark: SparkSession, path: str) -> bool:
+    """Whether the dir at ``path`` lists a visible entry (a data file
+    or a ``col=value`` partition dir). Spark hides ``_``/``.`` names,
+    so a dir holding only commit or fold markers is empty to a reader
+    — a partitioned write of zero rows leaves exactly that — and a
+    multi-dir read that includes it fails schema inference."""
+    return any(
+        not n.startswith(("_", ".")) for n in fs_list_names(spark, path)
+    )
+
+
 def fs_epoch_ids(spark: SparkSession, path: str) -> list[int]:
     """Ids ``N`` of the ``epoch=N`` child dirs under ``path``, in
     listing order (empty if the path does not exist) — the epoch

@@ -13,8 +13,32 @@ import os
 import shutil
 from datetime import datetime
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, DataFrameWriter
 from pyspark.sql import functions as F
+
+
+def partitioned_overwrite(
+    df: DataFrame, *cols: str, n_parts: int | None = None
+) -> DataFrameWriter:
+    """The package's one partitioned overwrite: a writer for ``df``
+    partitioned by ``cols``, in the format the caller picks
+    (``.parquet(path)``).
+
+    ``df`` is first repartitioned ON the partition values (into
+    ``n_parts`` tasks when given), so each value lands in one task —
+    one file per value, instead of every input task opening a file in
+    every value dir it touches (tasks × values small files). Static
+    overwrite: a rewrite that produces fewer partition values (a
+    replayed epoch, a fold, a rebuilt index) must truncate the target,
+    not merge with stale value dirs under an ambient dynamic
+    ``partitionOverwriteMode`` default."""
+    keys = [F.col(c) for c in cols]
+    parts = df.repartition(n_parts, *keys) if n_parts else df.repartition(*keys)
+    return (
+        parts.write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy(*cols)
+    )
 
 
 def batched_sink(
@@ -27,16 +51,16 @@ def batched_sink(
 ) -> None:
     """Write one file per partition (the reference's 'batch files',
     scraper_v2.py:1334-1353). ``target_files`` coalesces small outputs;
-    leave None at scale and let AQE size partitions."""
-    out = df.coalesce(target_files) if target_files else df
-    writer = out.write.mode(mode)
+    leave None at scale and let AQE size partitions. ``partition_by``
+    writes through :func:`partitioned_overwrite` (one file per value;
+    ``target_files`` then caps its tasks)."""
     if partition_by:
-        # static overwrite: replays must truncate the target, not merge
-        # with stale partitions under an ambient dynamic default (no-op
-        # for non-overwrite modes)
-        writer = writer.partitionBy(*partition_by).option(
-            "partitionOverwriteMode", "static"
-        )
+        writer = partitioned_overwrite(
+            df, *partition_by, n_parts=target_files
+        ).mode(mode)
+    else:
+        out = df.coalesce(target_files) if target_files else df
+        writer = out.write.mode(mode)
     if fmt == "csv":
         writer.option("header", True).csv(path)
     else:
@@ -305,7 +329,7 @@ def fold_epoch_dirs(
     below_epoch: int,
     min_dirs: int = 8,
     target_files: int = 8,
-    partition_cols: tuple = (),
+    partition_col: str | None = None,
     merge=None,
 ) -> bool:
     """[EXT] Fold committed ``epoch=K`` generations of a streaming
@@ -328,6 +352,14 @@ def fold_epoch_dirs(
     12). ``merge`` must be associative and idempotent over regrouping
     (groupBy-sum / min / max are; averages and raw counts of rows are
     NOT — keep sums and derive ratios downstream).
+
+    ``partition_col`` names a partitioned store's one partition column
+    (the epoch dirs hold ``<partition_col>=v`` subdirs): its
+    generations are rewritten through :func:`partitioned_overwrite`,
+    one file per value, so pruned reads keep working after a fold
+    (``merge`` applies to flat stores only). Members that hold no data
+    (:func:`..fsutil.fs_holds_data` — an all-struck partitioned epoch)
+    are skipped.
 
     Replay safety: ``foreachBatch`` can replay at most the CURRENT
     epoch, so callers pass ``below_epoch=<current epoch_id>`` — a
@@ -372,7 +404,7 @@ def fold_epoch_dirs(
     Committed generations are never exposed to that window (they move
     in one rename). Returns True iff a fold happened."""
     from ..fsutil import (
-        fs_delete, fs_epoch_ids, fs_exists, fs_list_names, fs_rename, fs_touch,
+        fs_delete, fs_epoch_ids, fs_exists, fs_holds_data, fs_rename, fs_touch,
     )
 
     check_fold_threshold("min_dirs", min_dirs)
@@ -395,54 +427,29 @@ def fold_epoch_dirs(
 
     def write_gen(group):
         kmax = max(group)
-        # hash-partitioned stores (the link-graph store's bucket= dirs)
-        # can hold fully-struck epochs whose dir carries only commit
-        # markers — no parquet files, unreadable; fold from the
-        # data-bearing members only, and when none exist the folded
-        # generation is just its markers (still one dir replacing many)
+        # a member all of whose rows were struck holds only markers
+        # (unreadable); fold the data-bearing members, and when there
+        # are none the generation is just its markers (still one dir
+        # replacing many)
         data = [
-            e
+            f"{path}/epoch={e}"
             for e in group
-            if any(
-                not n.startswith("_")
-                for n in fs_list_names(spark, f"{path}/epoch={e}")
-            )
+            if fs_holds_data(spark, f"{path}/epoch={e}")
         ]
-        if data:
+        dst = f"{tmp}/epoch={kmax}"
+        if data and partition_col:
+            # a multi-dir read of partitioned dirs needs the table root
+            # declared (basePath); the epoch column it surfaces is not
+            # part of the rows
+            rows = spark.read.option("basePath", path).parquet(*data)
+            partitioned_overwrite(rows.drop("epoch"), partition_col).parquet(
+                dst
+            )
+        elif data:
+            rows = spark.read.parquet(*data)
             if merge is not None:
-                merged = merge(
-                    spark.read.parquet(*[f"{path}/epoch={e}" for e in data])
-                )
-                merged.coalesce(target_files).write.mode("overwrite").parquet(
-                    f"{tmp}/epoch={kmax}"
-                )
-            elif partition_cols:
-                # partitioned epoch dirs need the table root declared
-                # (basePath) for a multi-dir read; the epoch partition
-                # column that surfaces alongside is dropped before the
-                # rewrite. Repartition ON the partition values so each
-                # value lands in one task → one file per value per
-                # generation.
-                df = spark.read.option("basePath", path).parquet(
-                    *[f"{path}/epoch={e}" for e in data]
-                ).drop("epoch")
-                # static overwrite: a crashed fold's partial generation
-                # dir must be truncated on replay, not merged with (a
-                # cluster-wide dynamic partitionOverwriteMode would
-                # keep partitions the rewrite no longer produces)
-                df.repartition(
-                    *[F.col(c) for c in partition_cols]
-                ).write.mode("overwrite").option(
-                    "partitionOverwriteMode", "static"
-                ).partitionBy(*partition_cols).parquet(
-                    f"{tmp}/epoch={kmax}"
-                )
-            else:
-                spark.read.parquet(
-                    *[f"{path}/epoch={e}" for e in data]
-                ).coalesce(target_files).write.mode("overwrite").parquet(
-                    f"{tmp}/epoch={kmax}"
-                )
+                rows = merge(rows)
+            rows.coalesce(target_files).write.mode("overwrite").parquet(dst)
         else:
             fs_touch(spark, f"{tmp}/epoch={kmax}/_SUCCESS")
         fs_touch(spark, f"{tmp}/epoch={kmax}/_FOLDED_GEN")

@@ -5,19 +5,47 @@ near-dup, semantic, image, link-graph, contamination, and the shard
 packer's output) follows the same integrity rules — format marker
 pinning parameters, strictly-below history reads,
 checkpoint-reset-ahead refusal, epoch-suffixed replay-idempotent
-overwrites, one unconditional fold-or-recover call per epoch
-(sources/sinks.py fold_epoch_dirs). The rules were originally
-hand-replicated per module; this module is the single home for the
-generic pieces (marker shapes that carry module-specific payloads —
-e.g. the semantic store's centers — stay local):
+overwrites, one unconditional fold-or-recover call per epoch. This
+module is the single home for the generic pieces (marker shapes that
+carry module-specific payloads — e.g. the semantic store's centers —
+stay local):
 
 - :func:`run_epochs` — the one stream-writer setup; every ``stream_*``
   wrapper keeps its start-time validation and epoch closure and
   returns this (the ``pool_mark``/``release_since`` bracket stays in
   each ``*_epoch`` function: the export runs several in one epoch);
 - :func:`validate_or_init_marker` — the format-marker handshake;
-- :func:`committed_epochs_below` — the history listing with the
-  reset-ahead refusal.
+- :class:`EpochDirs` — the ``epoch=N`` layout of one store sub-dir:
+  its fold, its history listing, its read and its epoch write.
+
+The layout rules :class:`EpochDirs` owns, for every store:
+
+- one ``epoch=N`` dir per micro-batch, written with overwrite: a
+  failed epoch is replayed under its own id and rewrites its own dir
+  instead of duplicating rows;
+- history = committed epochs STRICTLY BELOW the current one. A
+  replayed epoch's own rows already sit under ``epoch=N`` (a crash
+  between the store write and Spark's streaming commit); reading them
+  back would double-count the batch or strike it against itself.
+  Folded generations are named by their max folded epoch, so the same
+  rule covers them;
+- an epoch ABOVE the current id means the streaming checkpoint was
+  reset against a populated store (epoch ids are monotone; a
+  legitimate replay is only ever of the store's max epoch): refuse
+  before anything is written, since the new run would overwrite
+  committed epochs one by one while reading only the remnant;
+- a PARTITIONED sub-dir (``epoch=N/<col>=v``, so reads prune to the
+  values an epoch needs) is written through
+  ``sources.sinks.partitioned_overwrite`` — repartitioned on the key,
+  static overwrite, so a replay occupying fewer values truncates
+  instead of merging with stale value dirs; its history skips epochs
+  that hold no data (an epoch whose rows were all struck writes only
+  markers, and a read including it fails schema inference); and its
+  multi-dir reads declare the sub-dir as ``basePath``;
+- committed generations fold LSM-style through
+  ``sources.sinks.fold_epoch_dirs`` with the sub-dir's own partition
+  column and merge, once per epoch, before any read (a falsy
+  threshold only recovers a crashed fold).
 
 Markers are one-row JSON datasets (a directory holding one
 ``part-*.json`` line, the layout Spark's JSON writer produces and
@@ -30,6 +58,7 @@ per read and two per write, and every epoch of every store pays it.
 from __future__ import annotations
 
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
@@ -37,10 +66,11 @@ from pyspark.sql.streaming import StreamingQuery
 from ..fsutil import (
     fs_epoch_ids,
     fs_exists,
-    fs_list_names,
+    fs_holds_data,
     fs_read_json_row,
     fs_write_json_row,
 )
+from ..sources.sinks import fold_epoch_dirs, partitioned_overwrite
 
 
 def run_epochs(
@@ -134,31 +164,77 @@ def validate_or_init_marker(
     return dict(zip(fields, want))
 
 
-def committed_epochs_below(
-    spark: SparkSession,
-    root: str,
-    epoch_id: int,
-    noun: str,
-    overwrite_consequence: str,
-) -> list[int]:
-    """Committed epoch ids STRICTLY below ``epoch_id`` under ``root``
-    (``epoch=N`` directories). A committed epoch ABOVE the current id
-    means the streaming checkpoint was reset against a populated store
-    — refuse loudly (streaming epoch ids are monotone; a legitimate
-    replay is only ever of the store's max epoch). The replaying
-    epoch's own directory is excluded — reading it would double-count
-    the replayed batch."""
-    all_epochs = fs_epoch_ids(spark, root)
-    ahead = [e for e in all_epochs if e > epoch_id]
-    if ahead:
-        raise ValueError(
-            f"{noun} at {root} already holds epochs {sorted(ahead)} "
-            f"above the current epoch {epoch_id} — the streaming "
-            "checkpoint was reset against a populated store. Resume "
-            "with the original checkpoint, or wipe the store (and its "
-            f"outputs) to start over; {overwrite_consequence}."
+@dataclass(frozen=True)
+class EpochDirs:
+    """The ``epoch=N`` generations of one store sub-dir (the layout
+    rules in the module docstring). ``noun`` and
+    ``overwrite_consequence`` word the reset-ahead refusal;
+    ``partition_col`` makes the sub-dir partitioned; ``merge`` is the
+    fold's associative reducer (see ``fold_epoch_dirs``)."""
+
+    root: str
+    noun: str
+    overwrite_consequence: str
+    partition_col: str | None = None
+    merge: Callable[[DataFrame], DataFrame] | None = None
+
+    def path(self, epoch_id: int) -> str:
+        return f"{self.root}/epoch={epoch_id}"
+
+    def fold(
+        self, spark: SparkSession, epoch_id: int, min_dirs: int | None
+    ) -> bool:
+        """Recover a crashed fold, then fold the committed generations
+        below ``epoch_id`` once ``min_dirs`` accumulate (``None`` or
+        ``0``: recover only)."""
+        return fold_epoch_dirs(
+            spark, self.root, below_epoch=epoch_id, min_dirs=min_dirs,
+            partition_col=self.partition_col, merge=self.merge,
         )
-    return [e for e in all_epochs if e < epoch_id]
+
+    def history(self, spark: SparkSession, epoch_id: int) -> list[int]:
+        """Committed epoch ids strictly below ``epoch_id`` (those with
+        data, when partitioned); raises if an epoch above it exists."""
+        all_epochs = fs_epoch_ids(spark, self.root)
+        ahead = [e for e in all_epochs if e > epoch_id]
+        if ahead:
+            raise ValueError(
+                f"{self.noun} at {self.root} already holds epochs "
+                f"{sorted(ahead)} above the current epoch {epoch_id} — "
+                "the streaming checkpoint was reset against a populated "
+                "store. Resume with the original checkpoint, or wipe the "
+                "store (and its outputs) to start over; "
+                f"{self.overwrite_consequence}."
+            )
+        below = [e for e in all_epochs if e < epoch_id]
+        return self.with_data(spark, below) if self.partition_col else below
+
+    def with_data(self, spark: SparkSession, epochs: list[int]) -> list[int]:
+        """Of ``epochs``, those whose dir holds data (fsutil
+        ``fs_holds_data``)."""
+        return [e for e in epochs if fs_holds_data(spark, self.path(e))]
+
+    def read(self, spark: SparkSession, epochs: list[int]) -> DataFrame:
+        """One read over the ``epochs`` dirs; a partitioned sub-dir
+        also surfaces its partition column (and ``epoch``)."""
+        reader = spark.read
+        if self.partition_col:
+            reader = reader.option("basePath", self.root)
+        return reader.parquet(*[self.path(e) for e in epochs])
+
+    def write(
+        self, df: DataFrame, epoch_id: int, n_parts: int | None = None
+    ) -> None:
+        """Overwrite ``epoch=<epoch_id>`` with ``df``; a partitioned
+        sub-dir writes one file per value (in ``n_parts`` tasks when
+        given)."""
+        if self.partition_col:
+            writer = partitioned_overwrite(
+                df, self.partition_col, n_parts=n_parts
+            )
+        else:
+            writer = df.write.mode("overwrite")
+        writer.parquet(self.path(epoch_id))
 
 
 def marker_positive_int(row: dict, field: str, store_path: str, noun: str) -> int:
@@ -172,26 +248,6 @@ def marker_positive_int(row: dict, field: str, store_path: str, noun: str) -> in
             f"{field} — wipe the store and re-ingest."
         )
     return int(row[field])
-
-
-def epochs_with_partition_data(
-    spark: SparkSession, root: str, epochs: list, prefix: str
-) -> list:
-    """Of ``epochs``, those whose ``epoch=N`` dir actually holds
-    ``<prefix>…`` partition subdirs. An epoch all of whose rows were
-    struck/dropped writes only its ``_SUCCESS`` commit marker
-    (``partitionBy`` emits no files for zero rows) — reading a
-    file-less dir fails schema inference, so every read of a
-    bucket-partitioned store filters here (hoisted from the link-graph
-    store when the sig store adopted the same layout, round 12)."""
-    return [
-        e
-        for e in epochs
-        if any(
-            n.startswith(prefix)
-            for n in fs_list_names(spark, f"{root}/epoch={e}")
-        )
-    ]
 
 
 _OUT_MARKER_SCHEMA = "out_version INT, columns STRING"

@@ -541,10 +541,10 @@ def stream_export_training_set(
                 order_col=order_col,
                 drop_cols=(order_col,) if order_col != id_col else (),
                 fmt="jsonl",
-                # no folding on the JSONL output: epochs here are
-                # trainer-consumed shards (read once, sequentially),
-                # not a history-probe path, and fold's rewrite reads
-                # parquet. The signature store underneath still folds.
+                # no folding on the JSONL output (pack_epoch folds
+                # parquet only): epochs here are trainer-consumed
+                # shards (read once, sequentially), not a history-probe
+                # path. The signature store underneath still folds.
                 fold_output_after=None,
                 split_col="split",
                 splits=labels,

@@ -17,10 +17,11 @@ Per epoch:
   :func:`..operators.dedup.hamming_pairs` (epoch hashes vs stored
   survivor hashes) — history stores 8-byte hashes, never payloads, so
   the store is ~16 B/image however large the images are;
-- append the epoch's survivor hashes to the store. Epoch-suffixed
-  overwrites keep replays idempotent (the shared ``_store`` protocol:
-  format marker pinning codec + radius + grid, strictly-below history
-  reads, checkpoint-reset refusal, tiered folds with crash recovery).
+- append the epoch's survivor hashes to the store, one flat
+  :class:`._store.EpochDirs` sub-dir (epoch-suffixed overwrites,
+  strictly-below history reads, checkpoint-reset refusal, tiered
+  folds with crash recovery) behind a format marker pinning codec +
+  radius + grid.
 
 Earliest-epoch-wins, like every incremental dedup here: an image
 within ``max_hamming`` of any already-accepted SURVIVOR is dropped;
@@ -45,7 +46,7 @@ from ..multimodal.image_dedup import HASH_H, HASH_W, dhash_media
 from ..operators.dedup import hamming_pairs
 from ..operators.graph import component_survivors
 from ..sources.sinks import check_fold_threshold
-from ._store import run_epochs
+from ._store import EpochDirs, run_epochs
 
 #: Bump when the dHash construction (grid, kernel family) or store
 #: layout changes incompatibly; stores refuse to mix formats.
@@ -163,12 +164,13 @@ def image_dedup_epoch(
     store; undecodable images survive with nothing stored. Returns
     True iff the epoch had rows."""
     codec = _validate_or_init_store(spark, store_path, codec, max_hamming)
-    from ..sources.sinks import fold_epoch_dirs
-
-    fold_epoch_dirs(
-        spark, f"{store_path}/hashes",
-        below_epoch=epoch_id, min_dirs=fold_store_after,
+    hashes = EpochDirs(
+        f"{store_path}/hashes", "image-hash store",
+        "proceeding would overwrite committed epoch hashes one by "
+        "one while deduping only against the remnant — silently "
+        "readmitting perceptual duplicates",
     )
+    hashes.fold(spark, epoch_id, fold_store_after)
     mark = pool_mark()
     try:
         batch = tracked_persist(batch_df)
@@ -187,18 +189,9 @@ def image_dedup_epoch(
         losers = component_survivors(pairs).withColumnRenamed("id", "media_id")
         kept_h = hashed.join(losers, "media_id", "left_anti")
 
-        from ._store import committed_epochs_below
-
-        hist_epochs = committed_epochs_below(
-            spark, f"{store_path}/hashes", epoch_id, "image-hash store",
-            "proceeding would overwrite committed epoch hashes one by "
-            "one while deduping only against the remnant — silently "
-            "readmitting perceptual duplicates",
-        )
+        hist_epochs = hashes.history(spark, epoch_id)
         if hist_epochs:
-            hist = spark.read.parquet(
-                *[f"{store_path}/hashes/epoch={e}" for e in hist_epochs]
-            )
+            hist = hashes.read(spark, hist_epochs)
             dup_ids = (
                 hamming_pairs(
                     kept_h, "media_id", "dhash", max_hamming, against=hist,
@@ -224,9 +217,7 @@ def image_dedup_epoch(
         )
         # store only COMPARABLE survivors: NULL-hash (undecodable) rows
         # survive the output but cannot suppress future duplicates
-        kept_h.filter(F.col("dhash").isNotNull()).write.mode(
-            "overwrite"
-        ).parquet(f"{store_path}/hashes/epoch={epoch_id}")
+        hashes.write(kept_h.filter(F.col("dhash").isNotNull()), epoch_id)
         return True
     finally:
         release_since(mark)

@@ -40,12 +40,13 @@ exactly what rank needs (the deduped edge relation, never payloads):
   decoupled from ingest (the standard batch-layer cadence: rank every
   K epochs, not per batch);
 - store integrity follows the package protocol (streaming/_store.py):
-  format marker pinning the layout version AND the bucketing,
-  strictly-below history reads, checkpoint-reset-ahead refusal,
-  epoch-suffixed replay-idempotent overwrites, tiered LSM-style
-  folding (sources/sinks.py fold_epoch_dirs, bucket-partition-aware)
-  so the history probe never degrades into a
-  thousands-of-small-files scan.
+  a format marker pins the layout version AND the bucketing, and
+  ``edges`` is one bucket-partitioned :class:`._store.EpochDirs`
+  sub-dir — strictly-below history reads that skip all-struck epochs,
+  checkpoint-reset-ahead refusal, epoch-suffixed replay-idempotent
+  overwrites (one file per bucket, static overwrite), tiered
+  LSM-style folding that keeps the bucket layout, so the history
+  probe never degrades into a thousands-of-small-files scan.
 
 Scale shape (the 100 TB story): the per-epoch work is one distinct
 over the batch plus one PRUNED, UNSHUFFLED columnar scan of the
@@ -75,12 +76,7 @@ from ..fsutil import (
     fs_write_json_row,
 )
 from ..sources.sinks import check_fold_threshold
-from ._store import (
-    committed_epochs_below,
-    epochs_with_partition_data,
-    run_epochs,
-    validate_or_init_marker,
-)
+from ._store import EpochDirs, run_epochs, validate_or_init_marker
 
 #: Bump when the edge layout changes incompatibly. v2 = hash-bucketed
 #: epoch dirs (round 12); v1 stores refuse with a wipe/re-ingest hint.
@@ -146,12 +142,13 @@ def _bucket_of(src: F.Column, dst: F.Column, n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(src, dst), F.lit(n_buckets)).cast("int")
 
 
-def _epochs_with_data(
-    spark: SparkSession, root: str, epochs: list[int]
-) -> list[int]:
-    """Epoch dirs that actually hold bucket partitions (shared
-    partitioned-store rule — see _store.epochs_with_partition_data)."""
-    return epochs_with_partition_data(spark, root, epochs, "bucket=")
+def _edges(store_path: str) -> EpochDirs:
+    """The bucket-partitioned ``edges`` sub-dir."""
+    return EpochDirs(
+        f"{store_path}/edges", "link-graph store",
+        "edges re-ingested after a wipe are struck from scratch",
+        partition_col="bucket",
+    )
 
 
 def page_link_edges(
@@ -206,24 +203,12 @@ def link_graph_epoch(
     ``broadcast_strike_max_rows`` distinct edges, runs broadcast
     semi-then-anti (store side never shuffles); larger batches take
     the bucketed sort-merge anti-join."""
-    from ..sources.sinks import fold_epoch_dirs
-
     b = _store_n_buckets(spark, store_path, n_buckets)
-    root = f"{store_path}/edges"
-    fold_epoch_dirs(
-        spark,
-        root,
-        epoch_id,
-        min_dirs=fold_store_after,
-        partition_cols=("bucket",),
-    )
-    history_epochs = committed_epochs_below(
-        spark,
-        root,
-        epoch_id,
-        "link-graph store",
-        "edges re-ingested after a wipe are struck from scratch",
-    )
+    store = _edges(store_path)
+    store.fold(spark, epoch_id, fold_store_after)
+    # listed before anything is written, even for an empty batch: the
+    # reset-ahead refusal must fire before this epoch's overwrite
+    history_epochs = store.history(spark, epoch_id)
     from ..caching import release_these, tracked_persist
 
     batch_p = tracked_persist(
@@ -247,15 +232,10 @@ def link_graph_epoch(
     try:
         edges = batch_p
         n_batch = edges.count()
-        history_epochs = _epochs_with_data(spark, root, history_epochs)
         if history_epochs and n_batch > 0:
-            # basePath: the epoch dirs hold bucket= partition subdirs,
-            # so a multi-dir read needs the table root declared (epoch
-            # itself also surfaces as a partition column; dropped by
-            # selection)
-            history = spark.read.option("basePath", root).parquet(
-                *[f"{root}/epoch={e}" for e in history_epochs]
-            ).select("src", "dst", "bucket")
+            history = store.read(spark, history_epochs).select(
+                "src", "dst", "bucket"
+            )
             if n_batch <= broadcast_strike_max_rows:
                 # prune the store scan to the batch's buckets
                 # (directory-level partition pruning — a micro-batch of
@@ -290,19 +270,9 @@ def link_graph_epoch(
                 edges = edges.join(
                     history, ["bucket", "src", "dst"], "left_anti"
                 )
-        # one file per bucket per epoch: repartition ON the bucket value
-        # so partitionBy doesn't fan every task out into every bucket
-        # dir. Static overwrite per-write: a replayed epoch occupying
-        # fewer buckets must TRUNCATE the dir, not merge into it (a
-        # session with a dynamic partitionOverwriteMode default would
-        # otherwise leave stale bucket dirs — phantom committed edges)
-        edges.repartition(b, F.col("bucket")).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "static").partitionBy(
-            "bucket"
-        ).parquet(f"{root}/epoch={epoch_id}")
-        if _epochs_with_data(spark, root, [epoch_id]):
-            n_new = spark.read.parquet(f"{root}/epoch={epoch_id}").count()
+        store.write(edges, epoch_id, n_parts=b)
+        if store.with_data(spark, [epoch_id]):
+            n_new = spark.read.parquet(store.path(epoch_id)).count()
         else:
             n_new = 0
     finally:
@@ -315,7 +285,6 @@ def stored_edges(spark: SparkSession, store_path: str) -> DataFrame:
     data; ``(src, dst)`` columns — the bucket partition column is an
     internal layout detail and is dropped here). Raises if the store
     was never initialized."""
-    root = f"{store_path}/edges"
     if not fs_exists(spark, f"{store_path}/format"):
         raise ValueError(
             f"no link-graph store at {store_path} (missing format marker)"
@@ -324,13 +293,11 @@ def stored_edges(spark: SparkSession, store_path: str) -> DataFrame:
     # dirs carry no bucket= partitions, so without this it would read
     # as an EMPTY edge relation instead of refusing (round-12 review)
     _store_n_buckets(spark, store_path)
-    epochs = _committed_epochs(spark, root)
-    epochs = _epochs_with_data(spark, root, epochs)
+    store = _edges(store_path)
+    epochs = store.with_data(spark, _committed_epochs(spark, store.root))
     if not epochs:
         return spark.createDataFrame([], "src string, dst string")
-    return spark.read.option("basePath", root).parquet(
-        *[f"{root}/epoch={e}" for e in epochs]
-    ).select("src", "dst")
+    return store.read(spark, epochs).select("src", "dst")
 
 
 def _committed_epochs(spark: SparkSession, root: str) -> list[int]:

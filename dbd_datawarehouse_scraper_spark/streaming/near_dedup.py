@@ -25,9 +25,9 @@ shape (and this module's):
   accepts and false drops within ~2σ — round-3 judge item #7; 128
   longs/doc is ~1 KB, still negligible next to the corpus text);
 - append the epoch's SURVIVORS (rows, signatures, band buckets) to the
-  store. Epoch-suffixed subdirectories written with overwrite make
-  replays idempotent: a failed epoch rewrites its own output instead
-  of duplicating rows (same pattern as micro_batch.py's two-sink).
+  store: ``sigs`` and ``bands`` are each one
+  :class:`._store.EpochDirs` sub-dir (epoch-suffixed overwrites,
+  strictly-below history, reset-ahead refusal, folding).
 
 Store integrity (round-4 hardening):
 
@@ -60,8 +60,9 @@ Store layout v2 (round 12 — the round-11 verdict's striking-cost
 caveat, applied here after the link store): the sigs store — the HEAVY
 side, ~1 KB of signature per historical doc vs the band index's three
 narrow columns — is hash-bucket-partitioned on the doc id
-(``sigs/epoch=N/sbucket=B``, bucket count pinned in the format
-marker), and the per-epoch verify reads ONLY the buckets the epoch's
+(``sigs/epoch=N/sbucket=B``: ``EpochDirs(partition_col="sbucket")``,
+bucket count pinned in the format marker; the bands sub-dir is flat),
+and the per-epoch verify reads ONLY the buckets the epoch's
 candidates fall in: sig bytes scanned per epoch track the candidate
 set, not the accumulated store. The band-index scan stays full (its
 buckets are data-dependent and dense) but streams through a broadcast
@@ -84,7 +85,7 @@ from ..fsutil import fs_exists
 from ..operators.dedup import lsh_band_buckets, minhash_lsh_pairs_and_sigs
 from ..operators.graph import component_survivors
 from ..sources.sinks import check_fold_threshold
-from ._store import run_epochs
+from ._store import EpochDirs, run_epochs
 
 #: Bump when the signature encoding (hash family, band hashing, or
 #: store layout) changes incompatibly; stores refuse to mix formats.
@@ -308,16 +309,18 @@ def near_dedup_epoch(
     b = _validate_or_init_store(
         spark, store_path, num_hashes, bands, k, n_buckets
     )
-    from ..sources.sinks import fold_epoch_dirs
-
-    for sub, pcols in (("sigs", ("sbucket",)), ("bands", ())):
-        # the sigs fold is partition-aware so folded generations keep
-        # the bucket layout pruned reads depend on
-        fold_epoch_dirs(
-            spark, f"{store_path}/{sub}",
-            below_epoch=epoch_id, min_dirs=fold_store_after,
-            partition_cols=pcols,
-        )
+    overwrite = (
+        "proceeding would overwrite committed epoch signatures one by "
+        "one while deduping only against the remnant — silently "
+        "readmitting duplicates"
+    )
+    sigs = EpochDirs(
+        f"{store_path}/sigs", "signature store", overwrite,
+        partition_col="sbucket",
+    )
+    band_idx = EpochDirs(f"{store_path}/bands", "signature store", overwrite)
+    for store in (sigs, band_idx):
+        store.fold(spark, epoch_id, fold_store_after)
     # scoped release: this function is public and composable — a global
     # release_caches() would clobber persists/scratch dirs a CALLER
     # holds behind its own live plans (round-5 review)
@@ -352,33 +355,18 @@ def near_dedup_epoch(
         new_banded = _banded(sig, num_hashes, bands)
 
         # against history: band-bucket candidates, estimated verify.
-        # History presence is an EXPLICIT existence check — only genuine
+        # History presence is an EXPLICIT listing — only genuine
         # absence (first epoch, or a replayed crashed first epoch) skips
         # this leg; a corrupted or unreadable store raises out of the
         # epoch instead of silently admitting duplicates (round-3 judge
         # defect #1: the old `except Exception: have_history = False`).
-        # History = committed epochs STRICTLY BELOW the current one.
-        # Reading the whole store dir would be a replay bug: after a crash
-        # between the store write and Spark's streaming commit, the
-        # replayed epoch's OWN signatures are already under epoch=N — a
-        # whole-dir read would estimate every replayed document at J=1
-        # against itself and silently drop the entire epoch (round-5
-        # catch, test-pinned). Folded generations are named by their max
-        # folded epoch, so the `< epoch_id` rule covers them too. The
-        # explicit existence check (round-3 defect #1) stays: a real FS
-        # error raises, only genuine absence skips the leg.
-        from ._store import committed_epochs_below
-
-        hist_epochs = committed_epochs_below(
-            spark, f"{store_path}/bands", epoch_id, "signature store",
-            "proceeding would overwrite committed epoch signatures one "
-            "by one while deduping only against the remnant — silently "
-            "readmitting duplicates",
-        )
+        # A replayed epoch reading its own signatures back would
+        # estimate every document at J=1 against itself and drop the
+        # whole epoch (round-5 catch, test-pinned) — hence strictly
+        # below (EpochDirs).
+        hist_epochs = band_idx.history(spark, epoch_id)
         if hist_epochs:
-            hist_bands = spark.read.parquet(
-                *[f"{store_path}/bands/epoch={e}" for e in hist_epochs]
-            )
+            hist_bands = band_idx.read(spark, hist_epochs)
             # micro-batch path: broadcast the batch's banded projection
             # so the band index STREAMS through its scan probing the
             # broadcast — never shuffled (n_batch bounds |kept|, so
@@ -405,17 +393,11 @@ def near_dedup_epoch(
                 # candidates fall in: directory-level partition pruning
                 # on the heavy side of the store (the _old set is the
                 # exact key set the join needs, so the pruned read is
-                # exact by construction). Epochs whose every row was
-                # struck hold only _SUCCESS (partitionBy writes no
-                # files for zero rows) — filtered before the read.
-                from ._store import epochs_with_partition_data
-
-                sig_root = f"{store_path}/sigs"
-                sig_epochs = epochs_with_partition_data(
-                    spark, sig_root, hist_epochs, "sbucket="
-                )
-                hist_sigs = spark.read.option("basePath", sig_root).parquet(
-                    *[f"{sig_root}/epoch={e}" for e in sig_epochs]
+                # exact by construction). The sig and band epochs are
+                # written and folded together, so the band history
+                # names the sig history too.
+                hist_sigs = sigs.read(
+                    spark, sigs.with_data(spark, hist_epochs)
                 )
                 # skip the bucket-probe job when the candidate count
                 # guarantees near-all buckets are hit (the link store's
@@ -465,20 +447,12 @@ def near_dedup_epoch(
             survivors.select(F.col(id_col).alias("_id")), "_id"
         )
         # bucket-partitioned on the doc id so future epochs' verify
-        # joins prune their sig reads; repartition ON the bucket value
-        # (one file per bucket per epoch), static overwrite so a
-        # replayed epoch occupying fewer buckets truncates rather than
-        # merging under an ambient dynamic partitionOverwriteMode
-        surv_sig.withColumn(
-            "sbucket", _sbucket_of(F.col("_id"), b)
-        ).repartition(b, F.col("sbucket")).write.mode("overwrite").option(
-            "partitionOverwriteMode", "static"
-        ).partitionBy("sbucket").parquet(
-            f"{store_path}/sigs/epoch={epoch_id}"
+        # joins prune their sig reads
+        sigs.write(
+            surv_sig.withColumn("sbucket", _sbucket_of(F.col("_id"), b)),
+            epoch_id, n_parts=b,
         )
-        _banded(surv_sig, num_hashes, bands).write.mode("overwrite").parquet(
-            f"{store_path}/bands/epoch={epoch_id}"
-        )
+        band_idx.write(_banded(surv_sig, num_hashes, bands), epoch_id)
         return True
     finally:
         release_since(mark)

@@ -31,15 +31,12 @@ Store integrity mirrors streaming/near_dedup.py, same rationale:
   different chunk size would merge apples with oranges silently.
   ``min_docs`` is a read-time threshold (not baked into stored data),
   so it may vary per run;
-- history = committed epochs STRICTLY BELOW the current one (a
-  replayed epoch's own delta is already under ``epoch=N`` — reading
-  the whole dir would double-count the replayed batch and could flip
-  threshold decisions);
-- epoch-suffixed overwrites keep replays idempotent; committed
-  generations fold via sources/sinks.py ``fold_epoch_dirs`` with an
-  AGGREGATING merge (round 12): each folded generation is the
-  groupBy-sum of its member deltas — one row per segment hash instead
-  of one per (epoch, hash). Without the merge, folding bounded the
+- the ``freq`` deltas are one :class:`._store.EpochDirs` sub-dir
+  (strictly-below history, reset-ahead refusal, epoch-suffixed
+  overwrites) whose committed generations fold with an AGGREGATING
+  merge (round 12): each folded generation is the groupBy-sum of its
+  member deltas — one row per segment hash instead of one per (epoch,
+  hash). Without the merge, folding bounded the
   store's FILE count but not its ROW count, and the per-epoch
   cumulative re-aggregation still shuffled every delta ever written
   (the round-11 verdict's striking-cost class); per-epoch sums are
@@ -55,7 +52,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import pool_mark, release_since, tracked_persist
 from ..sources.sinks import check_fold_threshold
-from ._store import run_epochs
+from ._store import EpochDirs, run_epochs
 
 #: Bump when the segment hashing or store layout changes incompatibly.
 STORE_FORMAT_VERSION = 1
@@ -143,15 +140,15 @@ def segment_dedup_epoch(
     the store. Epoch-suffixed overwrites keep replays idempotent.
     Releases exactly the caches it pins (pool-scoped). Returns True iff the epoch had rows."""
     _validate_or_init_store(spark, store_path, mode, k)
-    from ..sources.sinks import fold_epoch_dirs
-
     # the aggregating merge keeps folded generations at one row per
     # segment hash
-    fold_epoch_dirs(
-        spark, f"{store_path}/freq",
-        below_epoch=epoch_id, min_dirs=fold_store_after,
+    freq = EpochDirs(
+        f"{store_path}/freq", "segment store",
+        "overwriting committed frequency deltas silently readmits "
+        "boilerplate",
         merge=_merge_freq,
     )
+    freq.fold(spark, epoch_id, fold_store_after)
     # scoped release: a composable epoch function must never release a
     # caller's pinned state (round-5 review)
     mark = pool_mark()
@@ -173,27 +170,11 @@ def segment_dedup_epoch(
             .agg(F.count_distinct(F.col("_sd_id")).alias("doc_count"))
         )
 
-        # cumulative counts: committed history deltas (strictly below this
-        # epoch) + this epoch's own — see module docstring for why the
-        # replay window must be excluded from the history read. An epoch
-        # ABOVE the current id in the store means the checkpoint was reset
-        # against a populated store: the new run would overwrite committed
-        # deltas epoch by epoch and silently undercount boilerplate — fail
-        # loudly instead (streaming epoch ids are monotone; a legitimate
-        # replay is only ever of the store's MAX epoch).
-        freq_root = f"{store_path}/freq"
-        from ._store import committed_epochs_below
-
-        hist_epochs = committed_epochs_below(
-            spark, freq_root, epoch_id, "segment store",
-            "overwriting committed frequency deltas silently readmits "
-            "boilerplate",
-        )
+        # cumulative counts: committed history deltas + this epoch's own
+        hist_epochs = freq.history(spark, epoch_id)
         total = epoch_freq
         if hist_epochs:
-            hist = spark.read.parquet(
-                *[f"{freq_root}/epoch={e}" for e in hist_epochs]
-            )
+            hist = freq.read(spark, hist_epochs)
             # only hashes present in THIS batch can affect the epoch's
             # output (the verdict joins back against the batch's
             # exploded segments, and the store delta below is
@@ -221,7 +202,7 @@ def segment_dedup_epoch(
             .withColumnRenamed("_clean", text_col)
         )
         out.write.mode("overwrite").parquet(f"{out_path}/epoch={epoch_id}")
-        epoch_freq.write.mode("overwrite").parquet(f"{freq_root}/epoch={epoch_id}")
+        freq.write(epoch_freq, epoch_id)
         return True
     finally:
         release_since(mark)

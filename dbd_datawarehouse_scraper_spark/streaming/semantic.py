@@ -28,12 +28,12 @@ epoch forms under the same store pattern):
   "history is signatures, not text" bound as the near-dup store: at
   the SemDeDup working point the survivor set is the deduped corpus'
   embeddings, ~256 B/row at 64-dim float64;
-- epoch-suffixed overwrites make replays idempotent; history reads
-  cover epochs STRICTLY BELOW the current one (a replayed epoch never
-  sees its own half-written output); epochs ABOVE the current id mean
-  a reset checkpoint over a populated store and refuse loudly; folds
-  are tiered via ``sources.sinks.fold_epoch_dirs`` with crash
-  recovery, all inherited from the near-dup store pattern.
+- the store is one cluster-PARTITIONED :class:`._store.EpochDirs`
+  sub-dir (``vecs/epoch=N/cluster=c``): the history read filters on
+  the batch's clusters, and as a partition column that filter is
+  satisfied by directory pruning. Epoch-suffixed overwrites,
+  strictly-below history reads, the reset-ahead refusal and tiered
+  folds with crash recovery all come from that one type.
 
 Cross-epoch comparison cost per row is O(|cluster survivors|·d) — the
 same per-row bound as the batch operator, reached incrementally. The
@@ -54,7 +54,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..caching import pool_mark, release_since, tracked_persist
 from ..fsutil import fs_exists, fs_read_json_row, fs_write_json_row
 from ..sources.sinks import check_fold_threshold
-from ._store import run_epochs
+from ._store import EpochDirs, run_epochs
 
 #: Bump when the store layout, assignment kernel, or sweep semantics
 #: change incompatibly; stores refuse to mix formats. v2 = vecs epoch
@@ -193,17 +193,18 @@ def semantic_dedup_epoch(
         _assign_to_centers,
         _greedy_cosine_survivors,
     )
-    from ..sources.sinks import fold_epoch_dirs
     from ._store import validate_or_init_out_schema
 
     centers = _validate_or_init_store(
         spark, store_path, centers, threshold, sub_splits, id_col, vec_col
     )
-    fold_epoch_dirs(
-        spark, f"{store_path}/vecs",
-        below_epoch=epoch_id, min_dirs=fold_store_after,
-        partition_cols=("cluster",),
+    vecs = EpochDirs(
+        f"{store_path}/vecs", "semantic store",
+        "overwriting committed epoch vectors would silently readmit "
+        "semantic duplicates",
+        partition_col="cluster",
     )
+    vecs.fold(spark, epoch_id, fold_store_after)
 
     mark = pool_mark()
     try:
@@ -226,27 +227,8 @@ def semantic_dedup_epoch(
             .withColumn("_hist", F.lit(0))
         )
 
-        # history = committed epochs STRICTLY BELOW the current one; epochs
-        # above mean a reset checkpoint over a populated store — refuse.
-        from ._store import committed_epochs_below
-
-        hist_epochs = committed_epochs_below(
-            spark, f"{store_path}/vecs", epoch_id, "semantic store",
-            "overwriting committed epoch vectors would silently readmit "
-            "semantic duplicates",
-        )
-
+        hist_epochs = vecs.history(spark, epoch_id)
         union = assigned
-        if hist_epochs:
-            from ._store import epochs_with_partition_data
-
-            # epochs whose every row was struck hold only _SUCCESS
-            # (partitionBy emits no files for zero rows) — filter
-            # before the multi-dir read or schema inference fails
-            vecs_root = f"{store_path}/vecs"
-            hist_epochs = epochs_with_partition_data(
-                spark, vecs_root, hist_epochs, "cluster="
-            )
         if hist_epochs:
             # bounded driver collect: ≤ n_centers ints (a store parameter)
             needed = [
@@ -259,9 +241,7 @@ def semantic_dedup_epoch(
             # vector bytes of the clusters the batch touched, however
             # many epochs the store has accumulated
             hist = (
-                spark.read.option("basePath", vecs_root).parquet(
-                    *[f"{vecs_root}/epoch={e}" for e in hist_epochs]
-                )
+                vecs.read(spark, hist_epochs)
                 .filter(F.col("cluster").isin(needed))
                 .select(
                     "cluster",
@@ -311,23 +291,13 @@ def semantic_dedup_epoch(
             union.groupBy("cluster", "_sub").applyInPandas(_sweep, out_schema)
         )
         survivors.write.mode("overwrite").parquet(f"{out_path}/epoch={epoch_id}")
-        # cluster-PARTITIONED store layout (v2): the history read
-        # filters on the batch's clusters, and as a partition column
-        # that filter can only be satisfied by directory pruning (v1's
-        # sortWithinPartitions row-group-stats layout was a soft
-        # guarantee a fold could lose). Repartition ON the cluster so
-        # partitionBy doesn't fan every task into every cluster dir;
-        # static overwrite so a replayed epoch occupying fewer clusters
-        # truncates rather than merging under an ambient dynamic
-        # partitionOverwriteMode.
-        survivors.select(
-            "cluster",
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_vec"),
-        ).repartition(F.col("cluster")).write.mode("overwrite").option(
-            "partitionOverwriteMode", "static"
-        ).partitionBy("cluster").parquet(
-            f"{store_path}/vecs/epoch={epoch_id}"
+        vecs.write(
+            survivors.select(
+                "cluster",
+                F.col(id_col).alias("_id"),
+                F.col(vec_col).cast("array<double>").alias("_vec"),
+            ),
+            epoch_id,
         )
         return True
     finally:

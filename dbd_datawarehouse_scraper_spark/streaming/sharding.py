@@ -73,8 +73,8 @@ from ..fsutil import (
     fs_write_json_row,
 )
 from ..operators.sharding import pack_shards
-from ..sources.sinks import check_fold_threshold, fold_epoch_dirs, jsonl_sink
-from ._store import run_epochs
+from ..sources.sinks import check_fold_threshold, jsonl_sink
+from ._store import EpochDirs, run_epochs
 
 _CURSOR_SCHEMA = (
     "epoch_id LONG, start_offset LONG, next_offset LONG, budget LONG"
@@ -218,7 +218,17 @@ def pack_epoch(
     split column itself is not written. A label with no rows this
     epoch still gets its (empty) epoch dir and a cursor advanced by 0.
     All labels' token totals come from one aggregate over the packed
-    relation."""
+    relation.
+
+    Folding needs parquet output: ``fmt="jsonl"`` with a positive
+    ``fold_output_after`` is refused before anything is folded or
+    written (the flat parquet fold cannot read the ``shard=``-partitioned
+    JSONL dirs, and every replay would fail the same way)."""
+    if fmt == "jsonl" and fold_output_after:
+        raise ValueError(
+            "pack_epoch folds parquet output only: fmt='jsonl' needs "
+            f"fold_output_after=None or 0, got {fold_output_after}"
+        )
     if split_col is None:
         streams = {None: (out_path, state_path)}
     else:
@@ -229,10 +239,15 @@ def pack_epoch(
             )
             for label in splits
         }
-    for out, state in streams.values():
-        fold_epoch_dirs(
-            spark, out, below_epoch=epoch_id, min_dirs=fold_output_after,
+    outs = {
+        label: EpochDirs(
+            out, "shard output",
+            "overwriting committed epochs would renumber packed shards",
         )
+        for label, (out, _) in streams.items()
+    }
+    for label, (_, state) in streams.items():
+        outs[label].fold(spark, epoch_id, fold_output_after)
         if keep_cursor_snapshots is not None:
             snaps = sorted(
                 int(n.rsplit("-", 1)[1])
@@ -265,17 +280,14 @@ def pack_epoch(
             totals = dict(
                 packed.groupBy(split_col).agg(total).collect()
             )
-        for label, (out, _) in streams.items():
+        for label, out in outs.items():
             rows = packed
             if split_col is not None:
                 rows = packed.filter(F.col(split_col) == label).drop(split_col)
             if fmt == "jsonl":
-                jsonl_sink(
-                    rows, f"{out}/epoch={epoch_id}",
-                    partition_by=(shard_col,),
-                )
+                jsonl_sink(rows, out.path(epoch_id), partition_by=(shard_col,))
             else:
-                rows.write.mode("overwrite").parquet(f"{out}/epoch={epoch_id}")
+                out.write(rows, epoch_id)
         # advance + promote each cursor (promotion = commit point), only
         # after every output is written; the epoch key makes
         # re-promotion on replay a no-op rewrite

@@ -34,10 +34,10 @@ operator (:func:`..operators.substrings.marked_positions` /
 holds by construction, not by parallel maintenance.
 
 Store integrity mirrors streaming/segments.py: format marker pins
-``min_len`` (window hashes of a different width never combine),
-history reads strictly-below epochs, checkpoint-reset-ahead epochs
-refuse loudly, epoch-suffixed overwrites keep replays idempotent,
-committed generations fold via ``fold_epoch_dirs`` with an
+``min_len`` (window hashes of a different width never combine), and
+the ``winstats`` deltas are one :class:`._store.EpochDirs` sub-dir
+(strictly-below history, reset-ahead refusal, epoch-suffixed
+overwrites) whose committed generations fold with an
 AGGREGATING merge (round 12): each folded generation is the
 groupBy-sum/min of its member deltas — one row per window hash instead
 of one per (epoch, hash). Without the merge, folding bounded the
@@ -57,7 +57,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import pool_mark, release_since, tracked_persist
 from ..sources.sinks import check_fold_threshold
-from ._store import run_epochs
+from ._store import EpochDirs, run_epochs
 
 #: Bump when the window hashing or store layout changes incompatibly.
 STORE_FORMAT_VERSION = 1
@@ -173,15 +173,15 @@ def substring_dedup_epoch(
 
     validate_substring_params(min_len, min_docs)
     _validate_or_init_store(spark, store_path, min_len)
-    from ..sources.sinks import fold_epoch_dirs
-
-    stats_root = f"{store_path}/winstats"
     # the aggregating merge keeps folded generations at one row per
     # window hash
-    fold_epoch_dirs(
-        spark, stats_root, below_epoch=epoch_id,
-        min_dirs=fold_store_after, merge=_merge_stats,
+    stats = EpochDirs(
+        f"{store_path}/winstats", "substring store",
+        "overwriting committed statistics silently readmits "
+        "duplicated spans",
+        merge=_merge_stats,
     )
+    stats.fold(spark, epoch_id, fold_store_after)
     mark = pool_mark()
     try:
         batch = tracked_persist(batch_df)
@@ -214,23 +214,12 @@ def substring_dedup_epoch(
             )
         )
 
-        # cumulative statistics: committed history deltas (STRICTLY below
-        # this epoch — a replayed epoch's own delta already sits under
-        # epoch=N and reading it would double-count) + this epoch's own.
-        # Epochs ABOVE the current id mean a checkpoint reset against a
-        # populated store — refuse loudly (the segments-store rationale).
-        from ._store import committed_epochs_below
-
-        hist_epochs = committed_epochs_below(
-            spark, stats_root, epoch_id, "substring store",
-            "overwriting committed statistics silently readmits "
-            "duplicated spans",
-        )
+        # cumulative statistics: committed history deltas + this
+        # epoch's own
+        hist_epochs = stats.history(spark, epoch_id)
         total = epoch_stats
         if hist_epochs:
-            hist = spark.read.parquet(
-                *[f"{stats_root}/epoch={e}" for e in hist_epochs]
-            )
+            hist = stats.read(spark, hist_epochs)
             # only hashes present in THIS batch can affect the epoch's
             # output (the dup verdicts join back against the batch's
             # occurrences, and the store delta below is epoch-only):
@@ -261,9 +250,7 @@ def substring_dedup_epoch(
             F.col("_ss_out.n_spans").alias("n_spans"),
         )
         out.write.mode("overwrite").parquet(f"{out_path}/epoch={epoch_id}")
-        epoch_stats.write.mode("overwrite").parquet(
-            f"{stats_root}/epoch={epoch_id}"
-        )
+        stats.write(epoch_stats, epoch_id)
         return True
     finally:
         release_since(mark)

@@ -1,13 +1,16 @@
-"""The shared epoch runner (streaming/_store.py run_epochs) and the one
-fold-or-recover call: a structural guard that no module re-grows its
-own stream writer or recovery call, and one crash-replay test run
-against every ``foreachBatch`` wrapper.
+"""The shared epoch runner (streaming/_store.py run_epochs), the one
+fold-or-recover call and the one epoch-dir layout (_store.EpochDirs):
+a structural guard that no module re-grows its own stream writer,
+recovery call, history listing, partitioned read or write, and one
+crash-replay test run against every ``foreachBatch`` wrapper.
 
 The crash-replay test wraps the epoch function through ``run_epochs``
 so that epoch 1 raises once AFTER its writes (a crash between the
 store/output writes and Spark's checkpoint commit), restarts the
 stream on the same checkpoint, and requires every output and store
-row-for-row equal to an uninterrupted run."""
+row-for-row equal to an uninterrupted run. Its ``-fold`` variants run
+every fold-capable wrapper with a fold threshold of 1, so epoch 1
+folds epoch 0 (and its replay re-folds the folded generation)."""
 
 import gzip
 import hashlib
@@ -41,6 +44,19 @@ def test_one_stream_writer_and_one_recovery_caller():
     own writer or calls recovery itself is a copy that can drift."""
     assert _modules_matching(r"writeStream") == ["streaming/_store.py"]
     assert _modules_matching(r"recover_epoch_fold\(") == ["sources/sinks.py"]
+    # the epoch-dir layout (history listing, partitioned read and
+    # write, fold arguments) is spelled out only by EpochDirs
+    for pattern in (
+        r"committed_epochs_below\(",
+        r'"basePath"',
+        r"partitionOverwriteMode",
+        r"fold_epoch_dirs\(",
+    ):
+        in_streaming = {
+            m for m in _modules_matching(pattern) if m.startswith("streaming/")
+        }
+        assert in_streaming <= {"streaming/_store.py"}, (pattern, in_streaming)
+    assert _modules_matching(r"epochs_with_partition_data|_epochs_with_data") == []
 
 
 # ---------------------------------------------------------------- cases
@@ -66,36 +82,36 @@ def _docs_epochs():
     return "doc_id long, text string", [e0, e1]
 
 
-def _segments(spark, src, schema, d, ckpt):
+def _segments(spark, src, schema, d, ckpt, **kw):
     from dbd_datawarehouse_scraper_spark.streaming.segments import (
         stream_segment_dedup,
     )
 
     return stream_segment_dedup(
         file_stream(spark, src, schema, max_files_per_trigger=1),
-        f"{d}/out", f"{d}/store", ckpt, k=4, min_docs=2,
+        f"{d}/out", f"{d}/store", ckpt, k=4, min_docs=2, **kw,
     )
 
 
-def _substrings(spark, src, schema, d, ckpt):
+def _substrings(spark, src, schema, d, ckpt, **kw):
     from dbd_datawarehouse_scraper_spark.streaming.substrings import (
         stream_substring_dedup,
     )
 
     return stream_substring_dedup(
         file_stream(spark, src, schema, max_files_per_trigger=1),
-        f"{d}/out", f"{d}/store", ckpt, min_len=8, min_docs=2,
+        f"{d}/out", f"{d}/store", ckpt, min_len=8, min_docs=2, **kw,
     )
 
 
-def _near_dedup(spark, src, schema, d, ckpt):
+def _near_dedup(spark, src, schema, d, ckpt, **kw):
     from dbd_datawarehouse_scraper_spark.streaming.near_dedup import (
         stream_near_dedup,
     )
 
     return stream_near_dedup(
         file_stream(spark, src, schema, max_files_per_trigger=1),
-        f"{d}/out", f"{d}/store", ckpt, threshold=0.6,
+        f"{d}/out", f"{d}/store", ckpt, threshold=0.6, **kw,
     )
 
 
@@ -120,14 +136,14 @@ def _pack_epochs():
     ]
 
 
-def _pack(spark, src, schema, d, ckpt):
+def _pack(spark, src, schema, d, ckpt, **kw):
     from dbd_datawarehouse_scraper_spark.streaming.sharding import (
         stream_pack_shards,
     )
 
     return stream_pack_shards(
         file_stream(spark, src, schema, max_files_per_trigger=1),
-        f"{d}/out", f"{d}/state", ckpt, budget=100,
+        f"{d}/out", f"{d}/state", ckpt, budget=100, **kw,
     )
 
 
@@ -139,14 +155,14 @@ def _link_epochs():
     ]
 
 
-def _link_graph(spark, src, schema, d, ckpt):
+def _link_graph(spark, src, schema, d, ckpt, **kw):
     from dbd_datawarehouse_scraper_spark.streaming.link_graph import (
         stream_link_graph,
     )
 
     return stream_link_graph(
         file_stream(spark, src, schema, max_files_per_trigger=1),
-        f"{d}/store", ckpt,
+        f"{d}/store", ckpt, **kw,
     )
 
 
@@ -163,7 +179,7 @@ def _vec_epochs():
     ]
 
 
-def _semantic(spark, src, schema, d, ckpt):
+def _semantic(spark, src, schema, d, ckpt, **kw):
     from dbd_datawarehouse_scraper_spark.streaming.semantic import (
         stream_semantic_dedup,
     )
@@ -171,7 +187,7 @@ def _semantic(spark, src, schema, d, ckpt):
     return stream_semantic_dedup(
         file_stream(spark, src, schema, max_files_per_trigger=1),
         f"{d}/out", f"{d}/store", ckpt,
-        centers=[[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]], threshold=0.95,
+        centers=[[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]], threshold=0.95, **kw,
     )
 
 
@@ -194,14 +210,14 @@ def _media_epochs():
     ]
 
 
-def _image(spark, src, schema, d, ckpt):
+def _image(spark, src, schema, d, ckpt, **kw):
     from dbd_datawarehouse_scraper_spark.streaming.image_dedup import (
         stream_image_dedup,
     )
 
     return stream_image_dedup(
         file_stream(spark, src, schema, max_files_per_trigger=1),
-        f"{d}/out", f"{d}/store", ckpt, codec="png",
+        f"{d}/out", f"{d}/store", ckpt, codec="png", **kw,
     )
 
 
@@ -231,6 +247,17 @@ CASES = {
 }
 SLOW_CASES = {"segments", "near_dedup", "export"}
 
+#: fold-capable wrapper → its fold-threshold keyword
+FOLD_KW = {
+    "segments": "fold_store_after",
+    "substrings": "fold_store_after",
+    "near_dedup": "fold_store_after",
+    "semantic": "fold_store_after",
+    "image_dedup": "fold_store_after",
+    "sharding": "fold_output_after",
+    "link_graph": "fold_store_after",
+}
+
 
 # ------------------------------------------------------------ hashing
 
@@ -243,15 +270,16 @@ def _rows(path: str) -> list[str]:
         return [json.dumps(json.loads(line), sort_keys=True) for line in fh]
 
 
-def _tree_digest(root: str) -> dict[str, str]:
+def _tree_digest(root: str, skip: tuple = ()) -> dict[str, str]:
     """Relative dir → sha256 over its sorted data rows and its marker
-    file names. Part-file names carry per-write ids, so rows are
-    compared, not bytes; checksum files are skipped."""
+    file names (except those in ``skip``). Part-file names carry
+    per-write ids, so rows are compared, not bytes; checksum files are
+    skipped."""
     out = {}
     for d, _, files in os.walk(root):
         rows, marks = [], []
         for f in files:
-            if f.startswith("."):
+            if f.startswith(".") or f in skip:
                 continue
             if f.startswith("part-"):
                 rows.extend(_rows(os.path.join(d, f)))
@@ -267,15 +295,24 @@ def _tree_digest(root: str) -> dict[str, str]:
 # ------------------------------------------------------- crash replay
 
 
+def _run_to_end(q) -> None:
+    assert q.awaitTermination(300)
+    assert q.exception() is None
+
+
 @pytest.mark.parametrize(
-    "case",
+    "case,fold",
     [
-        pytest.param(c, marks=pytest.mark.slow) if c in SLOW_CASES else c
-        for c in CASES
+        pytest.param(
+            c, fold, id=f"{c}-fold" if fold else c,
+            marks=[pytest.mark.slow] if c in SLOW_CASES else [],
+        )
+        for fold, cases in ((False, CASES), (True, FOLD_KW))
+        for c in cases
     ],
 )
 def test_crash_after_epoch_writes_replays_to_identical_state(
-    spark, tmp_path, monkeypatch, case
+    spark, tmp_path, monkeypatch, case, fold
 ):
     epochs_of, start = CASES[case]
     mod = importlib.import_module(f"dbd_datawarehouse_scraper_spark.streaming.{case}")
@@ -286,11 +323,10 @@ def test_crash_after_epoch_writes_replays_to_identical_state(
             "append"
         ).parquet(src)
     schema = spark.read.parquet(src).schema
+    kw = {FOLD_KW[case]: 1} if fold else {}
 
     ref = str(tmp_path / "ref")
-    q = start(spark, src, schema, ref, str(tmp_path / "ref_ckpt"))
-    assert q.awaitTermination(300)
-    assert q.exception() is None
+    _run_to_end(start(spark, src, schema, ref, str(tmp_path / "ref_ckpt"), **kw))
 
     crashed = []
     real = _store.run_epochs
@@ -306,15 +342,25 @@ def test_crash_after_epoch_writes_replays_to_identical_state(
 
     monkeypatch.setattr(mod, "run_epochs", crash_once)
     got, ckpt = str(tmp_path / "got"), str(tmp_path / "got_ckpt")
-    q = start(spark, src, schema, got, ckpt)
+    q = start(spark, src, schema, got, ckpt, **kw)
     with pytest.raises(Exception, match="injected crash"):
         q.awaitTermination(300)
     assert crashed == [1]
     # restart on the same checkpoint: epoch 1 replays over its own writes
-    q = start(spark, src, schema, got, ckpt)
-    assert q.awaitTermination(300)
-    assert q.exception() is None
+    _run_to_end(start(spark, src, schema, got, ckpt, **kw))
 
     want = _tree_digest(ref)
     assert any("epoch=1" in k for k in want), want
     assert _tree_digest(got) == want
+    if fold:
+        assert any(
+            "_FOLDED_GEN" in files for _, _, files in os.walk(ref)
+        ), "epoch 1 did not fold epoch 0"
+        # a fold of one epoch keeps its rows: apart from the fold
+        # markers, outputs and stores equal a run that never folds
+        monkeypatch.undo()
+        off = str(tmp_path / "off")
+        never = {FOLD_KW[case]: None}
+        _run_to_end(start(spark, src, schema, off, str(tmp_path / "off_ckpt"), **never))
+        skip = ("_FOLDED_GEN",)
+        assert _tree_digest(ref, skip) == _tree_digest(off, skip)

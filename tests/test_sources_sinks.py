@@ -861,6 +861,24 @@ def test_pack_epoch_folding_off_still_recovers(spark, off):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_pack_epoch_refuses_folding_jsonl_output(spark, tmp_path):
+    """The output fold rewrites flat parquet and cannot read the
+    ``shard=``-partitioned gzip JSONL epochs: a positive
+    ``fold_output_after`` with ``fmt="jsonl"`` failed at the first
+    fold and again on every replay. It is refused up front, before any
+    fold or write."""
+    from dbd_datawarehouse_scraper_spark.streaming.sharding import pack_epoch
+
+    out, state = str(tmp_path / "out"), str(tmp_path / "state")
+    batch = spark.createDataFrame(
+        [(i, 3) for i in range(3)], "doc_id long, n_tokens long"
+    )
+    with pytest.raises(ValueError, match="fold_output_after"):
+        pack_epoch(spark, batch, 0, out, state, budget=7, fmt="jsonl",
+                   fold_output_after=2)
+    assert not os.path.exists(out) and not os.path.exists(state)
+
+
 def test_negative_fold_threshold_refused_before_any_write(spark, tmp_path):
     """A negative ``min_dirs`` has no meaning: ``fold_epoch_dirs``
     raises a ValueError naming it before writing anything (no partial
