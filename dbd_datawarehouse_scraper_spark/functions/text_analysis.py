@@ -421,6 +421,30 @@ def _dup_frac(total: str, uniq: str):
     )
 
 
+def _tfidf_score_q() -> Column:
+    """The TF-IDF score ``tf · ln((N+1)/(df+1))`` quantized to a bigint
+    at 1e-6, over the ``tf``, ``df`` and ``_nd`` (N) columns —
+    :func:`tfidf_topk` and :func:`keyword_topk_suite` both rank on it."""
+    return F.round(
+        F.col("tf").cast("double")
+        * F.log((F.col("_nd") + 1.0) / (F.col("df").cast("double") + 1.0))
+        * 1e6
+    ).cast("long")
+
+
+def _bm25_score_q(k1: float, b: float) -> Column:
+    """The BM25 score (see :func:`bm25_topk`) quantized to a bigint at
+    1e-6, over the ``tf``, ``df``, ``dl``, ``_nd`` (N) and ``_tot``
+    (Σdl) columns — :func:`bm25_term_scores` and
+    :func:`keyword_topk_suite` both rank on it."""
+    tf = F.col("tf").cast("double")
+    df = F.col("df").cast("double")
+    idf = F.log(1.0 + (F.col("_nd") - df + 0.5) / (df + 0.5))
+    avgdl = F.col("_tot") / F.col("_nd")
+    norm = tf / (tf + k1 * ((1.0 - b) + b * F.col("dl").cast("double") / avgdl))
+    return F.round(idf * norm * 1e6).cast("long")
+
+
 def tfidf_topk(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -473,11 +497,7 @@ def tfidf_topk(
         .crossJoin(F.broadcast(n_docs))
         .withColumn(
             "score_q",
-            F.round(
-                F.col("tf").cast("double")
-                * F.log((F.col("_nd") + 1.0) / (F.col("df").cast("double") + 1.0))
-                * 1e6
-            ).cast("long"),
+            _tfidf_score_q(),
         )
     )
     w = Window.partitionBy(id_col).orderBy(
@@ -605,27 +625,7 @@ def bm25_term_scores(
         .crossJoin(F.broadcast(totals))
         .withColumn(
             "score_q",
-            F.round(
-                F.log(
-                    1.0
-                    + (F.col("_nd") - F.col("df").cast("double") + 0.5)
-                    / (F.col("df").cast("double") + 0.5)
-                )
-                * (
-                    F.col("tf").cast("double")
-                    / (
-                        F.col("tf").cast("double")
-                        + k1
-                        * (
-                            (1.0 - b)
-                            + b
-                            * F.col("dl").cast("double")
-                            / (F.col("_tot") / F.col("_nd"))
-                        )
-                    )
-                )
-                * 1e6
-            ).cast("long"),
+            _bm25_score_q(k1, b),
         )
     )
     if max_df_frac is not None:
@@ -687,35 +687,11 @@ def keyword_topk_suite(
         with_stats.crossJoin(F.broadcast(totals))
         .withColumn(
             "_tfidf_q",
-            F.round(
-                F.col("tf").cast("double")
-                * F.log((F.col("_nd") + 1.0) / (F.col("df").cast("double") + 1.0))
-                * 1e6
-            ).cast("long"),
+            _tfidf_score_q(),
         )
         .withColumn(
             "_bm25_q",
-            F.round(
-                F.log(
-                    1.0
-                    + (F.col("_nd") - F.col("df").cast("double") + 0.5)
-                    / (F.col("df").cast("double") + 0.5)
-                )
-                * (
-                    F.col("tf").cast("double")
-                    / (
-                        F.col("tf").cast("double")
-                        + k1
-                        * (
-                            (1.0 - b)
-                            + b
-                            * F.col("dl").cast("double")
-                            / (F.col("_tot") / F.col("_nd"))
-                        )
-                    )
-                )
-                * 1e6
-            ).cast("long"),
+            _bm25_score_q(k1, b),
         )
     )
     w_tfidf = Window.partitionBy(id_col).orderBy(

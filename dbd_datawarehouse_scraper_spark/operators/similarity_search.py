@@ -13,14 +13,21 @@ Strategies:
   vectors sharing a band. Candidate cost is bucket-collision bound.
 - ``ivf_topk``: KMeans coarse quantizer; probes score only their
   ``nprobe`` nearest lists.
+- ``ivf_build`` / ``ivf_search`` / ``ivf_append`` / ``ivf_stats``: the
+  same IVF as a persisted index — build once, probe many. How the
+  index stores its vectors (``compression``: none / sq8 / pq / opq) is
+  one ``_Codec`` subclass each, holding its fit, its ``quant/`` tables
+  and its encode/decode kernels; the entry points never branch on it.
 - ``embedding_cosine_dedup``: all near-dup pairs above a cosine
   threshold via the same banded LSH, exact-verified.
 
 Both the hashing leg (``banded_buckets_np``: one matmul per Arrow batch
 against a broadcast, seeded Gaussian hyperplane matrix — deterministic
 across runs/partitions) and the scoring leg (``_qcosine_pandas``) are
-numpy-vectorized; interpreted HOF folds survive only in the plain
-``cosine_topk_bruteforce`` reference form.
+numpy-vectorized. Interpreted HOF folds survive in the plain
+``cosine_topk_bruteforce`` reference form and in ``_sq_dist``, the IVF
+distances to the centers (per probe × ``n_lists`` centers, and once
+per stored vector in ``ivf_stats``).
 """
 
 from __future__ import annotations
@@ -290,19 +297,9 @@ def cosine_topk_lsh(
     )
     pv = probes.select(probe_id, probe_vec)
     cv = corpus.select(corpus_id, corpus_vec)
-    scored = (
-        cand.join(pv, probe_id)
-        .join(cv.hint("merge"), corpus_id)
-        .select(
-            probe_id,
-            corpus_id,
-            F.round(
-                _qcosine_pandas(F.col(probe_vec), F.col(corpus_vec)), 6
-            ).alias("cosine_sim"),
-        )
-    )
-    return topk_per_group(
-        scored, [probe_id], [F.col("cosine_sim").desc(), F.col(corpus_id).asc()], k
+    return _rerank(
+        cand.join(pv, probe_id).join(cv.hint("merge"), corpus_id),
+        probe_id, corpus_id, F.col(probe_vec), F.col(corpus_vec), k,
     )
 
 
@@ -328,6 +325,28 @@ def _qcosine_pandas(vec_a: Column, vec_b: Column, scale: float = 1e12) -> Column
         return pd.Series(np.where(denom == 0, 0.0, qd / np.where(denom == 0, 1.0, denom)))
 
     return _score(vec_a, vec_b)
+
+
+def _rerank(
+    cand: DataFrame,
+    probe_id: str,
+    corpus_id: str,
+    probe_vec: Column,
+    cand_vec: Column,
+    k: int,
+) -> DataFrame:
+    """The rerank half of every candidate-generating search (LSH, IVF):
+    exact quantized cosine over the candidate pairs (Arrow-vectorized —
+    the interpreted HOF fold costs ~10× per pair), then top-``k`` per
+    probe, ties broken on the corpus id."""
+    reranked = cand.select(
+        probe_id,
+        corpus_id,
+        F.round(_qcosine_pandas(probe_vec, cand_vec), 6).alias("cosine_sim"),
+    )
+    return topk_per_group(
+        reranked, [probe_id], [F.col("cosine_sim").desc(), F.col(corpus_id).asc()], k
+    )
 
 
 def embedding_cosine_dedup(
@@ -394,6 +413,36 @@ def embedding_cosine_dedup(
     return scored.filter(F.col("cosine_sim") >= F.lit(threshold))
 
 
+def _sq_dist(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance of two equal-length arrays (double
+    accumulator) — an interpreted HOF fold, affordable here because
+    one side is always a center: the per-probe × n_lists center
+    scoring and ``ivf_stats``' one distance per stored vector."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, c: (x.cast("double") - c) * (x.cast("double") - c)),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _probe_lists(
+    probes: DataFrame, centers: DataFrame, probe_id: str, probe_vec: str, nprobe: int
+) -> DataFrame:
+    """The probe half of every IVF search: each probe's ``nprobe``
+    nearest ``(_list, _center)`` rows (ties to the lower list id) —
+    the center table is tiny, so it is broadcast and cross-joined.
+    Returns the probe columns plus ``_list``."""
+    scored = probes.crossJoin(F.broadcast(centers)).withColumn(
+        "_d2", _sq_dist(F.col(probe_vec), F.col("_center"))
+    )
+    return topk_per_group(
+        scored.select(probe_id, probe_vec, "_list", "_d2"),
+        [probe_id],
+        [F.col("_d2").asc(), F.col("_list").asc()],
+        nprobe,
+    ).drop("_d2")
+
+
 def ivf_topk(
     probes: DataFrame,
     corpus: DataFrame,
@@ -432,40 +481,10 @@ def ivf_topk(
     centers = spark.createDataFrame(
         [(i, c) for i, c in enumerate(fitted)], ["_list", "_center"]
     )
-
-    # nprobe nearest centroids per probe (centroid table is tiny)
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col(probe_vec),
-            F.col("_center"),
-            lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-        ),
-        F.lit(0.0),
-        lambda a, v: a + v,
-    )
-    scored_centers = probes.crossJoin(F.broadcast(centers)).withColumn("_d2", d2)
-    probe_lists = topk_per_group(
-        scored_centers.select(probe_id, probe_vec, "_list", "_d2"),
-        [probe_id],
-        [F.col("_d2").asc(), F.col("_list").asc()],
-        nprobe,
-    ).drop("_d2")
-
-    cand = probe_lists.join(assigned, "_list").filter(
-        F.col(probe_id) != F.col(corpus_id)
-    )
-    # rerank with the Arrow-vectorized quantized kernel (the interpreted
-    # HOF fold costs ~10× per pair; candidates ≈ |corpus|·nprobe/n_lists)
-    reranked = cand.select(
-        probe_id,
-        corpus_id,
-        F.round(_qcosine_pandas(F.col(probe_vec), F.col(corpus_vec)), 6).alias(
-            "cosine_sim"
-        ),
-    )
-    return topk_per_group(
-        reranked, [probe_id], [F.col("cosine_sim").desc(), F.col(corpus_id).asc()], k
-    )
+    cand = _probe_lists(probes, centers, probe_id, probe_vec, nprobe).join(
+        assigned, "_list"
+    ).filter(F.col(probe_id) != F.col(corpus_id))
+    return _rerank(cand, probe_id, corpus_id, F.col(probe_vec), F.col(corpus_vec), k)
 
 
 #: Bump when the IVF index layout or assignment kernel changes
@@ -481,283 +500,347 @@ _IVF_MARKER_SCHEMA = (
     "corpus_id STRING, corpus_vec STRING, compression STRING"
 )
 
-_IVF_COMPRESSIONS = ("none", "sq8", "pq", "opq")
+
+def _write_table(spark, path: str, rows: list, schema: str) -> None:
+    """One small driver-built index table (``centers/``, a codec's
+    tables) as one parquet file."""
+    spark.createDataFrame(rows, schema).repartition(1).write.mode(
+        "overwrite"
+    ).parquet(path)
 
 
-def _bounds_from_rows(rows, dim: int):
-    """(_d, _lo, _hi) rows → two dim-length float lists — THE one fold
-    shared by the build-time aggregate and the quant/ reader, so the
-    layout can only change in one place (round-8 review)."""
-    lo = [0.0] * dim
-    hi = [0.0] * dim
-    for r in rows:
-        lo[r["_d"]] = float(r["_lo"])
-        hi[r["_d"]] = float(r["_hi"])
-    return lo, hi
-
-
-def _sq8_bounds(corpus: DataFrame, vec_col: str, dim: int):
-    """Per-dimension (min, max) over the corpus as two float lists —
-    the SQ8 codebook. One posexplode to (dim index, value) rows that
-    combine map-side down to ``dim`` rows per partition before the
-    single narrow shuffle; the collect is ``dim`` rows (a config-scale
-    scalar, like the centers)."""
-    rows = (
-        corpus.select(F.posexplode_outer(F.col(vec_col)).alias("_d", "_v"))
-        .filter(F.col("_v").isNotNull())
-        .groupBy("_d")
-        .agg(F.min("_v").alias("_lo"), F.max("_v").alias("_hi"))
-        .collect()
-    )
-    return _bounds_from_rows(rows, dim)
-
-
-def _sq8_encode(vec_col: Column, lo: list, hi: list) -> Column:
-    """array<float> → BINARY of dim uint8 codes:
-    ``code[d] = clip(round((x[d] − lo[d]) / (hi[d] − lo[d]) · 255))``
-    (constant dimensions encode 0). 4× smaller than float32 at rest;
-    appended values outside the frozen [lo, hi] clamp — the same
-    freeze-at-build contract as the centers."""
+def _rowwise(return_type, fn):
+    """Column → Column pandas UDF applying ``fn`` to each non-null
+    value of a batch (nulls stay null) — the one row loop behind every
+    codec's encode and decode."""
     from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
 
-    lo_a = np.asarray(lo, dtype=np.float64)
-    span = np.asarray(hi, dtype=np.float64) - lo_a
-    span[span == 0] = 1.0
+    @pandas_udf(return_type)
+    def _codec_rows(values: pd.Series) -> pd.Series:
+        return pd.Series([None if v is None else fn(v) for v in values])
 
-    @pandas_udf(BinaryType())
-    def _enc(vecs: pd.Series) -> pd.Series:
-        out = []
-        for v in vecs:
-            if v is None:
-                out.append(None)
-                continue
-            x = (np.asarray(v, dtype=np.float64) - lo_a) / span
-            out.append(
-                np.clip(np.round(x * 255.0), 0, 255).astype(np.uint8).tobytes()
-            )
-        return pd.Series(out)
-
-    return _enc(vec_col)
+    return _codec_rows
 
 
-def _sq8_decode(code_col: Column, lo: list, hi: list) -> Column:
-    """BINARY codes → array<double> reconstruction
-    ``x̂[d] = lo[d] + code[d] · (hi[d] − lo[d]) / 255`` — the
-    asymmetric-distance convention: queries stay full-precision, only
-    the stored side is approximated."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, DoubleType
+class _Codec:
+    """How a persisted IVF index stores its vectors — the
+    ``compression`` of :func:`ivf_build`. Each codec keeps its fit, its
+    table layout (writer :meth:`save` and reader ``_read``) and its row
+    kernels (:meth:`encode`, :meth:`decode`) together, so the index
+    entry points never branch on the compression.
 
-    lo_a = np.asarray(lo, dtype=np.float64)
-    step = (np.asarray(hi, dtype=np.float64) - lo_a) / 255.0
+    This base class is ``none``, the identity: ``lists/`` holds the raw
+    vectors under the corpus column. The compressed codecs store one
+    BINARY ``_code`` column and decode it to array<double> on the fly
+    — asymmetric distance: probes stay full-precision, only the stored
+    side is approximated. A fit is frozen at build like the centers:
+    appends encode with the stored tables, and values the fit never
+    saw cost recall, never correctness (visible in
+    :func:`ivf_stats` / :func:`ivf_recall_check`).
 
-    @pandas_udf(ArrayType(DoubleType()))
-    def _dec(codes: pd.Series) -> pd.Series:
-        out = []
-        for c in codes:
-            if c is None:
-                out.append(None)
-                continue
-            out.append(
-                (lo_a + np.frombuffer(c, dtype=np.uint8) * step).tolist()
-            )
-        return pd.Series(out)
+    Construct with :meth:`fit` (build time) or :meth:`load` (from an
+    index whose marker :func:`_ivf_marker_row` validated)."""
 
-    return _dec(code_col)
+    def __init__(self, col: str):
+        #: the ``lists/`` column that holds the stored vectors
+        self.col = col
+
+    @staticmethod
+    def fit(
+        compression: str,
+        corpus: DataFrame,
+        vec_col: str,
+        dim: int,
+        pq_m: int,
+        seed: int,
+        opq_iters: int,
+    ) -> "_Codec":
+        return _CODECS[compression]._fit(corpus, vec_col, dim, pq_m, seed, opq_iters)
+
+    @staticmethod
+    def load(spark, index_path: str, row) -> "_Codec":
+        # NULL is a pre-compression marker: uncompressed
+        codec = _CODECS[row["compression"] or "none"]
+        return codec._read(spark, index_path, row["corpus_vec"], row["dim"])
+
+    @classmethod
+    def _fit(cls, corpus, vec_col, dim, pq_m, seed, opq_iters) -> "_Codec":
+        return cls(vec_col)
+
+    @classmethod
+    def _read(cls, spark, index_path, vec_col, dim) -> "_Codec":
+        return cls(vec_col)
+
+    def save(self, spark, index_path: str) -> None:
+        """Write the codec's tables under ``index_path`` (none: none)."""
+
+    def encode(self, vec: Column) -> Column:
+        """array<float> → the value stored under :attr:`col`."""
+        return vec
+
+    def decode(self, stored: Column) -> Column:
+        """The value stored under :attr:`col` → array<double>."""
+        return stored
 
 
-def _read_sq8_bounds(spark, index_path: str, dim: int):
-    rows = spark.read.parquet(f"{index_path}/quant").collect()
-    return _bounds_from_rows(rows, dim)
+class _Sq8Codec(_Codec):
+    """int8 scalar quantization. ``quant/`` holds one
+    ``(_d, _lo, _hi)`` row per dimension: the corpus's per-dimension
+    (min, max). ``code[d] = clip(round((x[d] − lo[d]) / (hi[d] − lo[d])
+    · 255))`` (constant dimensions encode 0; appended values outside
+    the frozen bounds clamp), decoded as ``lo[d] + code[d] · (hi[d] −
+    lo[d]) / 255``."""
 
+    def __init__(self, lo: list, hi: list):
+        super().__init__("_code")
+        self.lo, self.hi = lo, hi
 
-def _fit_subspace_books(
-    sample: "np.ndarray", pq_m: int, sub: int, seed: int, iters: int
-) -> "np.ndarray":
-    """THE per-subspace codebook fit (pq AND opq call it — a seed/tol
-    change lands once): ``pq_m`` independent 256-center Lloyd's runs
-    over contiguous ``sub``-wide slices of the sample. Returns
-    (pq_m, 256, sub)."""
-    from .clustering import _lloyd
+    @classmethod
+    def _from_rows(cls, rows, dim: int) -> "_Sq8Codec":
+        lo = [0.0] * dim
+        hi = [0.0] * dim
+        for r in rows:
+            lo[r["_d"]] = float(r["_lo"])
+            hi[r["_d"]] = float(r["_hi"])
+        return cls(lo, hi)
 
-    return np.stack(
-        [
-            _lloyd(
-                np.ascontiguousarray(sample[:, j * sub : (j + 1) * sub]),
-                256,
-                seed + j,
-                max_iter=iters,
-                tol=1e-6,
-            )
-            for j in range(pq_m)
-        ]
-    )
-
-
-def _pq_fit(corpus: DataFrame, vec_col: str, dim: int, pq_m: int, seed: int):
-    """Product-quantization codebooks: split each vector into ``pq_m``
-    contiguous subvectors and fit 256 k-means centers PER SUBSPACE
-    (Jégou et al. 2011, "Product Quantization for Nearest Neighbor
-    Search") — one deterministic content-hash sample of the corpus
-    (the kmeans_fit sampling, shared code), then ``pq_m`` independent
-    driver-side Lloyd's runs over the sample's subspace slices.
-    Returns a (pq_m, 256, dim/pq_m) float64 array. Deterministic for
-    (corpus, seed) like every fit in this package."""
-    from .clustering import _fit_sample_matrix
-
-    if pq_m < 1 or dim % pq_m != 0:
-        raise ValueError(
-            f"pq_m must divide the vector dimension ({dim}), got {pq_m}"
+    @classmethod
+    def _fit(cls, corpus, vec_col, dim, pq_m, seed, opq_iters):
+        # one posexplode to (dim index, value) rows that combine
+        # map-side down to ``dim`` rows per partition before the single
+        # narrow shuffle; the collect is ``dim`` rows
+        rows = (
+            corpus.select(F.posexplode_outer(F.col(vec_col)).alias("_d", "_v"))
+            .filter(F.col("_v").isNotNull())
+            .groupBy("_d")
+            .agg(F.min("_v").alias("_lo"), F.max("_v").alias("_hi"))
+            .collect()
         )
-    # empty corpora are refused upstream (ivf_build's head check) and
-    # by _fit_sample_matrix itself
-    sample = _fit_sample_matrix(corpus, vec_col, 16384)
-    sub = dim // pq_m
-    return _fit_subspace_books(sample, pq_m, sub, seed, 20)
+        return cls._from_rows(rows, dim)
 
+    @classmethod
+    def _read(cls, spark, index_path, vec_col, dim):
+        return cls._from_rows(spark.read.parquet(f"{index_path}/quant").collect(), dim)
 
-def _opq_fit(
-    corpus: DataFrame,
-    vec_col: str,
-    dim: int,
-    pq_m: int,
-    seed: int,
-    opq_iters: int = 8,
-):
-    """Optimized Product Quantization (Ge et al. 2013, the
-    non-parametric OPQ-NP alternation): learn an ORTHOGONAL rotation R
-    so that PQ's contiguous-subspace split lands on decorrelated
-    coordinates — plain PQ's quantization error concentrates wherever
-    the data's covariance straddles subspace boundaries, and real
-    embedding manifolds (unlike isotropic Gaussians) always straddle.
-
-    Alternation over the same bounded content-hash sample
-    (:func:`.clustering._fit_sample_matrix`): (a) fix R, fit per-
-    subspace codebooks on X·R with a few Lloyd's iterations; (b) fix
-    the codes' reconstructions Ŷ, update R by orthogonal Procrustes
-    (SVD of XᵀŶ: R = U·Vᵀ — unique up to degenerate singular values,
-    and column/row sign flips cancel in the product, so the result is
-    deterministic). A final full-strength codebook fit runs on the
-    converged rotation. Returns ``(codebooks (m,256,sub), R (d,d))``.
-    """
-    from .clustering import _fit_sample_matrix
-
-    if pq_m < 1 or dim % pq_m != 0:
-        raise ValueError(
-            f"pq_m must divide the vector dimension ({dim}), got {pq_m}"
+    def save(self, spark, index_path):
+        _write_table(
+            spark,
+            f"{index_path}/quant",
+            [(d, self.lo[d], self.hi[d]) for d in range(len(self.lo))],
+            "_d INT, _lo DOUBLE, _hi DOUBLE",
         )
-    if opq_iters < 1:
-        raise ValueError(f"opq_iters must be >= 1, got {opq_iters}")
-    X = _fit_sample_matrix(corpus, vec_col, 16384)
-    sub = dim // pq_m
 
-    def _fit_books(Y: np.ndarray, iters: int) -> np.ndarray:
-        return _fit_subspace_books(Y, pq_m, sub, seed, iters)
+    def encode(self, vec):
+        from pyspark.sql.types import BinaryType
 
-    def _reconstruct(Y: np.ndarray, books: np.ndarray) -> np.ndarray:
-        out = np.empty_like(Y)
-        for j in range(pq_m):
-            S = Y[:, j * sub : (j + 1) * sub]
-            C = books[j]
-            d = (C * C).sum(axis=1)[None, :] - 2.0 * (S @ C.T)
-            out[:, j * sub : (j + 1) * sub] = C[d.argmin(axis=1)]
-        return out
+        lo = np.asarray(self.lo, dtype=np.float64)
+        span = np.asarray(self.hi, dtype=np.float64) - lo
+        span[span == 0] = 1.0
 
-    R = np.eye(dim)
-    for _ in range(opq_iters):
-        Y = X @ R
-        books = _fit_books(Y, 4)  # cheap inner fits during alternation
-        u, _, vt = np.linalg.svd(X.T @ _reconstruct(Y, books))
-        R = u @ vt
-    return _fit_books(X @ R, 20), R
+        def code(v):
+            x = (np.asarray(v, dtype=np.float64) - lo) / span
+            return np.clip(np.round(x * 255.0), 0, 255).astype(np.uint8).tobytes()
+
+        return _rowwise(BinaryType(), code)(vec)
+
+    def decode(self, stored):
+        from pyspark.sql.types import ArrayType, DoubleType
+
+        lo = np.asarray(self.lo, dtype=np.float64)
+        step = (np.asarray(self.hi, dtype=np.float64) - lo) / 255.0
+        return _rowwise(
+            ArrayType(DoubleType()),
+            lambda c: (lo + np.frombuffer(c, dtype=np.uint8) * step).tolist(),
+        )(stored)
 
 
-def _pq_encode(
-    vec_col: Column, codebooks: np.ndarray, rot: np.ndarray | None = None
-) -> Column:
-    """array<float> → BINARY of pq_m uint8 codes: per subspace, the
-    argmin-distance codebook entry (ties to the lowest code — argmin's
-    first-match, deterministic). dim/pq_m · 4 bytes collapse to ONE
-    byte per subspace — 4·dim/pq_m× smaller than float32 at rest.
-    With ``rot`` (OPQ) the vector is rotated into the codebooks'
-    decorrelated coordinates first."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import BinaryType
+class _PqCodec(_Codec):
+    """Product quantization (Jégou et al. 2011): ``pq_m`` contiguous
+    subspaces, each with a 256-entry codebook fitted by Lloyd's on one
+    deterministic content-hash sample of the corpus (the kmeans_fit
+    sampling). ``quant/`` holds one ``(_sub, _code, _center)`` row per
+    codebook entry. A code is, per subspace, the argmin-distance entry
+    (ties to the lowest code) — one byte each; decode concatenates the
+    entries. ``rot`` (set by :class:`_OpqCodec`) rotates a vector into
+    the codebooks' coordinates before encoding and a reconstruction
+    back after decoding, so search kernels never see it."""
 
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)  # (m, 256, sub)
-    m, _, sub = cb.shape
-    cb2 = (cb * cb).sum(axis=2)  # (m, 256)
-    rm = None if rot is None else np.ascontiguousarray(rot, dtype=np.float64)
+    def __init__(self, books: np.ndarray, rot: np.ndarray | None = None):
+        super().__init__("_code")
+        self.books = np.ascontiguousarray(books, dtype=np.float64)  # (m, 256, sub)
+        self.rot = rot
 
-    @pandas_udf(BinaryType())
-    def _enc(vecs: pd.Series) -> pd.Series:
-        out = []
-        for v in vecs:
-            if v is None:
-                out.append(None)
-                continue
+    @staticmethod
+    def _sample(corpus, vec_col: str, dim: int, pq_m: int) -> np.ndarray:
+        from .clustering import _fit_sample_matrix
+
+        if pq_m < 1 or dim % pq_m != 0:
+            raise ValueError(
+                f"pq_m must divide the vector dimension ({dim}), got {pq_m}"
+            )
+        # empty corpora are refused upstream (ivf_build's head check)
+        # and by _fit_sample_matrix itself
+        return _fit_sample_matrix(corpus, vec_col, 16384)
+
+    @staticmethod
+    def _fit_books(sample: np.ndarray, pq_m: int, seed: int, iters: int) -> np.ndarray:
+        """``pq_m`` independent 256-center Lloyd's runs over contiguous
+        slices of the sample (pq and opq both fit through here).
+        Returns (pq_m, 256, dim/pq_m)."""
+        from .clustering import _lloyd
+
+        sub = sample.shape[1] // pq_m
+        return np.stack(
+            [
+                _lloyd(
+                    np.ascontiguousarray(sample[:, j * sub : (j + 1) * sub]),
+                    256,
+                    seed + j,
+                    max_iter=iters,
+                    tol=1e-6,
+                )
+                for j in range(pq_m)
+            ]
+        )
+
+    @classmethod
+    def _fit(cls, corpus, vec_col, dim, pq_m, seed, opq_iters):
+        return cls(cls._fit_books(cls._sample(corpus, vec_col, dim, pq_m), pq_m, seed, 20))
+
+    @classmethod
+    def _read(cls, spark, index_path, vec_col, dim):
+        rows = spark.read.parquet(f"{index_path}/quant").collect()
+        m = max(r["_sub"] for r in rows) + 1
+        books = np.zeros((m, 256, len(rows[0]["_center"])), dtype=np.float64)
+        for r in rows:
+            books[r["_sub"], r["_code"]] = r["_center"]
+        return cls(books)
+
+    def save(self, spark, index_path):
+        _write_table(
+            spark,
+            f"{index_path}/quant",
+            [
+                (j, c, [float(x) for x in self.books[j, c]])
+                for j in range(self.books.shape[0])
+                for c in range(256)
+            ],
+            "_sub INT, _code INT, _center ARRAY<DOUBLE>",
+        )
+
+    def encode(self, vec):
+        from pyspark.sql.types import BinaryType
+
+        cb = self.books
+        m, _, sub = cb.shape
+        cb2 = (cb * cb).sum(axis=2)  # (m, 256)
+        rm = None if self.rot is None else np.ascontiguousarray(self.rot, dtype=np.float64)
+
+        def code(v):
             x = np.asarray(v, dtype=np.float64)
             if rm is not None:
                 x = x @ rm
-            x = x.reshape(m, sub)
             # (m, 256) distances via the |c|² − 2x·c expansion
-            d = cb2 - 2.0 * np.einsum("mks,ms->mk", cb, x)
-            out.append(d.argmin(axis=1).astype(np.uint8).tobytes())
-        return pd.Series(out)
+            d = cb2 - 2.0 * np.einsum("mks,ms->mk", cb, x.reshape(m, sub))
+            return d.argmin(axis=1).astype(np.uint8).tobytes()
 
-    return _enc(vec_col)
+        return _rowwise(BinaryType(), code)(vec)
 
+    def decode(self, stored):
+        from pyspark.sql.types import ArrayType, DoubleType
 
-def _pq_decode(
-    code_col: Column, codebooks: np.ndarray, rot: np.ndarray | None = None
-) -> Column:
-    """BINARY codes → array<double> reconstruction (each subspace's
-    codebook centroid, concatenated; with ``rot`` the concatenation is
-    rotated BACK into the original space, so downstream cosine kernels
-    never know OPQ happened) — asymmetric distance: probes stay
-    full-precision, only the stored side is approximated."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, DoubleType
+        cb = self.books
+        m = cb.shape[0]
+        rt = None if self.rot is None else np.ascontiguousarray(self.rot.T, dtype=np.float64)
 
-    cb = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m = cb.shape[0]
-    rt = None if rot is None else np.ascontiguousarray(rot.T, dtype=np.float64)
+        def vec(c):
+            y = cb[np.arange(m), np.frombuffer(c, dtype=np.uint8)].reshape(-1)
+            return (y if rt is None else y @ rt).tolist()
 
-    @pandas_udf(ArrayType(DoubleType()))
-    def _dec(codes: pd.Series) -> pd.Series:
-        out = []
-        for c in codes:
-            if c is None:
-                out.append(None)
-                continue
-            idx = np.frombuffer(c, dtype=np.uint8)
-            y = cb[np.arange(m), idx].reshape(-1)
-            if rt is not None:
-                y = y @ rt
-            out.append(y.tolist())
-        return pd.Series(out)
-
-    return _dec(code_col)
+        return _rowwise(ArrayType(DoubleType()), vec)(stored)
 
 
-def _read_pq_rotation(spark, index_path: str) -> np.ndarray:
-    rows = spark.read.parquet(f"{index_path}/quant_rot").collect()
-    d = len(rows)
-    rot = np.zeros((d, d), dtype=np.float64)
-    for r in rows:
-        rot[r["_row"]] = r["_vals"]
-    return rot
+class _OpqCodec(_PqCodec):
+    """Optimized Product Quantization (Ge et al. 2013, the
+    non-parametric OPQ-NP alternation): PQ behind a learned ORTHOGONAL
+    rotation R, so the contiguous-subspace split lands on decorrelated
+    coordinates — plain PQ's quantization error concentrates wherever
+    the data's covariance straddles subspace boundaries, and real
+    embedding manifolds (unlike isotropic Gaussians) always straddle.
+    ``quant_rot/`` holds one ``(_row, _vals)`` row per row of R.
+
+    The fit alternates over the PQ sample: (a) fix R, fit per-subspace
+    codebooks on X·R with a few Lloyd's iterations; (b) fix the codes'
+    reconstructions Ŷ, update R by orthogonal Procrustes (SVD of XᵀŶ:
+    R = U·Vᵀ — unique up to degenerate singular values, and
+    column/row sign flips cancel in the product, so the result is
+    deterministic). A final full-strength codebook fit runs on the
+    converged rotation."""
+
+    @classmethod
+    def _fit(cls, corpus, vec_col, dim, pq_m, seed, opq_iters):
+        if opq_iters < 1:
+            raise ValueError(f"opq_iters must be >= 1, got {opq_iters}")
+        X = cls._sample(corpus, vec_col, dim, pq_m)
+        sub = dim // pq_m
+
+        def _reconstruct(Y: np.ndarray, books: np.ndarray) -> np.ndarray:
+            out = np.empty_like(Y)
+            for j in range(pq_m):
+                S = Y[:, j * sub : (j + 1) * sub]
+                C = books[j]
+                d = (C * C).sum(axis=1)[None, :] - 2.0 * (S @ C.T)
+                out[:, j * sub : (j + 1) * sub] = C[d.argmin(axis=1)]
+            return out
+
+        R = np.eye(dim)
+        for _ in range(opq_iters):
+            Y = X @ R
+            books = cls._fit_books(Y, pq_m, seed, 4)  # cheap inner fits
+            u, _, vt = np.linalg.svd(X.T @ _reconstruct(Y, books))
+            R = u @ vt
+        return cls(cls._fit_books(X @ R, pq_m, seed, 20), R)
+
+    @classmethod
+    def _read(cls, spark, index_path, vec_col, dim):
+        codec = super()._read(spark, index_path, vec_col, dim)
+        rows = spark.read.parquet(f"{index_path}/quant_rot").collect()
+        codec.rot = np.zeros((len(rows), len(rows)), dtype=np.float64)
+        for r in rows:
+            codec.rot[r["_row"]] = r["_vals"]
+        return codec
+
+    def save(self, spark, index_path):
+        super().save(spark, index_path)
+        _write_table(
+            spark,
+            f"{index_path}/quant_rot",
+            [(i, [float(x) for x in self.rot[i]]) for i in range(self.rot.shape[0])],
+            "_row INT, _vals ARRAY<DOUBLE>",
+        )
 
 
-def _read_pq_codebooks(spark, index_path: str) -> np.ndarray:
-    rows = spark.read.parquet(f"{index_path}/quant").collect()
-    m = max(r["_sub"] for r in rows) + 1
-    sub = len(rows[0]["_center"])
-    cb = np.zeros((m, 256, sub), dtype=np.float64)
-    for r in rows:
-        cb[r["_sub"], r["_code"]] = r["_center"]
-    return cb
+#: ``compression`` name → codec; the only place a codec is registered.
+_CODECS = {"none": _Codec, "sq8": _Sq8Codec, "pq": _PqCodec, "opq": _OpqCodec}
+_IVF_COMPRESSIONS = tuple(_CODECS)
+
+
+def _coded_lists(
+    vectors: DataFrame, corpus_id: str, corpus_vec: str, centers: list, codec: _Codec
+) -> DataFrame:
+    """``lists/`` rows for ``vectors``: (corpus_id, the codec's stored
+    vector, ``_list``) — nearest-center assignment against the fixed
+    centers (:func:`.clustering._assign_to_centers`), then encode."""
+    from .clustering import _assign_to_centers
+
+    assigned = _assign_to_centers(
+        vectors.select(corpus_id, corpus_vec), corpus_vec, centers
+    )
+    return assigned.select(
+        corpus_id,
+        codec.encode(F.col(corpus_vec)).alias(codec.col),
+        F.col("cluster").alias("_list"),
+    )
 
 
 def ivf_build(
@@ -831,7 +914,8 @@ def ivf_build(
     :func:`ivf_recall_check` and raise ``pq_m`` (finer subspaces)
     when it matters."""
     from ..fsutil import fs_delete, fs_exists, fs_write_json_row
-    from .clustering import _assign_to_centers, kmeans_fit
+    from ..sources.sinks import partitioned_overwrite
+    from .clustering import kmeans_fit
 
     if compression not in _IVF_COMPRESSIONS:
         raise ValueError(
@@ -850,22 +934,10 @@ def ivf_build(
         centers = kmeans_fit(
             corpus, vec_col=corpus_vec, n_clusters=n_lists, seed=seed
         )
-    quant = None
-    codebooks = None
-    rotation = None
-    if compression == "sq8":
-        # bounds BEFORE the un-commit below: a failure here leaves the
-        # old index fully valid
-        quant = _sq8_bounds(corpus, corpus_vec, dim)
-    elif compression == "pq":
-        # same ordering contract: fit fully before the un-commit
-        codebooks = _pq_fit(corpus, corpus_vec, dim, pq_m, seed)
-    elif compression == "opq":
-        codebooks, rotation = _opq_fit(
-            corpus, corpus_vec, dim, pq_m, seed, opq_iters
-        )
+    # the codec fit also runs BEFORE the un-commit below
+    codec = _Codec.fit(compression, corpus, corpus_vec, dim, pq_m, seed, opq_iters)
     # un-commit as LATE as possible — after input validation AND the
-    # (potentially long) fit, immediately before the first write to
+    # (potentially long) fits, immediately before the first write to
     # lists/. A failure anywhere up to here leaves the old index
     # fully valid; a crash after this point leaves the loudly-refused
     # marker-less state (round-7 review narrowed the destruction
@@ -873,62 +945,20 @@ def ivf_build(
     marker_path = f"{index_path}/format"
     if fs_exists(spark, marker_path):
         fs_delete(spark, marker_path)
-    assigned = _assign_to_centers(
-        corpus.select(corpus_id, corpus_vec), corpus_vec, centers
-    ).withColumnRenamed("cluster", "_list")
-    if compression == "sq8":
-        assigned = assigned.select(
-            corpus_id,
-            _sq8_encode(F.col(corpus_vec), *quant).alias("_code"),
-            "_list",
-        )
-    elif compression == "pq":
-        assigned = assigned.select(
-            corpus_id,
-            _pq_encode(F.col(corpus_vec), codebooks).alias("_code"),
-            "_list",
-        )
-    elif compression == "opq":
-        assigned = assigned.select(
-            corpus_id,
-            _pq_encode(F.col(corpus_vec), codebooks, rotation).alias("_code"),
-            "_list",
-        )
     # one file per list (a measured 4x faster single-node write than
     # every task writing into every list); parallelism is bounded by
     # n_lists, which is sized to the cluster anyway. A rebuild with
     # fewer lists truncates the stale list dirs.
-    from ..sources.sinks import partitioned_overwrite
-
-    partitioned_overwrite(assigned, "_list").parquet(f"{index_path}/lists")
-    if compression == "sq8":
-        spark.createDataFrame(
-            [(d, quant[0][d], quant[1][d]) for d in range(dim)],
-            "_d INT, _lo DOUBLE, _hi DOUBLE",
-        ).repartition(1).write.mode("overwrite").parquet(f"{index_path}/quant")
-    elif compression in ("pq", "opq"):
-        spark.createDataFrame(
-            [
-                (j, c, [float(x) for x in codebooks[j, c]])
-                for j in range(codebooks.shape[0])
-                for c in range(256)
-            ],
-            "_sub INT, _code INT, _center ARRAY<DOUBLE>",
-        ).repartition(1).write.mode("overwrite").parquet(f"{index_path}/quant")
-        if compression == "opq":
-            spark.createDataFrame(
-                [
-                    (i, [float(x) for x in rotation[i]])
-                    for i in range(rotation.shape[0])
-                ],
-                "_row INT, _vals ARRAY<DOUBLE>",
-            ).repartition(1).write.mode("overwrite").parquet(
-                f"{index_path}/quant_rot"
-            )
-    spark.createDataFrame(
+    partitioned_overwrite(
+        _coded_lists(corpus, corpus_id, corpus_vec, centers, codec), "_list"
+    ).parquet(f"{index_path}/lists")
+    codec.save(spark, index_path)
+    _write_table(
+        spark,
+        f"{index_path}/centers",
         [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
         "_list INT, _center ARRAY<DOUBLE>",
-    ).repartition(1).write.mode("overwrite").parquet(f"{index_path}/centers")
+    )
     fs_write_json_row(
         spark, f"{index_path}/format", _IVF_MARKER_SCHEMA,
         (
@@ -960,31 +990,17 @@ def ivf_search(
     lists read as a partition filter, so the scan touches only the
     needed ``_list=`` directories. Returns (probe_id, corpus_id,
     cosine_sim). Refuses a marker-less or mismatched-format index."""
+    from ..caching import tracked_persist
+
     spark = probes.sparkSession
     row = _ivf_marker_row(spark, index_path)
     corpus_id = row["corpus_id"]
-
-    centers = spark.read.parquet(f"{index_path}/centers")
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col(probe_vec),
-            F.col("_center"),
-            lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-        ),
-        F.lit(0.0),
-        lambda a, v: a + v,
+    probe_lists = tracked_persist(
+        _probe_lists(
+            probes, spark.read.parquet(f"{index_path}/centers"),
+            probe_id, probe_vec, nprobe,
+        )
     )
-    scored_centers = probes.crossJoin(F.broadcast(centers)).withColumn("_d2", d2)
-    probe_lists = topk_per_group(
-        scored_centers.select(probe_id, probe_vec, "_list", "_d2"),
-        [probe_id],
-        [F.col("_d2").asc(), F.col("_list").asc()],
-        nprobe,
-    ).drop("_d2")
-
-    from ..caching import tracked_persist
-
-    probe_lists = tracked_persist(probe_lists)
     # bounded driver collect: ≤ n_lists ints (an index parameter)
     needed = [r["_list"] for r in probe_lists.select("_list").distinct().collect()]
     lists = spark.read.parquet(f"{index_path}/lists").filter(
@@ -993,33 +1009,9 @@ def ivf_search(
     cand = probe_lists.join(lists, "_list").filter(
         F.col(probe_id) != F.col(corpus_id)
     )
-    comp = row["compression"] or "none"
-    if comp == "sq8":
-        # asymmetric distance: decode the stored codes per batch, keep
-        # the probe side full-precision; same quantized-cosine kernel
-        lo, hi = _read_sq8_bounds(spark, index_path, row["dim"])
-        cand_vec = _sq8_decode(F.col("_code"), lo, hi)
-    elif comp == "pq":
-        cand_vec = _pq_decode(
-            F.col("_code"), _read_pq_codebooks(spark, index_path)
-        )
-    elif comp == "opq":
-        cand_vec = _pq_decode(
-            F.col("_code"),
-            _read_pq_codebooks(spark, index_path),
-            _read_pq_rotation(spark, index_path),
-        )
-    else:
-        cand_vec = F.col(row["corpus_vec"])
-    reranked = cand.select(
-        probe_id,
-        corpus_id,
-        F.round(_qcosine_pandas(F.col(probe_vec), cand_vec), 6).alias(
-            "cosine_sim"
-        ),
-    )
-    return topk_per_group(
-        reranked, [probe_id], [F.col("cosine_sim").desc(), F.col(corpus_id).asc()], k
+    codec = _Codec.load(spark, index_path, row)
+    return _rerank(
+        cand, probe_id, corpus_id, F.col(probe_vec), codec.decode(F.col(codec.col)), k
     )
 
 
@@ -1042,49 +1034,15 @@ def ivf_append(
     refuses. Appending the same batch twice duplicates rows (appends
     are appends) — compose with an id anti-join against the lists
     table for idempotent ingestion."""
-    from .clustering import _assign_to_centers
-
     spark = new_vectors.sparkSession
     row = _ivf_marker_row(spark, index_path)
     centers_df = spark.read.parquet(f"{index_path}/centers").orderBy("_list")
     centers = [list(r["_center"]) for r in centers_df.collect()]
-    assigned = _assign_to_centers(
-        new_vectors.select(row["corpus_id"], row["corpus_vec"]),
-        row["corpus_vec"],
-        centers,
-    ).withColumnRenamed("cluster", "_list")
-    comp = row["compression"] or "none"
-    if comp == "sq8":
-        # encode with the STORED bounds (frozen at build like the
-        # centers); appended values outside them clamp — the same
-        # drift-degrades-recall-never-correctness contract, visible in
-        # ivf_stats/ivf_recall_check
-        lo, hi = _read_sq8_bounds(spark, index_path, row["dim"])
-        assigned = assigned.select(
-            row["corpus_id"],
-            _sq8_encode(F.col(row["corpus_vec"]), lo, hi).alias("_code"),
-            "_list",
-        )
-    elif comp == "pq":
-        # same frozen-fit contract with the stored codebooks
-        assigned = assigned.select(
-            row["corpus_id"],
-            _pq_encode(
-                F.col(row["corpus_vec"]), _read_pq_codebooks(spark, index_path)
-            ).alias("_code"),
-            "_list",
-        )
-    elif comp == "opq":
-        # frozen codebooks AND frozen rotation
-        assigned = assigned.select(
-            row["corpus_id"],
-            _pq_encode(
-                F.col(row["corpus_vec"]),
-                _read_pq_codebooks(spark, index_path),
-                _read_pq_rotation(spark, index_path),
-            ).alias("_code"),
-            "_list",
-        )
+    # encode with the STORED codec tables, frozen at build like the centers
+    codec = _Codec.load(spark, index_path, row)
+    assigned = _coded_lists(
+        new_vectors, row["corpus_id"], row["corpus_vec"], centers, codec
+    )
     # same repartition-before-partitionBy shape as ivf_build: one new
     # file per touched list per append, not per task per list
     assigned.repartition("_list").write.partitionBy("_list").mode(
@@ -1142,41 +1100,16 @@ def ivf_stats(spark, index_path: str) -> DataFrame:
     (``mean_center_dist`` inflates). Feed the result to
     :func:`ivf_rebuild_advised` for a thresholded yes/no."""
     row = _ivf_marker_row(spark, index_path)
-    lists = spark.read.parquet(f"{index_path}/lists")
-    centers = spark.read.parquet(f"{index_path}/centers")
-    comp = row["compression"] or "none"
-    if comp == "sq8":
-        # distances over the RECONSTRUCTED vectors — what the search
-        # actually ranks with, so drift readings match search behavior
-        lo, hi = _read_sq8_bounds(spark, index_path, row["dim"])
-        lists = lists.withColumn(
-            row["corpus_vec"], _sq8_decode(F.col("_code"), lo, hi)
-        )
-    elif comp == "pq":
-        lists = lists.withColumn(
-            row["corpus_vec"],
-            _pq_decode(F.col("_code"), _read_pq_codebooks(spark, index_path)),
-        )
-    elif comp == "opq":
-        # rotation applied like in ivf_search: the centers live in the
-        # ORIGINAL space, so reconstructions must come back to it
-        lists = lists.withColumn(
-            row["corpus_vec"],
-            _pq_decode(
-                F.col("_code"),
-                _read_pq_codebooks(spark, index_path),
-                _read_pq_rotation(spark, index_path),
-            ),
-        )
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col(row["corpus_vec"]),
-            F.col("_center"),
-            lambda x, c: (x.cast("double") - c) * (x.cast("double") - c),
-        ),
-        F.lit(0.0),
-        lambda a, v: a + v,
+    vec = row["corpus_vec"]
+    codec = _Codec.load(spark, index_path, row)
+    # distances over the DECODED vectors — what the search actually
+    # ranks with, so drift readings match search behavior (the centers
+    # live in the original space; opq decodes back into it)
+    lists = spark.read.parquet(f"{index_path}/lists").withColumn(
+        vec, codec.decode(F.col(codec.col))
     )
+    centers = spark.read.parquet(f"{index_path}/centers")
+    d2 = _sq_dist(F.col(vec), F.col("_center"))
     per_list = (
         lists.join(F.broadcast(centers), "_list")
         .groupBy("_list")

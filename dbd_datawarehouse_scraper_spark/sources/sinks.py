@@ -386,7 +386,9 @@ def fold_epoch_dirs(
       fold only those into one new marked generation (the big old
       generations are not touched);
     - **major** — when the marked eligible generations themselves
-      number ≥ ``min_dirs``, fold those into one.
+      number ≥ ``min_dirs`` (and at least two), fold those into one;
+      a lone marked generation is carried, so a replay with nothing
+      new rewrites nothing.
 
     A row is rewritten once by a minor fold and once per major cycle —
     total I/O ~N²/(2·min_dirs²) over the store's life versus
@@ -419,7 +421,9 @@ def fold_epoch_dirs(
     ]
     unmarked = [e for e in eligible if e not in set(marked)]
     fold_minor = len(unmarked) >= min_dirs
-    fold_major = len(marked) >= min_dirs
+    # one marked generation has nothing to fold into: rewriting it into
+    # itself (min_dirs=1) would only rename its files on every call
+    fold_major = len(marked) >= max(min_dirs, 2)
     if not (fold_minor or fold_major):
         return False
     tmp, old = f"{path}.__fold_tmp__", f"{path}.__fold_old__"

@@ -757,3 +757,101 @@ def test_ivf_index_memo_probe_only_and_rebuild(spark, sf_dir):
     )
     assert res_a == res_b
     _IVF_INDEX_MEMO.clear()
+
+
+@pytest.mark.parametrize("compression", ["none", "sq8", "pq", "opq"])
+def test_ivf_codec_matrix_build_search_append_stats(spark, emb, tmp_path, compression):
+    """Every codec through the whole index lifecycle on a small slice:
+    build on the even ids, search, append the held-out odd ids, stats.
+    Searches see only built rows before the append and the appended
+    rows after it; stats count every row and report a distance for
+    every non-empty list (each codec's decode runs there)."""
+    from dbd_datawarehouse_scraper_spark.caching import release_caches
+    from dbd_datawarehouse_scraper_spark.operators.similarity_search import (
+        ivf_append,
+        ivf_build,
+        ivf_search,
+        ivf_stats,
+    )
+
+    part = emb.filter(F.col("vec_id") < 200).select("vec_id", "embedding")
+    probes = part.filter(F.col("vec_id") % 20 == 0).select(
+        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
+    )
+    idx = str(tmp_path / compression)
+    ivf_build(part.filter("vec_id % 2 = 0"), idx, n_lists=4,
+              compression=compression, pq_m=8)
+    before = ivf_search(probes, idx, k=5, nprobe=4).collect()
+    release_caches()
+    assert before and all(r["vec_id"] % 2 == 0 for r in before)
+
+    ivf_append(part.filter("vec_id % 2 = 1"), idx)
+    after = ivf_search(probes, idx, k=5, nprobe=4).collect()
+    release_caches()
+    assert any(r["vec_id"] % 2 == 1 for r in after), "appended rows unsearchable"
+
+    stats = ivf_stats(spark, idx).collect()
+    assert sum(r["n_vectors"] for r in stats) == part.count()
+    assert all(
+        r["mean_center_dist"] is not None for r in stats if r["n_vectors"] > 0
+    )
+
+
+def _compression_tests_outside_codec_construction(source: str) -> list:
+    """(line, enclosing function) of every comparison against a
+    compressed codec's name that is not inside a ``*Codec`` class's
+    ``fit``/``load`` (or their ``_fit``/``_read`` hooks)."""
+    import ast
+
+    names = {"sq8", "pq", "opq"}
+
+    def names_a_codec(node):
+        if isinstance(node, ast.Constant):
+            return node.value in names
+        if isinstance(node, (ast.Tuple, ast.List, ast.Set)):
+            return any(names_a_codec(e) for e in node.elts)
+        return False
+
+    found = []
+
+    def visit(node, cls, fn):
+        if isinstance(node, ast.ClassDef):
+            cls = node.name
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        elif isinstance(node, ast.Compare) and any(
+            names_a_codec(e) for e in [node.left, *node.comparators]
+        ):
+            allowed = (
+                cls is not None
+                and cls.endswith("Codec")
+                and fn in ("fit", "load", "_fit", "_read")
+            )
+            if not allowed:
+                found.append((node.lineno, fn))
+        for child in ast.iter_child_nodes(node):
+            visit(child, cls, fn)
+
+    visit(ast.parse(source), None, None)
+    return found
+
+
+def test_ivf_compression_dispatch_lives_in_the_codec():
+    """A codec is added in exactly one place: no ``== "sq8"``-style
+    test or ``in ("pq", "opq")`` membership test appears in
+    similarity_search.py outside the codec's construction."""
+    import inspect
+
+    from dbd_datawarehouse_scraper_spark.operators import similarity_search
+
+    # the guard itself catches both shapes of dispatch
+    planted = (
+        "def ivf_x(comp):\n"
+        "    if comp == 'opq':\n        pass\n"
+        "    elif comp in ('pq', 'opq'):\n        pass\n"
+    )
+    assert len(_compression_tests_outside_codec_construction(planted)) == 2
+    assert similarity_search._IVF_COMPRESSIONS == ("none", "sq8", "pq", "opq")
+    assert _compression_tests_outside_codec_construction(
+        inspect.getsource(similarity_search)
+    ) == []

@@ -694,6 +694,47 @@ def test_fold_epoch_dirs_tiered_no_requadratic_rewrite(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
+def test_fold_epoch_dirs_min_dirs_one_carries_a_lone_generation(spark):
+    """With ``min_dirs=1`` a marked tier of ONE generation has nothing
+    to fold: it is carried, not rewritten into itself. Folding once per
+    epoch of a 4-epoch store, then twice with nothing new (a replay),
+    settles: the second idle call returns False and leaves every
+    part-file name as it was. Rows never change."""
+    import glob
+
+    from dbd_datawarehouse_scraper_spark.sources.sinks import fold_epoch_dirs
+
+    base = tempfile.mkdtemp(prefix="fold_one_")
+    store = f"{base}/store"
+
+    def rows():
+        return {(r["id"], r["txt"]) for r in spark.read.parquet(store).collect()}
+
+    def parts():
+        return sorted(
+            os.path.relpath(p, store) for p in glob.glob(f"{store}/epoch=*/part-*")
+        )
+
+    try:
+        want = set()
+        for e in range(4):
+            batch = [(e * 10 + i, f"doc{e}_{i}") for i in range(2)]
+            spark.createDataFrame(batch, "id long, txt string").coalesce(1).write.parquet(
+                f"{store}/epoch={e}"
+            )
+            want |= set(batch)
+            fold_epoch_dirs(spark, store, below_epoch=e, min_dirs=1)
+            assert rows() == want
+        fold_epoch_dirs(spark, store, below_epoch=3, min_dirs=1)
+        assert rows() == want
+        settled = parts()
+        assert not fold_epoch_dirs(spark, store, below_epoch=3, min_dirs=1)
+        assert parts() == settled
+        assert rows() == want
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 def test_jsonl_source_blank_lines_are_corrupt_not_null_rows(spark):
     """Round-5 review: blank/whitespace lines parse to a NULL struct —
     they must land on the corrupt side, never as all-null good rows
