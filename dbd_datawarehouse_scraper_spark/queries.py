@@ -19,13 +19,17 @@ row-count + schema + order-insensitive value hash):
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 import pandas as pd  # module-level so pandas-UDF type hints resolve
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from .functions.parsing import parse_money, validate_regnum
 from .functions.pii import counts_sql as _pii_counts_sql
@@ -122,6 +126,60 @@ def dsum(col: F.Column, scale: int = 6) -> F.Column:
 
 
 DSUM = "CAST(SUM(CAST(ROUND(({x}) * 1e6) AS BIGINT)) AS DOUBLE) / 1e6"
+
+
+# ---------------------------------------------------------------------------
+# hermetic queries: the ones that write files, read them back and clean up
+# ---------------------------------------------------------------------------
+
+
+@contextmanager
+def _scratch(prefix: str) -> Iterator[str]:
+    """A fresh temp dir for a hermetic query's files, deleted on exit
+    however the body ends."""
+    work = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield work
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _materialized(df: DataFrame) -> DataFrame:
+    """``df``'s rows as a driver-local frame (plans as a
+    ``LocalTableScan``). Queries whose result reads a scratch dir, a
+    cache or a checkpoint return this, because those are deleted or
+    released before the caller reads the result."""
+    from .operators.driver_local import local_frame
+
+    return local_frame(df.sparkSession, df.collect(), df.schema)
+
+
+def _two_epoch_stream(
+    spark: SparkSession,
+    prefix: str,
+    e1: DataFrame,
+    e2: DataFrame,
+    start: Callable[[DataFrame, str, str, str], StreamingQuery],
+    read: Callable[[str], DataFrame],
+) -> DataFrame:
+    """Drive one ``foreachBatch`` store wrapper over two file-stream
+    epochs in a scratch dir: write ``e1``, ``start(stream_df, out,
+    store, ckpt)`` and drain it, then the same for ``e2`` on the same
+    checkpoint and store. Returns ``read(out)``, materialized."""
+    from .streaming import await_or_die, file_stream
+
+    with _scratch(prefix) as work:
+        src, out, store, ckpt = (
+            f"{work}/{d}" for d in ("src", "out", "store", "ckpt")
+        )
+        for epoch in (e1, e2):
+            epoch.repartition(1).write.mode("append").parquet(src)
+            q = start(
+                file_stream(spark, src, e1.schema, max_files_per_trigger=1),
+                out, store, ckpt,
+            )
+            await_or_die(q, 180)
+        return _materialized(read(out))
 
 
 # ---------------------------------------------------------------------------
@@ -825,8 +883,6 @@ def dedup_prefer_reg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       first names round-trip through a stdlib-written .xlsx; rows in
       that subset must survive the excel re-ingest, the rest pass
       through untouched."""
-    import tempfile
-
     from .sources.files import (
         csv_companies_source,
         excel_companies_source,
@@ -845,34 +901,36 @@ def dedup_prefer_reg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("0"), F.lpad(F.col("o_orderkey").cast("string"), 12, "0")),
         ).alias("registration_number"),
     )
-    tmp = tempfile.mkdtemp(prefix="csv_roundtrip_")
-    companies.write.mode("overwrite").option("header", True).csv(tmp)
-    deduped = csv_companies_source(spark, tmp)
-    # text_source identity leg
-    names = companies.select("company_name").distinct()
-    names.write.mode("overwrite").text(f"{tmp}/names_txt")
-    text_back = text_companies_source(spark, f"{tmp}/names_txt").select(
-        "company_name"
-    )
-    deduped = deduped.join(text_back, "company_name", "left_semi")
-    # excel_source identity leg (driver-side by design: Excel inputs
-    # are small human-curated lists — the 100 TB side is never Excel)
-    head_names = [
-        r["company_name"]
-        for r in names.orderBy("company_name").limit(50).collect()
-    ]
-    write_minimal_xlsx(
-        f"{tmp}/head.xlsx", ["company_name"], [[n] for n in head_names]
-    )
-    excel_back = excel_companies_source(spark, f"{tmp}/head.xlsx").select(
-        "company_name"
-    )
-    head_df = spark.createDataFrame(
-        [(n,) for n in head_names], "company_name string"
-    )
-    in_excel = deduped.join(F.broadcast(excel_back), "company_name", "left_semi")
-    rest = deduped.join(F.broadcast(head_df), "company_name", "left_anti")
-    return in_excel.unionByName(rest)
+    with _scratch("csv_roundtrip_") as tmp:
+        companies.write.mode("overwrite").option("header", True).csv(tmp)
+        deduped = csv_companies_source(spark, tmp)
+        # text_source identity leg
+        names = companies.select("company_name").distinct()
+        names.write.mode("overwrite").text(f"{tmp}/names_txt")
+        text_back = text_companies_source(spark, f"{tmp}/names_txt").select(
+            "company_name"
+        )
+        deduped = deduped.join(text_back, "company_name", "left_semi")
+        # excel_source identity leg (driver-side by design: Excel inputs
+        # are small human-curated lists — the 100 TB side is never Excel)
+        head_names = [
+            r["company_name"]
+            for r in names.orderBy("company_name").limit(50).collect()
+        ]
+        write_minimal_xlsx(
+            f"{tmp}/head.xlsx", ["company_name"], [[n] for n in head_names]
+        )
+        excel_back = excel_companies_source(spark, f"{tmp}/head.xlsx").select(
+            "company_name"
+        )
+        head_df = spark.createDataFrame(
+            [(n,) for n in head_names], "company_name string"
+        )
+        in_excel = deduped.join(
+            F.broadcast(excel_back), "company_name", "left_semi"
+        )
+        rest = deduped.join(F.broadcast(head_df), "company_name", "left_anti")
+        return _materialized(in_excel.unionByName(rest))
 
 
 @register(
@@ -1803,47 +1861,28 @@ def stream_segment_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFra
     + streaming trigger); prefix-consistency vs the batch operator,
     replay idempotence, and format-marker refusal are pinned in
     tests/test_streaming.py."""
-    import shutil
-    import tempfile
-
-    from .streaming import await_or_die, file_stream
     from .streaming.segments import stream_segment_dedup
 
-    work = tempfile.mkdtemp(prefix="seg_dedup_q_")
-    src, out, store, ckpt = (
-        f"{work}/src", f"{work}/out", f"{work}/store", f"{work}/ckpt"
-    )
     boiler = "shared boilerplate footer passage appears in every epoch"
-    try:
-        docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
-            F.col("doc_id") < 40
-        )
-        e1 = docs.select(
-            "doc_id", F.concat("text", F.lit(" " + boiler)).alias("text")
-        )
-        e1.repartition(1).write.mode("append").parquet(src)
-        q = stream_segment_dedup(
-            file_stream(spark, src, e1.schema, max_files_per_trigger=1),
-            out, store, ckpt, k=8, min_docs=4,
-        )
-        await_or_die(q, 180)
-        e2 = docs.select(
-            (F.col("doc_id") + 100000).alias("doc_id"),
-            F.concat("text", F.lit(" " + boiler)).alias("text"),
-        )
-        e2.repartition(1).write.mode("append").parquet(src)
-        q2 = stream_segment_dedup(
-            file_stream(spark, src, e1.schema, max_files_per_trigger=1),
-            out, store, ckpt, k=8, min_docs=4,
-        )
-        await_or_die(q2, 180)
-        cleaned = spark.read.parquet(f"{out}/epoch=1").select(
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
+        F.col("doc_id") < 40
+    )
+    e1 = docs.select(
+        "doc_id", F.concat("text", F.lit(" " + boiler)).alias("text")
+    )
+    e2 = docs.select(
+        (F.col("doc_id") + 100000).alias("doc_id"),
+        F.concat("text", F.lit(" " + boiler)).alias("text"),
+    )
+    return _two_epoch_stream(
+        spark, "seg_dedup_q_", e1, e2,
+        lambda stream, out, store, ckpt: stream_segment_dedup(
+            stream, out, store, ckpt, k=8, min_docs=4
+        ),
+        lambda out: spark.read.parquet(f"{out}/epoch=1").select(
             "doc_id", "text", "n_segs", "n_dropped"
-        )
-        # materialize before the temp dirs vanish
-        return spark.createDataFrame(cleaned.collect(), cleaned.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+    )
 
 
 @register("stream_substring_dedup_hermetic", None)
@@ -1857,46 +1896,28 @@ def stream_substring_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataF
     streaming trigger); prefix-consistency vs the batch operator,
     replay idempotence, and store refusals are pinned in
     tests/test_substring_stream.py."""
-    import shutil
-    import tempfile
-
-    from .streaming import await_or_die, file_stream
     from .streaming.substrings import stream_substring_dedup
 
-    work = tempfile.mkdtemp(prefix="ss_dedup_q_")
-    src, out, store, ckpt = (
-        f"{work}/src", f"{work}/out", f"{work}/store", f"{work}/ckpt"
-    )
     span = " ".join(f"boiler{i}" for i in range(14))
-    try:
-        docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
-            F.col("doc_id") < 40
-        )
-        e1 = docs.select(
-            "doc_id", F.concat_ws(" ", "text", F.lit(span)).alias("text")
-        )
-        e1.repartition(1).write.mode("append").parquet(src)
-        q = stream_substring_dedup(
-            file_stream(spark, src, e1.schema, max_files_per_trigger=1),
-            out, store, ckpt, min_len=14, min_docs=2,
-        )
-        await_or_die(q, 180)
-        e2 = docs.select(
-            (F.col("doc_id") + 100000).alias("doc_id"),
-            F.concat_ws(" ", F.lit(span), "text").alias("text"),
-        )
-        e2.repartition(1).write.mode("append").parquet(src)
-        q2 = stream_substring_dedup(
-            file_stream(spark, src, e1.schema, max_files_per_trigger=1),
-            out, store, ckpt, min_len=14, min_docs=2,
-        )
-        await_or_die(q2, 180)
-        struck = spark.read.parquet(f"{out}/epoch=1").select(
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
+        F.col("doc_id") < 40
+    )
+    e1 = docs.select(
+        "doc_id", F.concat_ws(" ", "text", F.lit(span)).alias("text")
+    )
+    e2 = docs.select(
+        (F.col("doc_id") + 100000).alias("doc_id"),
+        F.concat_ws(" ", F.lit(span), "text").alias("text"),
+    )
+    return _two_epoch_stream(
+        spark, "ss_dedup_q_", e1, e2,
+        lambda stream, out, store, ckpt: stream_substring_dedup(
+            stream, out, store, ckpt, min_len=14, min_docs=2
+        ),
+        lambda out: spark.read.parquet(f"{out}/epoch=1").select(
             "doc_id", "text", "n_tokens", "n_removed", "n_spans"
-        )
-        return spark.createDataFrame(struck.collect(), struck.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+    )
 
 
 @register("stream_image_dedup_hermetic", None)
@@ -1911,13 +1932,9 @@ def stream_image_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame
     epoch==batch prefix consistency, replay idempotence, the
     undecodable-image contract, and marker refusals are pinned in
     tests/test_image_stream.py."""
-    import shutil
-    import tempfile
-
     import numpy as np
 
     from .multimodal.media import png_encode
-    from .streaming import await_or_die, file_stream
     from .streaming.image_dedup import stream_image_dedup
 
     def _png(seed: int, filter_type: int = 0, shift: int = 0) -> bytes:
@@ -1931,41 +1948,25 @@ def stream_image_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame
         ).astype(np.uint8)
         return png_encode(px.tobytes(), 24, 24, 3, filter_type)
 
-    work = tempfile.mkdtemp(prefix="img_dedup_q_")
-    src, out, store, ckpt = (
-        f"{work}/src", f"{work}/out", f"{work}/store", f"{work}/ckpt"
+    n = 40
+    e1 = spark.createDataFrame(
+        [(i, _png(i)) for i in range(n)], "media_id long, payload binary"
     )
-    try:
-        n = 40
-        e1 = spark.createDataFrame(
-            [(i, _png(i)) for i in range(n)], "media_id long, payload binary"
-        )
-        e1.repartition(1).write.mode("append").parquet(src)
-        q = stream_image_dedup(
-            file_stream(spark, src, e1.schema, max_files_per_trigger=1),
-            out, store, ckpt, codec="png",
-        )
-        await_or_die(q, 180)
-        e2 = spark.createDataFrame(
-            [(1000 + i, _png(i, filter_type=2)) for i in range(0, n, 2)]
-            + [(2000 + i, _png(i, shift=25)) for i in range(1, n, 2)]
-            + [(3000 + i, _png(100 + i)) for i in range(10)],
-            "media_id long, payload binary",
-        )
-        e2.repartition(1).write.mode("append").parquet(src)
-        q2 = stream_image_dedup(
-            file_stream(spark, src, e1.schema, max_files_per_trigger=1),
-            out, store, ckpt, codec="png",
-        )
-        await_or_die(q2, 180)
-        kept = (
-            spark.read.option("basePath", out)
-            .parquet(f"{out}/epoch=*")
-            .select("epoch", "media_id")
-        )
-        return spark.createDataFrame(kept.collect(), kept.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    e2 = spark.createDataFrame(
+        [(1000 + i, _png(i, filter_type=2)) for i in range(0, n, 2)]
+        + [(2000 + i, _png(i, shift=25)) for i in range(1, n, 2)]
+        + [(3000 + i, _png(100 + i)) for i in range(10)],
+        "media_id long, payload binary",
+    )
+    return _two_epoch_stream(
+        spark, "img_dedup_q_", e1, e2,
+        lambda stream, out, store, ckpt: stream_image_dedup(
+            stream, out, store, ckpt, codec="png"
+        ),
+        lambda out: spark.read.option("basePath", out)
+        .parquet(f"{out}/epoch=*")
+        .select("epoch", "media_id"),
+    )
 
 
 @register("stream_near_dedup_hermetic", None)
@@ -1976,46 +1977,29 @@ def stream_near_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only (foreachBatch + streaming trigger, not one SQL
     statement); stream==batch equivalence vs minhash pairs +
     component-min survivors is pinned in tests/test_streaming.py."""
-    import shutil
-    import tempfile
+    from .streaming import stream_near_dedup
 
-    from .streaming import await_or_die, file_stream, stream_near_dedup
-
-    work = tempfile.mkdtemp(prefix="near_dedup_q_")
-    src, out, store, ckpt = (
-        f"{work}/src", f"{work}/out", f"{work}/store", f"{work}/ckpt"
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
+        F.col("doc_id") < 60
     )
-    try:
-        docs = t(spark, sf_dir, "documents").select("doc_id", "text").filter(
-            F.col("doc_id") < 60
-        )
-        docs.repartition(1).write.mode("append").parquet(src)
-        # epoch 2 re-sends a third of epoch 1 under new ids + fresh rows
-        dups = docs.filter(F.col("doc_id") % 3 == 0).select(
-            (F.col("doc_id") + 100000).alias("doc_id"), "text"
-        )
-        fresh = docs.filter(F.col("doc_id") % 3 == 1).select(
-            (F.col("doc_id") + 200000).alias("doc_id"),
-            F.concat(F.lit("entirely different content "),
-                     F.col("doc_id").cast("string")).alias("text"),
-        )
-        q = stream_near_dedup(
-            file_stream(spark, src, docs.schema, max_files_per_trigger=1),
-            out, store, ckpt, threshold=0.6,
-        )
-        await_or_die(q, 180)
-        dups.unionByName(fresh).repartition(1).write.mode("append").parquet(src)
-        q2 = stream_near_dedup(
-            file_stream(spark, src, docs.schema, max_files_per_trigger=1),
-            out, store, ckpt, threshold=0.6,
-        )
-        await_or_die(q2, 180)
-        survivors = spark.read.parquet(f"{out}/epoch=*").select("doc_id", "text")
-        # materialize before the temp dirs vanish
-        return spark.createDataFrame(survivors.collect(), survivors.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-
+    # epoch 2 re-sends a third of epoch 1 under new ids + fresh rows
+    dups = docs.filter(F.col("doc_id") % 3 == 0).select(
+        (F.col("doc_id") + 100000).alias("doc_id"), "text"
+    )
+    fresh = docs.filter(F.col("doc_id") % 3 == 1).select(
+        (F.col("doc_id") + 200000).alias("doc_id"),
+        F.concat(F.lit("entirely different content "),
+                 F.col("doc_id").cast("string")).alias("text"),
+    )
+    return _two_epoch_stream(
+        spark, "near_dedup_q_", docs, dups.unionByName(fresh),
+        lambda stream, out, store, ckpt: stream_near_dedup(
+            stream, out, store, ckpt, threshold=0.6
+        ),
+        lambda out: spark.read.parquet(f"{out}/epoch=*").select(
+            "doc_id", "text"
+        ),
+    )
 
 
 @register("stream_semantic_dedup_hermetic", None)
@@ -2030,51 +2014,35 @@ def stream_semantic_dedup_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFr
     statement); prefix-consistency == batch semantic_dedup, pinned
     history, replay idempotence and store integrity are pinned in
     tests/test_semantic_stream.py."""
-    import shutil
-    import tempfile
-
     from .operators.clustering import kmeans_fit
-    from .streaming import await_or_die, file_stream, stream_semantic_dedup
+    from .streaming import stream_semantic_dedup
 
-    work = tempfile.mkdtemp(prefix="sem_dedup_q_")
-    src, out, store, ckpt = (
-        f"{work}/src", f"{work}/out", f"{work}/store", f"{work}/ckpt"
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    e1 = emb.filter(F.col("vec_id") % 2 == 0)
+    centers = kmeans_fit(e1, n_clusters=8)
+    # epoch 2: a third of epoch 1 re-sent verbatim under new ids
+    # (cross-epoch dups), plus genuinely fresh off-manifold rows
+    dups = e1.filter(F.col("vec_id") % 3 == 0).select(
+        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
     )
-    try:
-        emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        e1 = emb.filter(F.col("vec_id") % 2 == 0)
-        centers = kmeans_fit(e1, n_clusters=8)
-        e1.repartition(1).write.mode("append").parquet(src)
-        q = stream_semantic_dedup(
-            file_stream(spark, src, e1.schema, max_files_per_trigger=1),
-            out, store, ckpt, centers=centers, threshold=0.9999,
-        )
-        await_or_die(q, 180)
-        # epoch 2: a third of epoch 1 re-sent verbatim under new ids
-        # (cross-epoch dups), plus genuinely fresh off-manifold rows
-        dups = e1.filter(F.col("vec_id") % 3 == 0).select(
-            (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-        )
-        fresh = e1.filter(F.col("vec_id") % 3 == 1).select(
-            (F.col("vec_id") + 200000).alias("vec_id"),
-            F.transform(
-                "embedding",
-                lambda x: (x + F.lit(40.0)).cast("float"),
-            ).alias("embedding"),
-        )
-        dups.unionByName(fresh).repartition(1).write.mode("append").parquet(src)
-        q2 = stream_semantic_dedup(
-            file_stream(spark, src, e1.schema, max_files_per_trigger=1),
-            out, store, ckpt, threshold=0.9999,
-        )
-        await_or_die(q2, 180)
-        survivors = spark.read.parquet(f"{out}/epoch=*").select(
+    fresh = e1.filter(F.col("vec_id") % 3 == 1).select(
+        (F.col("vec_id") + 200000).alias("vec_id"),
+        F.transform(
+            "embedding",
+            lambda x: (x + F.lit(40.0)).cast("float"),
+        ).alias("embedding"),
+    )
+    # the resumed start passes the same centers: the store accepts
+    # centers equal to the ones it froze
+    return _two_epoch_stream(
+        spark, "sem_dedup_q_", e1, dups.unionByName(fresh),
+        lambda stream, out, store, ckpt: stream_semantic_dedup(
+            stream, out, store, ckpt, centers=centers, threshold=0.9999
+        ),
+        lambda out: spark.read.parquet(f"{out}/epoch=*").select(
             "vec_id", "cluster"
-        )
-        # materialize before the temp dirs vanish
-        return spark.createDataFrame(survivors.collect(), survivors.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+    )
 
 
 @register("stream_pack_shards_hermetic", None)
@@ -2085,41 +2053,22 @@ def stream_pack_shards_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame
     (foreachBatch + cursor state, not one SQL statement); equality
     with the batch pack over the concatenation is pinned in
     tests/test_streaming.py."""
-    import shutil
-    import tempfile
-
     from .functions.text_analysis import token_count
-    from .streaming import await_or_die, file_stream, stream_pack_shards
+    from .streaming import stream_pack_shards
 
-    work = tempfile.mkdtemp(prefix="stream_shards_q_")
-    src_dir, out, state, ckpt = (
-        f"{work}/src", f"{work}/out", f"{work}/state", f"{work}/ckpt"
+    d = t(spark, sf_dir, "documents").select(
+        "doc_id", token_count(F.col("text")).cast("long").alias("n_tokens")
     )
-    try:
-        d = t(spark, sf_dir, "documents").select(
-            "doc_id", token_count(F.col("text")).cast("long").alias("n_tokens")
-        )
-        e1 = d.filter(F.col("doc_id") % 2 == 0)
-        e2 = d.filter(F.col("doc_id") % 2 == 1)
-        e1.repartition(1).write.mode("append").parquet(src_dir)
-        q = stream_pack_shards(
-            file_stream(spark, src_dir, e1.schema, max_files_per_trigger=1),
-            out, state, ckpt, budget=5000,
-        )
-        await_or_die(q, 180)
-        e2.repartition(1).write.mode("append").parquet(src_dir)
-        q2 = stream_pack_shards(
-            file_stream(spark, src_dir, e1.schema, max_files_per_trigger=1),
-            out, state, ckpt, budget=5000,
-        )
-        await_or_die(q2, 180)
-        packed = spark.read.parquet(f"{out}/epoch=*").select(
+    return _two_epoch_stream(
+        spark, "stream_shards_q_",
+        d.filter(F.col("doc_id") % 2 == 0), d.filter(F.col("doc_id") % 2 == 1),
+        lambda stream, out, state, ckpt: stream_pack_shards(
+            stream, out, state, ckpt, budget=5000
+        ),
+        lambda out: spark.read.parquet(f"{out}/epoch=*").select(
             "doc_id", "n_tokens", "shard"
-        )
-        # materialize before the temp dirs vanish
-        return spark.createDataFrame(packed.collect(), packed.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+    )
 
 
 @register("scrape_pipeline_hermetic", None)
@@ -2528,8 +2477,6 @@ def _ivf_index(spark: SparkSession, sf_dir: str, compression: str = "none") -> s
     in-query form ran). Deterministic (content-hash-sampled kmeans),
     so memoizing changes WHEN it's built, never WHAT is probed."""
     import atexit
-    import shutil
-    import tempfile
 
     from .operators.similarity_search import ivf_build
 
@@ -2595,27 +2542,20 @@ def ivf_build_maintenance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     — returning the index's (n_lists, n_vectors, n_files) summary.
     This is the timing that used to be buried inside the two search
     legs; at scale it amortizes over millions of probes. Rows-only."""
-    import shutil
-    import tempfile
-
+    from .caching import release_caches
     from .operators.similarity_search import ivf_build
 
     e = t(spark, sf_dir, "embeddings")
-    work = tempfile.mkdtemp(prefix="ivf_maint_")
-    try:
+    with _scratch("ivf_maint_") as work:
         ivf_build(e, f"{work}/ivf", n_lists=8)
         lists = spark.read.parquet(f"{work}/ivf/lists")
         out = lists.groupBy().agg(
             F.count_distinct("_list").alias("n_lists"),
             F.count("*").alias("n_vectors"),
         )
-        res = spark.createDataFrame(out.collect(), out.schema)
-        from .caching import release_caches
-
+        res = _materialized(out)
         release_caches()
         return res
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -3143,9 +3083,8 @@ def stream_export_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import gzip
     import json
-    import shutil
-    import tempfile
 
+    from .caching import release_caches
     from .streaming import await_or_die, file_stream, stream_export_training_set
 
     d = (
@@ -3156,49 +3095,46 @@ def stream_export_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = d.filter(F.col("doc_id") == 3).select(
         F.lit(1).cast("long").alias("bench_id"), "text"
     )
-    work = tempfile.mkdtemp(prefix="stream_export_q_")
-    src = f"{work}/src"
-    try:
-        d.repartition(1).write.mode("append").parquet(src)
-        q = stream_export_training_set(
-            file_stream(spark, src, d.schema, max_files_per_trigger=1),
-            f"{work}/out", f"{work}/state", f"{work}/ckpt",
-            keep_langs=("en", "de", "fr", "es", "zh", "und"),
-            min_quality=0.0, min_tokens=1, near_dup_threshold=0.6,
-            shard_token_budget=2000,
-            contamination_opts={
-                "benchmark": bench,
-                "threshold": 0.5,
-                "containment_threshold": 0.9,
-                "action": "quarantine",
-            },
-        )
-        await_or_die(q, 240)
-        rows = []
-        for f in sorted(glob.glob(f"{work}/out/split=*/epoch=*/shard=*/*.gz")):
-            label = f.split("split=")[1].split("/")[0]
-            shard = int(f.split("shard=")[1].split("/")[0])
-            with gzip.open(f, "rt", encoding="utf-8") as fh:
-                for line in fh:
-                    r = json.loads(line)
-                    rows.append((r["doc_id"], label, shard, r["n_tokens"]))
-        for r in spark.read.parquet(f"{work}/out/contamination/epoch=0").collect():
-            rows.append(
-                (
-                    r["doc_id"],
-                    "contaminated",
-                    r["bench_id"],
-                    int(round(r["containment"] * 1_000_000)),
-                )
+    with _scratch("stream_export_q_") as work:
+        src = f"{work}/src"
+        try:
+            d.repartition(1).write.mode("append").parquet(src)
+            q = stream_export_training_set(
+                file_stream(spark, src, d.schema, max_files_per_trigger=1),
+                f"{work}/out", f"{work}/state", f"{work}/ckpt",
+                keep_langs=("en", "de", "fr", "es", "zh", "und"),
+                min_quality=0.0, min_tokens=1, near_dup_threshold=0.6,
+                shard_token_budget=2000,
+                contamination_opts={
+                    "benchmark": bench,
+                    "threshold": 0.5,
+                    "containment_threshold": 0.9,
+                    "action": "quarantine",
+                },
             )
-        return spark.createDataFrame(
-            rows, "doc_id long, split string, shard long, n_tokens long"
-        )
-    finally:
-        from .caching import release_caches
-
-        release_caches()
-        shutil.rmtree(work, ignore_errors=True)
+            await_or_die(q, 240)
+            rows = []
+            for f in sorted(glob.glob(f"{work}/out/split=*/epoch=*/shard=*/*.gz")):
+                label = f.split("split=")[1].split("/")[0]
+                shard = int(f.split("shard=")[1].split("/")[0])
+                with gzip.open(f, "rt", encoding="utf-8") as fh:
+                    for line in fh:
+                        r = json.loads(line)
+                        rows.append((r["doc_id"], label, shard, r["n_tokens"]))
+            for r in spark.read.parquet(f"{work}/out/contamination/epoch=0").collect():
+                rows.append(
+                    (
+                        r["doc_id"],
+                        "contaminated",
+                        r["bench_id"],
+                        int(round(r["containment"] * 1_000_000)),
+                    )
+                )
+            return spark.createDataFrame(
+                rows, "doc_id long, split string, shard long, n_tokens long"
+            )
+        finally:
+            release_caches()
 
 
 @register("training_export_hermetic", None)
@@ -3210,30 +3146,27 @@ def training_export_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan writes files); layout, split disjointness,
     shard budgets, and rerun determinism are pinned in
     tests/test_curation.py."""
-    import shutil
-    import tempfile
-
+    from .caching import release_caches
     from .plans.training_export import export_training_set
 
     d = t(spark, sf_dir, "documents")
-    work = tempfile.mkdtemp(prefix="train_export_q_")
-    try:
-        export_training_set(
-            d,
-            work,
-            mix_weights={"src0": 0.5, "src1": 0.3, "src2": 0.2},
-            shard_token_budget=2000,
-            curate_kwargs={"keep_langs": ("en", "de", "fr", "es", "zh", "und")},
-        )
-        out = spark.read.json(f"{work}/split=train").select(
-            "doc_id", "n_tokens", "shard"
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        from .caching import release_caches
-
-        release_caches()
-        shutil.rmtree(work, ignore_errors=True)
+    with _scratch("train_export_q_") as work:
+        try:
+            export_training_set(
+                d,
+                work,
+                mix_weights={"src0": 0.5, "src1": 0.3, "src2": 0.2},
+                shard_token_budget=2000,
+                curate_kwargs={
+                    "keep_langs": ("en", "de", "fr", "es", "zh", "und")
+                },
+            )
+            out = spark.read.json(f"{work}/split=train").select(
+                "doc_id", "n_tokens", "shard"
+            )
+            return _materialized(out)
+        finally:
+            release_caches()
 
 
 @register("embedding_curation", None)
@@ -4417,17 +4350,13 @@ def warc_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics are the wire format, which SQL cannot express; the
     pytest suite (test_warc.py) additionally pins the record grammar,
     resync, chunked-HTTP split, and stream==binaryFile parity."""
-    import shutil
-    import tempfile
-
     from .sources.warc import warc_sink, wet_documents_source
 
     docs = t(spark, sf_dir, "documents").select(
         F.concat(F.lit("https://corpus.test/doc/"), F.col("doc_id")).alias("url"),
         "text",
     )
-    work = tempfile.mkdtemp(prefix="warc_rt_")
-    try:
+    with _scratch("warc_rt_") as work:
         manifest = warc_sink(docs.repartition(4), f"{work}/wet")
         back = wet_documents_source(spark, f"{work}/wet/*.warc.gz")
         joined = back.join(docs, "url", "full_outer")
@@ -4446,10 +4375,7 @@ def warc_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(len(manifest)).alias("n_files"),
             F.lit(sum(m["n_records"] for m in manifest)).alias("n_written"),
         )
-        # materialize before the temp dir vanishes
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return _materialized(out)
 
 
 @register("wat_roundtrip", None)
@@ -4462,9 +4388,6 @@ def wat_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     envelope shape, parse back, and verify titles/link counts
     survived value-exact. Rows-only by design (wire format);
     test_warc.py pins the envelope path and the bad-JSON quarantine."""
-    import shutil
-    import tempfile
-
     from .sources.warc import wat_metadata_source, wat_sink
 
     docs = t(spark, sf_dir, "documents").select(
@@ -4475,8 +4398,7 @@ def wat_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.concat(F.lit("https://corpus.test/link/"), i.cast("string")),
         ).alias("links"),
     )
-    work = tempfile.mkdtemp(prefix="wat_rt_")
-    try:
+    with _scratch("wat_rt_") as work:
         manifest = wat_sink(docs.repartition(4), f"{work}/wat")
         back = wat_metadata_source(spark, f"{work}/wat/*.warc.gz")
         joined = back.join(docs, "url", "full_outer")
@@ -4499,9 +4421,7 @@ def wat_roundtrip_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_errors",
             F.lit(sum(m["n_records"] for m in manifest)).alias("n_written"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return _materialized(out)
 
 
 _PAGERANK_ITERS = 15
@@ -4597,6 +4517,7 @@ def link_graph_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans of 5 make Catalyst optimization of the nested round plans
     itself the bottleneck (~2× slower than per-round writes), spans
     of 3 beat both."""
+    from .caching import release_caches
     from .operators.graph import pagerank
 
     d = t(spark, sf_dir, "documents").select("doc_id")
@@ -4619,11 +4540,7 @@ def link_graph_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         checkpoint_every=3,
     )
     out = ranks.orderBy(F.col("rank_q").desc(), F.col("id").asc()).limit(20)
-    # materialize before release: the checkpoint parquet backing the
-    # result is reclaimed by the caller's release_caches()
-    res = spark.createDataFrame(out.collect(), out.schema)
-    from .caching import release_caches
-
+    res = _materialized(out)
     release_caches()
     return res
 
@@ -4643,6 +4560,7 @@ def trustrank_demotion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     demotion is IN the result. Rows-only: iterative checkpointed loop;
     bit-exactness vs a pure-Python replica of the seeded recurrence is
     pinned in tests/test_graph.py."""
+    from .caching import release_caches
     from .operators.graph import pagerank
 
     d = t(spark, sf_dir, "documents").select("doc_id")
@@ -4669,9 +4587,7 @@ def trustrank_demotion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = top.unionByName(demoted).orderBy(
         F.col("rank_q").desc(), F.col("id").asc()
     )
-    res = spark.createDataFrame(out.collect(), out.schema)
-    from .caching import release_caches
-
+    res = _materialized(out)
     release_caches()
     return res
 
@@ -4698,9 +4614,7 @@ def crawl_rank_curation_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFram
     SQL-expressible, but every constituent operator is individually
     oracle- or test-pinned (wat_roundtrip, link_graph_pagerank,
     domain-gate legs in tests/test_domains.py)."""
-    import shutil
-    import tempfile
-
+    from .caching import release_caches, tracked_persist
     from .operators.domains import extract_domain, per_domain_cap
     from .operators.graph import pagerank
     from .sources.warc import wat_metadata_source, wat_sink
@@ -4722,16 +4636,13 @@ def crawl_rank_curation_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFram
             ),
         ).alias("links"),
     )
-    work = tempfile.mkdtemp(prefix="crawl_rank_cur_")
-    try:
+    with _scratch("crawl_rank_cur_") as work:
         wat_sink(pages.repartition(2), f"{work}/wat")
         # opt r12: the summary's six aggregate branches and the
         # rank/gate/cap lineages each re-ran the gzip WAT parse (a
         # Python mapInArrow source) — persist the parsed relation once
         # and every branch reads the cache; released with the query's
         # existing release_caches() after the collect
-        from .caching import tracked_persist
-
         parsed = tracked_persist(
             wat_metadata_source(spark, f"{work}/wat/*.warc.gz")
         )
@@ -4781,13 +4692,9 @@ def crawl_rank_curation_hermetic_q(spark: SparkSession, sf_dir: str) -> DataFram
                 )
             )
         )
-        res = spark.createDataFrame(summary.collect(), summary.schema)
-        from .caching import release_caches
-
+        res = _materialized(summary)
         release_caches()
         return res
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 def _reorder_registry() -> None:

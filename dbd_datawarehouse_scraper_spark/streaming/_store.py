@@ -14,7 +14,8 @@ stay local):
   wrapper keeps its start-time validation and epoch closure and
   returns this (the ``pool_mark``/``release_since`` bracket stays in
   each ``*_epoch`` function: the export runs several in one epoch);
-- :func:`validate_or_init_marker` — the format-marker handshake;
+- :class:`StoreMarker` — a store's format marker, declared once per
+  store module, and its read-or-write handshake (``check``);
 - :class:`EpochDirs` — the ``epoch=N`` layout of one store sub-dir:
   its fold, its history listing, its read and its epoch write.
 
@@ -104,64 +105,84 @@ def await_or_die(q: StreamingQuery, timeout_s: int) -> None:
         )
 
 
-def validate_or_init_marker(
-    spark: SparkSession,
-    store_path: str,
-    schema: str,
-    want: tuple,
-    noun: str,
-    mismatch_hint: str,
-    free_fields: tuple = (),
-    init: bool = True,
-) -> dict:
-    """Read-or-write the store's format marker. ``schema`` is the
-    marker's DDL (first field MUST be ``format_version INT``); ``want``
-    is the full value tuple in schema order. An existing marker must
-    match ``want`` exactly on every field NOT named in ``free_fields``;
-    a store directory without a marker refuses (pre-versioning or
-    corrupted); a fresh path writes the marker (unless ``init=False``
-    — the read-only handshake for paths that must never create a
-    store, which raises on a missing marker instead).
+@dataclass(frozen=True)
+class StoreMarker:
+    """A store's format marker, declared once per store module.
+    ``schema`` is the marker's DDL (first field MUST be
+    ``format_version INT``); ``noun`` and ``mismatch_hint`` word the
+    refusals. ``free_fields`` names fields that are STORE STATE rather
+    than caller input (the bucketed stores' bucket counts, fixed at
+    store creation): an existing marker's value wins over the
+    caller's, which only seeds a fresh store. Every free field is a
+    positive int."""
 
-    ``free_fields`` names fields that are STORE STATE rather than
-    caller input (e.g. a bucket count fixed at store creation): an
-    existing marker's value wins and is returned; the ``want`` value
-    only seeds a fresh store. Returns the marker's field dict (the
-    existing marker's values, or ``want`` for a fresh store)."""
-    marker = f"{store_path}/format"
-    fields = [f.split()[0] for f in schema.split(",")]
-    if fs_exists(spark, marker):
-        row = fs_read_json_row(spark, marker, schema)
-        if row is None or row["format_version"] is None:
-            raise ValueError(
-                f"{noun} marker at {marker} exists but is unreadable — "
-                "wipe the store before continuing."
+    schema: str
+    noun: str
+    mismatch_hint: str
+    free_fields: tuple = ()
+
+    def check(
+        self,
+        spark: SparkSession,
+        store_path: str,
+        want: tuple,
+        init: bool = True,
+    ) -> dict:
+        """Read-or-write the marker under ``store_path``. ``want`` is
+        the full value tuple in schema order. An existing marker must
+        match ``want`` on every field not in ``free_fields``; a store
+        directory without a marker refuses (pre-versioning or
+        corrupted); a fresh path writes the marker, unless
+        ``init=False`` (the read-only handshake for paths that must
+        never create a store), which refuses instead. A non-positive
+        free field refuses: the caller's seed before anything is read
+        or written, the stored value on read. Returns the marker's
+        field dict (the existing marker's values, or ``want`` for a
+        fresh store)."""
+        marker = f"{store_path}/format"
+        fields = [f.split()[0] for f in self.schema.split(",")]
+        if init:
+            for f, w in zip(fields, want):
+                if f in self.free_fields and w < 1:
+                    raise ValueError(f"{f} must be >= 1, got {w}")
+        if fs_exists(spark, marker):
+            row = fs_read_json_row(spark, marker, self.schema)
+            if row is None or row["format_version"] is None:
+                raise ValueError(
+                    f"{self.noun} marker at {marker} exists but is "
+                    "unreadable — wipe the store before continuing."
+                )
+            pinned = [f for f in fields if f not in self.free_fields]
+            found = tuple(row[f] for f in pinned)
+            need = tuple(
+                w for f, w in zip(fields, want) if f not in self.free_fields
             )
-        pinned = [f for f in fields if f not in free_fields]
-        found = tuple(row[f] for f in pinned)
-        need = tuple(
-            w for f, w in zip(fields, want) if f not in free_fields
-        )
-        if found != need:
+            if found != need:
+                raise ValueError(
+                    f"{self.noun} at {store_path} has format "
+                    f"({', '.join(pinned)})={found}, but this run needs "
+                    f"{need}. {self.mismatch_hint} — wipe the store or "
+                    "rerun with its parameters."
+                )
+            for f in self.free_fields:
+                if row[f] is None or row[f] < 1:
+                    raise ValueError(
+                        f"{self.noun} marker at {marker} carries no valid "
+                        f"{f} — wipe the store and re-ingest."
+                    )
+            return {f: row[f] for f in fields}
+        if fs_exists(spark, store_path):
             raise ValueError(
-                f"{noun} at {store_path} has format "
-                f"({', '.join(pinned)})={found}, but this run needs "
-                f"{need}. {mismatch_hint} — wipe the store or "
-                "rerun with its parameters."
+                f"{self.noun} at {store_path} exists but has no format "
+                "marker — it predates store versioning or is corrupted. "
+                "Wipe it before continuing."
             )
-        return {f: row[f] for f in fields}
-    if fs_exists(spark, store_path):
-        raise ValueError(
-            f"{noun} at {store_path} exists but has no format marker — "
-            "it predates store versioning or is corrupted. Wipe it "
-            "before continuing."
-        )
-    if not init:
-        raise ValueError(
-            f"no {noun} at {store_path} (missing format marker)"
-        )
-    fs_write_json_row(spark, marker, schema, tuple(want))
-    return dict(zip(fields, want))
+        if not init:
+            raise ValueError(
+                f"no {self.noun} at {store_path} (missing format marker)"
+            )
+        fs_write_json_row(spark, marker, self.schema, tuple(want))
+        return dict(zip(fields, want))
 
 
 @dataclass(frozen=True)
@@ -235,19 +256,6 @@ class EpochDirs:
         else:
             writer = df.write.mode("overwrite")
         writer.parquet(self.path(epoch_id))
-
-
-def marker_positive_int(row: dict, field: str, store_path: str, noun: str) -> int:
-    """Validate a free marker field that must be a positive int (the
-    bucketed stores' bucket counts): free fields are store state the
-    exact-match handshake doesn't cover, so each reader re-checks them
-    — this is the one copy of that check (round-12 review)."""
-    if row[field] is None or row[field] < 1:
-        raise ValueError(
-            f"{noun} marker at {store_path}/format carries no valid "
-            f"{field} — wipe the store and re-ingest."
-        )
-    return int(row[field])
 
 
 _OUT_MARKER_SCHEMA = "out_version INT, columns STRING"

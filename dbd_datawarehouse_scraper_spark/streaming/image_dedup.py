@@ -46,7 +46,7 @@ from ..multimodal.image_dedup import HASH_H, HASH_W, dhash_media
 from ..operators.dedup import hamming_pairs
 from ..operators.graph import component_survivors
 from ..sources.sinks import check_fold_threshold
-from ._store import EpochDirs, run_epochs
+from ._store import EpochDirs, StoreMarker, run_epochs
 
 #: Bump when the dHash construction (grid, kernel family) or store
 #: layout changes incompatibly; stores refuse to mix formats.
@@ -63,9 +63,13 @@ STORE_FORMAT_VERSION = 1
 #: package.
 BROADCAST_PROBE_MAX_HASHES = 1_000_000
 
-_MARKER_SCHEMA = (
+_MARKER = StoreMarker(
     "format_version INT, codec STRING, max_hamming INT, "
-    "hash_w INT, hash_h INT"
+    "hash_w INT, hash_h INT",
+    "image-hash store",
+    "dHashes from different codecs, grids, or Hamming radii do not "
+    "compare meaningfully — historical near-duplicates would "
+    "silently pass or false-drop",
 )
 
 
@@ -81,16 +85,11 @@ def _validate_or_init_store(
     BEFORE the marker write, so a typo'd codec refuses without
     poisoning a fresh store path."""
     from ..multimodal.media import _resolve_codec
-    from ._store import validate_or_init_marker
 
     chosen = _resolve_codec(codec)
-    validate_or_init_marker(
-        spark, store_path, _MARKER_SCHEMA,
+    _MARKER.check(
+        spark, store_path,
         (STORE_FORMAT_VERSION, chosen, max_hamming, HASH_W, HASH_H),
-        "image-hash store",
-        "dHashes from different codecs, grids, or Hamming radii do not "
-        "compare meaningfully — historical near-duplicates would "
-        "silently pass or false-drop",
     )
     return chosen
 

@@ -76,7 +76,7 @@ from ..fsutil import (
     fs_write_json_row,
 )
 from ..sources.sinks import check_fold_threshold
-from ._store import EpochDirs, run_epochs, validate_or_init_marker
+from ._store import EpochDirs, StoreMarker, run_epochs
 
 #: Bump when the edge layout changes incompatibly. v2 = hash-bucketed
 #: epoch dirs (round 12); v1 stores refuse with a wipe/re-ingest hint.
@@ -93,7 +93,13 @@ DEFAULT_N_BUCKETS = 32
 #: batches fall back to the bucketed sort-merge anti-join.
 BROADCAST_STRIKE_MAX_ROWS = 1_000_000
 
-_MARKER_SCHEMA = "format_version INT, directed INT, n_buckets INT"
+_MARKER = StoreMarker(
+    "format_version INT, directed INT, n_buckets INT",
+    "link-graph store",
+    "Edges written under one layout cannot be read under another; "
+    "wipe the store and re-ingest",
+    free_fields=("n_buckets",),
+)
 _META_SCHEMA = (
     "gen INT, as_of_epoch INT, n_edges BIGINT, n_nodes BIGINT, "
     "damping INT, max_iter INT"
@@ -105,10 +111,10 @@ def _store_n_buckets(
     store_path: str,
     n_buckets_default: int | None = None,
 ) -> int:
-    """Marker handshake via the shared _store protocol, with
-    ``n_buckets`` as a FREE field (store state fixed at creation, not
-    caller input — a caller-supplied count only seeds a NEW store).
-    Returns the store's pinned bucket count.
+    """Marker handshake, with ``n_buckets`` as a FREE field (store
+    state fixed at creation, not caller input — a caller-supplied
+    count only seeds a NEW store). Returns the store's pinned bucket
+    count.
     ``n_buckets_default=None`` is the read-only form for the read
     paths (stored_edges / refresh_ranks / current_ranks): a v1 or
     unversioned store must refuse there exactly as on ingest —
@@ -116,26 +122,16 @@ def _store_n_buckets(
     check and read as an EMPTY edge relation (then committed an empty
     rank generation advertising the real max epoch)."""
     init = n_buckets_default is not None
-    if init and n_buckets_default < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets_default}")
-    row = validate_or_init_marker(
+    return _MARKER.check(
         spark,
         store_path,
-        _MARKER_SCHEMA,
         (
             LINK_STORE_FORMAT_VERSION,
             1,
             int(n_buckets_default) if init else None,
         ),
-        "link-graph store",
-        "Edges written under one layout cannot be read under another; "
-        "wipe the store and re-ingest",
-        free_fields=("n_buckets",),
         init=init,
-    )
-    from ._store import marker_positive_int
-
-    return marker_positive_int(row, "n_buckets", store_path, "link-graph store")
+    )["n_buckets"]
 
 
 def _bucket_of(src: F.Column, dst: F.Column, n_buckets: int) -> F.Column:

@@ -85,7 +85,7 @@ from ..fsutil import fs_exists
 from ..operators.dedup import lsh_band_buckets, minhash_lsh_pairs_and_sigs
 from ..operators.graph import component_survivors
 from ..sources.sinks import check_fold_threshold
-from ._store import EpochDirs, run_epochs
+from ._store import EpochDirs, StoreMarker, run_epochs
 
 #: Bump when the signature encoding (hash family, band hashing, or
 #: store layout) changes incompatibly; stores refuse to mix formats.
@@ -114,40 +114,17 @@ BROADCAST_PROBE_MAX_BAND_ROWS = 4_000_000
 #: signature-verify join (the pruned sig scan streams, never shuffles).
 BROADCAST_CAND_MAX_ROWS = 1_000_000
 
-_MARKER_SCHEMA = (
-    "format_version INT, num_hashes INT, bands INT, k INT, n_buckets INT"
+#: ``n_buckets`` is STORE STATE (a free marker field): it seeds a NEW
+#: store only — an existing store's pinned bucketing wins, because sig
+#: partition dirs written under one bucketing would be silently missed
+#: by pruned reads under another.
+_MARKER = StoreMarker(
+    "format_version INT, num_hashes INT, bands INT, k INT, n_buckets INT",
+    "signature store",
+    "Signatures from different MinHash/band configurations never "
+    "collide or estimate correctly",
+    free_fields=("n_buckets",),
 )
-
-
-def _validate_or_init_store(
-    spark: SparkSession,
-    store_path: str,
-    num_hashes: int,
-    bands: int,
-    k: int,
-    n_buckets: int = DEFAULT_SIG_BUCKETS,
-) -> int:
-    """Ensure ``store_path`` carries a compatible format marker, writing
-    one iff the store does not exist yet (the shared _store protocol).
-    ``n_buckets`` is STORE STATE (a free marker field): it seeds a NEW
-    store only — an existing store's pinned bucketing wins, because sig
-    partition dirs written under one bucketing would be silently missed
-    by pruned reads under another. Returns the store's bucket count."""
-    from ._store import validate_or_init_marker
-
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    row = validate_or_init_marker(
-        spark, store_path, _MARKER_SCHEMA,
-        (STORE_FORMAT_VERSION, num_hashes, bands, k, int(n_buckets)),
-        "signature store",
-        "Signatures from different MinHash/band configurations never "
-        "collide or estimate correctly",
-        free_fields=("n_buckets",),
-    )
-    from ._store import marker_positive_int
-
-    return marker_positive_int(row, "n_buckets", store_path, "signature store")
 
 
 def _sbucket_of(id_col: F.Column, n_buckets: int) -> F.Column:
@@ -232,7 +209,10 @@ def stream_near_dedup(
 
     check_fold_threshold("fold_store_after", fold_store_after)
     spark = stream_docs.sparkSession
-    _validate_or_init_store(spark, store_path, num_hashes, bands, k, n_buckets)
+    _MARKER.check(
+        spark, store_path,
+        (STORE_FORMAT_VERSION, num_hashes, bands, k, int(n_buckets)),
+    )
     # pin the survivor schema under out_path/_schema (advisor r5: a
     # stream resumed over an out_path written by the brief round-5
     # all-columns build would mix schemas across epoch dirs)
@@ -306,9 +286,10 @@ def near_dedup_epoch(
     # pipelines) get the same format-marker protection the stream
     # wrapper establishes at start. The STORE's pinned bucketing wins
     # over the argument (free marker field).
-    b = _validate_or_init_store(
-        spark, store_path, num_hashes, bands, k, n_buckets
-    )
+    b = _MARKER.check(
+        spark, store_path,
+        (STORE_FORMAT_VERSION, num_hashes, bands, k, int(n_buckets)),
+    )["n_buckets"]
     overwrite = (
         "proceeding would overwrite committed epoch signatures one by "
         "one while deduping only against the remnant — silently "

@@ -52,7 +52,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import pool_mark, release_since, tracked_persist
 from ..sources.sinks import check_fold_threshold
-from ._store import EpochDirs, run_epochs
+from ._store import EpochDirs, StoreMarker, run_epochs
 
 #: Bump when the segment hashing or store layout changes incompatibly.
 STORE_FORMAT_VERSION = 1
@@ -63,7 +63,11 @@ STORE_FORMAT_VERSION = 1
 #: unshuffled; larger batches take the plain semi join.
 BROADCAST_KEYS_MAX_ROWS = 4_000_000
 
-_MARKER_SCHEMA = "format_version INT, mode STRING, k INT"
+_MARKER = StoreMarker(
+    "format_version INT, mode STRING, k INT",
+    "segment store",
+    "Counts from different segmentations never combine correctly",
+)
 
 
 def _merge_freq(df: DataFrame) -> DataFrame:
@@ -73,19 +77,6 @@ def _merge_freq(df: DataFrame) -> DataFrame:
     from ..operators.segments import _HS
 
     return df.groupBy(_HS).agg(F.sum("doc_count").alias("doc_count"))
-
-
-def _validate_or_init_store(
-    spark: SparkSession, store_path: str, mode: str, k: int
-) -> None:
-    from ._store import validate_or_init_marker
-
-    validate_or_init_marker(
-        spark, store_path, _MARKER_SCHEMA,
-        (STORE_FORMAT_VERSION, mode, k),
-        "segment store",
-        "Counts from different segmentations never combine correctly",
-    )
 
 
 def stream_segment_dedup(
@@ -107,7 +98,7 @@ def stream_segment_dedup(
     ``store_path/freq/epoch=N``. Returns the StreamingQuery."""
     check_fold_threshold("fold_store_after", fold_store_after)
     spark = stream_docs.sparkSession
-    _validate_or_init_store(spark, store_path, mode, k)
+    _MARKER.check(spark, store_path, (STORE_FORMAT_VERSION, mode, k))
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         segment_dedup_epoch(
@@ -139,7 +130,7 @@ def segment_dedup_epoch(
     ``out_path/epoch=<epoch_id>`` and the epoch's frequency delta to
     the store. Epoch-suffixed overwrites keep replays idempotent.
     Releases exactly the caches it pins (pool-scoped). Returns True iff the epoch had rows."""
-    _validate_or_init_store(spark, store_path, mode, k)
+    _MARKER.check(spark, store_path, (STORE_FORMAT_VERSION, mode, k))
     # the aggregating merge keeps folded generations at one row per
     # segment hash
     freq = EpochDirs(

@@ -57,7 +57,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..caching import pool_mark, release_since, tracked_persist
 from ..sources.sinks import check_fold_threshold
-from ._store import EpochDirs, run_epochs
+from ._store import EpochDirs, StoreMarker, run_epochs
 
 #: Bump when the window hashing or store layout changes incompatibly.
 STORE_FORMAT_VERSION = 1
@@ -68,7 +68,11 @@ STORE_FORMAT_VERSION = 1
 #: through unshuffled; larger batches take the plain semi join.
 BROADCAST_KEYS_MAX_ROWS = 4_000_000
 
-_MARKER_SCHEMA = "format_version INT, min_len INT"
+_MARKER = StoreMarker(
+    "format_version INT, min_len INT",
+    "substring store",
+    "Window hashes of different widths never combine correctly",
+)
 
 
 def _merge_stats(df: DataFrame) -> DataFrame:
@@ -97,19 +101,6 @@ def _merge_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def _validate_or_init_store(
-    spark: SparkSession, store_path: str, min_len: int
-) -> None:
-    from ._store import validate_or_init_marker
-
-    validate_or_init_marker(
-        spark, store_path, _MARKER_SCHEMA,
-        (STORE_FORMAT_VERSION, min_len),
-        "substring store",
-        "Window hashes of different widths never combine correctly",
-    )
-
-
 def stream_substring_dedup(
     stream_docs: DataFrame,
     out_path: str,
@@ -134,7 +125,7 @@ def stream_substring_dedup(
     validate_substring_params(min_len, min_docs)
     check_fold_threshold("fold_store_after", fold_store_after)
     spark = stream_docs.sparkSession
-    _validate_or_init_store(spark, store_path, min_len)
+    _MARKER.check(spark, store_path, (STORE_FORMAT_VERSION, min_len))
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         substring_dedup_epoch(
@@ -172,7 +163,7 @@ def substring_dedup_epoch(
     from ..operators.substrings import validate_substring_params
 
     validate_substring_params(min_len, min_docs)
-    _validate_or_init_store(spark, store_path, min_len)
+    _MARKER.check(spark, store_path, (STORE_FORMAT_VERSION, min_len))
     # the aggregating merge keeps folded generations at one row per
     # window hash
     stats = EpochDirs(

@@ -1,7 +1,10 @@
 """The shared epoch runner (streaming/_store.py run_epochs), the one
-fold-or-recover call and the one epoch-dir layout (_store.EpochDirs):
-a structural guard that no module re-grows its own stream writer,
-recovery call, history listing, partitioned read or write, and one
+fold-or-recover call, the one epoch-dir layout (_store.EpochDirs) and
+the one declared format marker per store (_store.StoreMarker):
+structural guards that no module re-grows its own stream writer,
+recovery call, history listing, partitioned read or write, marker
+handshake or (in queries.py) scratch-dir and two-epoch stream setup;
+one marker-refusal test over the StoreMarker stores; and one
 crash-replay test run against every ``foreachBatch`` wrapper.
 
 The crash-replay test wraps the epoch function through ``run_epochs``
@@ -12,6 +15,7 @@ row-for-row equal to an uninterrupted run. Its ``-fold`` variants run
 every fold-capable wrapper with a fold threshold of 1, so epoch 1
 folds epoch 0 (and its replay re-folds the folded generation)."""
 
+import ast
 import gzip
 import hashlib
 import importlib
@@ -25,6 +29,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from dbd_datawarehouse_scraper_spark.fsutil import fs_read_json_row, fs_write_json_row
 from dbd_datawarehouse_scraper_spark.streaming import _store, file_stream
 
 PKG = Path(__file__).resolve().parents[1] / "dbd_datawarehouse_scraper_spark"
@@ -57,6 +62,60 @@ def test_one_stream_writer_and_one_recovery_caller():
         }
         assert in_streaming <= {"streaming/_store.py"}, (pattern, in_streaming)
     assert _modules_matching(r"epochs_with_partition_data|_epochs_with_data") == []
+
+
+def _callers(tree: ast.Module) -> dict[str, set[str]]:
+    """Called name (``f`` or ``x.f``) → the top-level functions that
+    call it (``<module>`` for calls outside any function)."""
+    out: dict[str, set[str]] = {}
+    for top in tree.body:
+        owner = top.name if isinstance(top, ast.FunctionDef) else "<module>"
+        for node in ast.walk(top):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = (
+                    f"{ast.unparse(f.value)}.{f.attr}"
+                    if isinstance(f, ast.Attribute) else ast.unparse(f)
+                )
+                out.setdefault(name, set()).add(owner)
+    return out
+
+
+def test_one_scratch_harness_and_one_marker_per_store():
+    """queries.py makes its temp dirs in ``_scratch`` (plus the IVF
+    session memo, deleted at exit by design), drives its two-epoch
+    streams through ``_two_epoch_stream`` (the one-epoch export query
+    keeps its own), and never rebuilds a frame from its own collect
+    (``_materialized`` does that as a LocalTableScan). Each epoch store
+    that states its marker through StoreMarker declares it once."""
+    tree = ast.parse((PKG / "queries.py").read_text(encoding="utf-8"))
+    calls = _callers(tree)
+    assert calls["tempfile.mkdtemp"] == {"_scratch", "_ivf_index"}
+    for fn in ("file_stream", "await_or_die"):
+        assert calls[fn] == {"_two_epoch_stream", "stream_export_hermetic_q"}, fn
+    rebuilt = [
+        ast.unparse(node)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+        and len(node.args) >= 2
+        and isinstance(node.args[0], ast.Call)
+        and isinstance(node.args[0].func, ast.Attribute)
+        and node.args[0].func.attr == "collect"
+        and isinstance(node.args[1], ast.Attribute)
+        and node.args[1].attr == "schema"
+        and ast.dump(node.args[0].func.value) == ast.dump(node.args[1].value)
+    ]
+    assert rebuilt == []
+
+    declared = {
+        p.stem: p.read_text(encoding="utf-8").count("StoreMarker(")
+        for p in (PKG / "streaming").glob("*.py")
+    }
+    assert {m for m, n in declared.items() if n} == set(MARKER_STORES)
+    assert all(n <= 1 for n in declared.values()), declared
+    assert _modules_matching(r"validate_or_init_marker|marker_positive_int") == []
 
 
 # ---------------------------------------------------------------- cases
@@ -364,3 +423,105 @@ def test_crash_after_epoch_writes_replays_to_identical_state(
         _run_to_end(start(spark, src, schema, off, str(tmp_path / "off_ckpt"), **never))
         skip = ("_FOLDED_GEN",)
         assert _tree_digest(ref, skip) == _tree_digest(off, skip)
+
+
+# ---------------------------------------------------- marker refusals
+
+
+def _docs_batch(spark):
+    return spark.createDataFrame([], "doc_id long, text string")
+
+
+def _open_segments(spark, d, **kw):
+    from dbd_datawarehouse_scraper_spark.streaming.segments import (
+        segment_dedup_epoch,
+    )
+
+    segment_dedup_epoch(spark, _docs_batch(spark), 0, f"{d}/out", f"{d}/store", **kw)
+
+
+def _open_substrings(spark, d, **kw):
+    from dbd_datawarehouse_scraper_spark.streaming.substrings import (
+        substring_dedup_epoch,
+    )
+
+    substring_dedup_epoch(
+        spark, _docs_batch(spark), 0, f"{d}/out", f"{d}/store", min_len=8, **kw
+    )
+
+
+def _open_near_dedup(spark, d, **kw):
+    from dbd_datawarehouse_scraper_spark.streaming.near_dedup import (
+        near_dedup_epoch,
+    )
+
+    near_dedup_epoch(spark, _docs_batch(spark), 0, f"{d}/out", f"{d}/store", **kw)
+
+
+def _open_image(spark, d, **kw):
+    from dbd_datawarehouse_scraper_spark.streaming.image_dedup import (
+        image_dedup_epoch,
+    )
+
+    image_dedup_epoch(
+        spark, spark.createDataFrame([], "media_id long, payload binary"), 0,
+        f"{d}/out", f"{d}/store", codec="png", **kw,
+    )
+
+
+def _open_link_graph(spark, d, **kw):
+    from dbd_datawarehouse_scraper_spark.streaming.link_graph import (
+        link_graph_epoch,
+    )
+
+    link_graph_epoch(
+        spark, spark.createDataFrame([], "src string, dst string"), 0,
+        f"{d}/store", **kw,
+    )
+
+
+#: StoreMarker store module → (its noun, an epoch call that runs its
+#: handshake on an empty batch, whether it has a bucket-count field)
+MARKER_STORES = {
+    "segments": ("segment store", _open_segments, False),
+    "substrings": ("substring store", _open_substrings, False),
+    "near_dedup": ("signature store", _open_near_dedup, True),
+    "image_dedup": ("image-hash store", _open_image, False),
+    "link_graph": ("link-graph store", _open_link_graph, True),
+}
+
+
+@pytest.mark.parametrize("case", list(MARKER_STORES))
+def test_store_marker_refusals(spark, tmp_path, case):
+    """Each declared marker refuses, in its store's own words: a
+    reopened store whose marker differs in one pinned field (its
+    noun and mismatch hint); a non-empty store dir with no marker;
+    and, for the bucketed stores, ``n_buckets=0`` on a fresh path,
+    before anything is written."""
+    noun, open_store, bucketed = MARKER_STORES[case]
+    marker = importlib.import_module(
+        f"dbd_datawarehouse_scraper_spark.streaming.{case}"
+    )._MARKER
+    assert marker.noun == noun
+
+    d = str(tmp_path / "reopen")
+    open_store(spark, d)
+    path = f"{d}/store/format"
+    row = fs_read_json_row(spark, path, marker.schema)
+    fields = [f.split()[0] for f in marker.schema.split(",")]
+    row["format_version"] += 1
+    fs_write_json_row(spark, path, marker.schema, tuple(row[f] for f in fields))
+    with pytest.raises(ValueError) as err:
+        open_store(spark, d)
+    assert noun in str(err.value) and marker.mismatch_hint in str(err.value)
+
+    bare = tmp_path / "bare"
+    (bare / "store" / "data").mkdir(parents=True)
+    with pytest.raises(ValueError, match=f"{noun} at .* has no format marker"):
+        open_store(spark, str(bare))
+
+    if bucketed:
+        fresh = tmp_path / "fresh"
+        with pytest.raises(ValueError, match="n_buckets must be >= 1, got 0"):
+            open_store(spark, str(fresh), n_buckets=0)
+        assert not fresh.exists()

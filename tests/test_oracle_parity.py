@@ -1,12 +1,15 @@
 """Local replica of the driver's t2 correctness gate: run every
 ``queries()`` entry and its DuckDB ``oracle_sql()`` side by side at a
 small SF and compare row count, column names, and order-insensitive
-canonical values."""
+canonical values. Every query, oracle-backed or rows-only, must also
+leave no cache and no temp dir behind once its result is consumed."""
 
 from __future__ import annotations
 
 import datetime
 import math
+import os
+import tempfile
 from decimal import Decimal
 
 import duckdb
@@ -83,14 +86,42 @@ def _assert_caches_released(spark, baseline: int = 0):
     )
 
 
+@pytest.fixture
+def temp_dirs(monkeypatch):
+    """Every directory ``tempfile.mkdtemp`` creates while the test
+    runs (the package's scratch dirs all come from it)."""
+    made = []
+    real = tempfile.mkdtemp
+
+    def recording(*args, **kwargs):
+        made.append(real(*args, **kwargs))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording)
+    return made
+
+
+def _assert_temp_dirs_removed(name: str, made: list) -> None:
+    """Every temp dir the query made is gone once its result is
+    consumed and the caches are released, except the IVF index memo,
+    which lives for the session by design."""
+    left = [
+        p for p in made
+        if os.path.exists(p) and not os.path.basename(p).startswith("ivf_memo_")
+    ]
+    made.clear()
+    assert not left, f"{name}: temp dirs left behind: {left}"
+
+
 @pytest.mark.parametrize("name", [n for n, _ in pairs()])
-def test_query_matches_oracle(name, spark, sf_dir, con):
+def test_query_matches_oracle(name, spark, sf_dir, con, temp_dirs):
     q = QUERIES[name]
     baseline = _jvm_persisted(spark)
     sdf = q.builder(spark, sf_dir)
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
     _assert_caches_released(spark, baseline)
+    _assert_temp_dirs_removed(name, temp_dirs)
 
     res = con.execute(q.sql)
     d_cols = [d[0] for d in res.description]
@@ -105,13 +136,14 @@ def test_query_matches_oracle(name, spark, sf_dir, con):
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
 
 
-def test_rows_only_queries_run(spark, sf_dir):
+def test_rows_only_queries_run(spark, sf_dir, temp_dirs):
     baseline = _jvm_persisted(spark)
     for name, q in QUERIES.items():
         if q.sql is None:
             df = q.builder(spark, sf_dir)
             assert df.count() >= 0, name
             _assert_caches_released(spark, baseline)
+            _assert_temp_dirs_removed(name, temp_dirs)
 
 
 def test_pagerank_oracle_dtype_integral(con):
